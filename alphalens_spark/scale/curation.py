@@ -251,28 +251,6 @@ def _unitize(text_col: str, unit: str | int) -> tuple[Column, str]:
     raise ValueError(f"unit must be 'line', 'word', or a positive int, got {unit!r}")
 
 
-def _rebuild(ex: DataFrame, docs: DataFrame, id_col: str, sep: str) -> DataFrame:
-    """(id, pos, u) surviving units → (id, clean_text, n_units, n_kept)."""
-    rebuilt = ex.groupBy(id_col).agg(
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "u"))), lambda s: s["u"]
-            ),
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    return (
-        docs.select(id_col)
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        )
-    )
-
-
 def dedupe_units_within_doc(
     docs: DataFrame,
     unit: str | int = "line",

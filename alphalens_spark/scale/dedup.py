@@ -305,6 +305,8 @@ def minhash_lsh_duplicates(
       output-identical (oracle-verified), so the switch never changes
       results.
     """
+    if shuffle_payload not in ("auto", "signatures", "ids"):
+        raise ValueError(f"unknown shuffle_payload {shuffle_payload!r}")
     rows_per_band = num_hashes // bands
     members = None
     if collapse_exact:
@@ -341,8 +343,6 @@ def minhash_lsh_duplicates(
         shuffle_payload = (
             "ids" if est_payload > ids_payload_min_bytes else "signatures"
         )
-    if shuffle_payload not in ("signatures", "ids"):
-        raise ValueError(f"unknown shuffle_payload {shuffle_payload!r}")
     if collapse_exact:
         members = sigs.select(
             F.col(id_col).alias("_rep"), F.explode("_ids").alias("_m_id")

@@ -401,22 +401,13 @@ def run_suite(
     # every fd-derived metric recomputes ingestion — review-confirmed)
     fd.unpersist()
     panel.unpersist()
-    # entry_queries' per-session caches get the same treatment — ALL of
-    # them, not just _FD_CACHE: the raw-RDD sweep below would free their
-    # blocks while the Python dict entries survive, recreating the
-    # silent no-op re-persist hazard on the next pass for every bench
-    # entry that routes through a shared frame (co-purchase edges under
-    # the graph queries, the IC/turnover frames under full_tear_sheet,
-    # the stock rollup under important_stock)
-    from alphalens_spark import entry_queries as _eq
+    # entry_queries' shared frames get the same treatment: the raw-RDD
+    # sweep below would free their blocks while the registry entries
+    # survive, recreating the silent no-op re-persist hazard on the next
+    # pass for every bench entry that routes through a shared frame
+    from alphalens_spark.entry_queries import clear_session_caches
 
-    for _cache in (
-        _eq._FD_CACHE, _eq._COPURCHASE_CACHE, _eq._IC_CACHE,
-        _eq._TO_CACHE, _eq._STOCK_CACHE, _eq._FR_CACHE, _eq._MRBD_CACHE,
-    ):
-        for _df in _cache.values():
-            _df.unpersist()
-        _cache.clear()
+    clear_session_caches()
     # then free every remaining persistent RDD — px's localCheckpoint
     # blocks survive DataFrame.unpersist and would leak across passes
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():

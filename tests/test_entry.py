@@ -187,8 +187,13 @@ def test_all_queries_under_driver_default_session(spark):
     parquet's TIMESTAMP(NANOS) column reads as TIMESTAMP_NTZ instead of
     bigint). Round-1 lost two queries (`ic_by_group`, `event_sessionize`)
     to exactly this gap. Both confs are runtime SQL confs — flip them on
-    the shared session, run EVERY query end-to-end, restore.
+    the shared session, run EVERY query end-to-end, restore. The shared
+    frames are cleared on entry and exit, so factor_data ingestion runs
+    under these confs too instead of being reused from earlier tests.
     """
+    from alphalens_spark.entry_queries import clear_session_caches
+
+    clear_session_caches()
     confs = {
         "spark.sql.ansi.enabled": "true",
         "spark.sql.legacy.parquet.nanosAsLong": "false",
@@ -206,11 +211,37 @@ def test_all_queries_under_driver_default_session(spark):
             assert len(df.take(1)) == 1, name
         assert len(entry_mod.entry(spark).collect()) == 5
     finally:
+        clear_session_caches()
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_clear_session_caches_rebuilds_a_cached_frame(spark):
+    """After clear_session_caches(), _fd is a NEW frame that is really
+    cached. The clear must drop the CacheManager entry, not just the
+    blocks: a re-persist over a stale entry is a silent no-op that
+    recomputes ingestion on every read (the hazard bench.py guards
+    between passes)."""
+    from alphalens_spark import entry_queries as eq
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    fd = eq._fd(spark, SF_DIR)
+    assert eq._fd(spark, SF_DIR) is fd
+    eq.clear_session_caches()
+    assert not cm.lookupCachedData(fd._jdf).isDefined()
+    fd2 = eq._fd(spark, SF_DIR)
+    assert fd2 is not fd and fd2.is_cached
+    fd2.count()
+    plan = fd2._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan
+    buffers = (
+        cm.lookupCachedData(fd2._jdf).get()
+        .cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().containsKey(buffers.id())
 
 
 def test_certification_order():

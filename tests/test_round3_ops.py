@@ -128,6 +128,17 @@ def test_minhash_shuffle_payload_arms_identical(spark):
     assert auto_small == auto_ids
 
 
+def test_minhash_unknown_shuffle_payload_rejected_before_any_job(spark):
+    """A bad ``shuffle_payload`` must fail at function entry, before the
+    signature pass is persisted and counted (no Spark job runs)."""
+    docs = _docs(spark, ["a b c d e f", "a b c d e g"])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="shuffle_payload"):
+        dedup.minhash_lsh_duplicates(docs, shuffle_payload="payload")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_simhash_collapse_exact_output_identical(spark):
     words = [f"tok{i}" for i in range(64)]
     a = " ".join(words)

@@ -1,81 +1,38 @@
-"""Regenerate the _CERT_ROUND map in alphalens_spark/entry_queries.py
-from the CORRECTNESS_r*.json artifacts.
+"""Report the registry's driver-certification state.
 
-For each registered query, records the LATEST round with a fully-green
-driver row (rows_match + schema_match + hash_match). The registry's
-certification ordering (never-certified first, then
-oldest-certification-first) is derived from this map — run this after
-each round's CORRECTNESS file lands, review the diff, commit.
+For each registered query, the LATEST round with a fully-green driver
+row (rows_match + schema_match + hash_match) in CORRECTNESS_r*.json.
+The registry's certification ordering (never-certified first, then
+oldest-certification-first) is computed from the same files when
+alphalens_spark.entry_queries is imported, so this tool only reads.
 
-Usage:  python tools/cert_order.py [--check]
-  --check   exit 1 if the in-tree map is stale, without rewriting
+Usage:  python tools/cert_order.py
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ENTRY = os.path.join(REPO, "alphalens_spark", "entry_queries.py")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def latest_green_rounds() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def render(latest: dict[str, int], registered: list[str]) -> str:
-    lines: list[str] = []
-    cur = None
-    for rnd, name in sorted(
-        (latest[n], n) for n in registered if n in latest
-    ):
-        if rnd != cur:
-            lines.append(f"    # latest green: r{rnd:02d}")
-            cur = rnd
-        lines.append(f'    "{name}": {rnd},')
-    return "\n".join(lines)
+from alphalens_spark.entry_queries import (  # noqa: E402
+    QUERIES,
+    _latest_green_rounds as latest_green_rounds,
+)
 
 
 def main() -> None:
-    sys.path.insert(0, REPO)
-    from alphalens_spark.entry_queries import QUERIES
-
     latest = latest_green_rounds()
-    body = render(latest, list(QUERIES))
-
-    src = open(ENTRY).read()
-    pat = re.compile(
-        r"(_CERT_ROUND: dict\[str, int\] = \{\n)(.*?)(\n\}\n)", re.S
-    )
-    m = pat.search(src)
-    if not m:
-        sys.exit("_CERT_ROUND block not found in entry_queries.py")
-    if m.group(2) == body:
-        print(f"up to date ({len(latest)} certified)")
-        return
-    if "--check" in sys.argv:
-        sys.exit("_CERT_ROUND is stale — run: python tools/cert_order.py")
-    open(ENTRY, "w").write(src[: m.start(2)] + body + src[m.end(2) :])
+    by_round: dict[int, int] = {}
+    for n in QUERIES:
+        if n in latest:
+            by_round[latest[n]] = by_round.get(latest[n], 0) + 1
+    for rnd in sorted(by_round):
+        print(f"latest green r{rnd:02d}: {by_round[rnd]} queries")
     never = [n for n in QUERIES if n not in latest]
     print(
-        f"rewrote _CERT_ROUND: {len(latest)} certified, "
+        f"{len(QUERIES) - len(never)} certified, "
         f"{len(never)} never-certified{': ' if never else ''}{never or ''}"
     )
 

@@ -22,9 +22,9 @@ remove_boilerplate), not replacing the window with a join.
 
 Usage: python tools/skew_probe.py [n_rows] [n_pairs]
 """
-import os, sys, time, json, urllib.request
+import os, sys, time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
 n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
@@ -45,8 +45,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("WARN")
-sc = spark.sparkContext
-APP_ID, UI = sc.applicationId, sc.uiWebUrl
 
 # 50% hot key, rest uniform over 100k cold keys — deterministic.
 # persist so the probe times the count-attach forms, not row generation
@@ -72,17 +70,6 @@ def window_form():
 def join_form():
     cnt = rows.groupBy("term").agg(F.count(F.lit(1)).alias("c")).where(F.col("c") >= 2)
     noop(rows.join(cnt, "term").select(F.sum("id").alias("s"), F.count(F.lit(1)).alias("n")))
-
-
-def max_task_ms():
-    url = f"{UI}/api/v1/applications/{APP_ID}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
-        stages = json.load(r)
-    mx = 0
-    for s in stages[:6]:  # most recent stages
-        for k in ("executorRunTime",):
-            pass
-    return None
 
 
 def baseline_form():
