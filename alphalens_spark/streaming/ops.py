@@ -1,16 +1,158 @@
 """Streaming operators over an event-time factor / event stream.
 
-Each function takes a *streaming* DataFrame (``spark.readStream...``) and
-returns the transformed streaming DataFrame; the caller picks the sink
-(``writeStream``). All are also valid on batch DataFrames — the logical
-plans are identical, which is how the tests validate semantics
-(Trigger.AvailableNow vs batch equality).
+Two kinds of operator live here.
+
+* **Stream transforms** (``stream_factor_stats``, ``stream_sessionize``,
+  ``stream_ohlc``, ...) take a *streaming* DataFrame
+  (``spark.readStream...``) and return the transformed streaming
+  DataFrame; the caller picks the sink (``writeStream``). They are also
+  valid on batch DataFrames — the logical plans are identical, which is
+  how the tests validate semantics (Trigger.AvailableNow vs batch
+  equality).
+* **Mergeable stores**: a parquet directory that summarizes everything
+  a stream has ever delivered. Each store family has
+    - a ``*_store_update(batch_df, store_path, ...)`` step, which writes
+      ``merge(store ∪ summary(batch))`` back to the store;
+    - a ``stream_*`` starter, which runs that step under ``foreachBatch``
+      and returns the started query (``stream_factor_data_maintenance``
+      and ``stream_dedup_minhash`` return the unstarted writer instead);
+    - for most families a ``merge_*_stores`` compaction, which writes
+      ``merge(∪ generations)``: the same merge rule, applied across N
+      independently-maintained stores;
+    - a readout (``*_store_estimate``, ``*_store_quantiles``, ...) or a
+      plain ``spark.read.parquet(store_path)``.
+
+  Every store is read by :func:`_read_store` and written by
+  :func:`_write_store`; each merge rule is one function shared by the
+  update and its compaction, so incremental == one-shot holds by
+  construction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The persisted store at ``path``, or None before its first write —
+    the one place that decides "first batch". Existence is asked of the
+    path's Hadoop FileSystem, so a missing store costs no failed scan,
+    and a store that exists but does not fit the batch fails loudly
+    downstream instead of being mistaken for an empty one."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return spark.read.parquet(path) if fs.exists(p) else None
+
+
+def _write_store(df: DataFrame, path: str, one_file: bool = True) -> None:
+    """The self-path overwrite every store uses: materialize off the
+    source files first (storage.compact_partitions pattern), then
+    atomically replace. ``one_file=False`` keeps the key-partitioned
+    layout for stores that grow with a key universe (co-occurrence
+    pairs, A/B users, IVF-PQ ids): single-file would serialize every
+    merge through one task at scale."""
+    (df.coalesce(1) if one_file else df).localCheckpoint().write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _fold_store(
+    part: DataFrame,
+    path: str,
+    merge: Callable[[DataFrame], DataFrame],
+    one_file: bool = True,
+) -> None:
+    """Write ``merge(store ∪ part)`` to the store at ``path``; on the
+    first batch ``part`` is written as is."""
+    old = _read_store(part.sparkSession, path)
+    merged = part if old is None else merge(old.unionByName(part))
+    _write_store(merged, path, one_file)
+
+
+def _read_union(spark: SparkSession, store_paths: list[str]) -> DataFrame:
+    """Union the rows of N persisted store generations — the shared
+    first step of every merge_*_stores compaction."""
+    return reduce(DataFrame.unionByName, map(spark.read.parquet, store_paths))
+
+
+def _agg_by(
+    keys: list[str], fn: Callable, cols: list[str]
+) -> Callable[[DataFrame], DataFrame]:
+    """The merge rule of the aggregate stores: per key, ``fn`` over each
+    state column — ``F.sum`` for counters (CM, histogram, KM,
+    expectations, co-occurrence, DSIR), ``F.max`` for registers and flags
+    (HLL, A/B), ``F.bit_or`` for Bloom words."""
+    return lambda df: df.groupBy(*keys).agg(*[fn(c).alias(c) for c in cols])
+
+
+def _kmv_bottom_k(
+    hashes: DataFrame, group_cols: list[str], k: int
+) -> DataFrame:
+    """Distinct → per-group bottom-k by hash — the KMV merge rule,
+    shared by in-stream maintenance (kmv_store_update) and
+    cross-generation compaction (merge_kmv_stores) so a tie-break or
+    rule change lands in one place."""
+    w = Window.partitionBy(*group_cols).orderBy("_h")
+    return (
+        hashes.distinct()
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
+def _reservoir_top_k(
+    rows: DataFrame, k: int, group_cols: list[str], id_col: str
+) -> DataFrame:
+    """Dedup by id → per-group top-k by A-ES priority — the weighted
+    reservoir merge rule, shared by sample_store_update and
+    merge_reservoir_stores (one id = one item)."""
+    both = rows.dropDuplicates(group_cols + [id_col])
+    w = Window.partitionBy(*(group_cols or [F.lit(1)])).orderBy(
+        F.col("priority_key").desc(), F.col(id_col)
+    )
+    return (
+        both.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
+def _ivfpq_dedup(rows: DataFrame, id_col: str) -> DataFrame:
+    """The IVF-PQ merge rule: one id means one vector, which encodes to
+    one index row under the store's frozen quantizers, so any-wins dedup
+    by id is exact."""
+    return rows.dropDuplicates([id_col])
+
+
+# HLL registers merge by per-register max, Bloom words by bit OR; each
+# rule is shared by its store update and its merge_*_stores
+def _hll_merge(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    return _agg_by([*group_cols, "bucket"], F.max, ["max_rho"])
+
+
+_BLOOM_MERGE = _agg_by(["word"], F.bit_or, ["bits"])
+
+
+def _start(
+    stream_df: DataFrame,
+    checkpoint: str,
+    available_now: bool,
+    step: Callable[[DataFrame], None],
+):
+    """Run ``step`` on every micro-batch of ``stream_df`` and return the
+    started query — the shared tail of every ``stream_*`` store starter."""
+    w = stream_df.writeStream.foreachBatch(
+        lambda batch_df, _bid: step(batch_df)
+    ).option("checkpointLocation", checkpoint)
+    if available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
 
 
 def stream_factor_stats(
@@ -246,8 +388,6 @@ def stream_dedup_exact(
             ["_th"]
         ).drop("_th")
     # batch-equivalence path for tests: same "keep first arrival" rule
-    from pyspark.sql import Window
-
     w = Window.partitionBy("_th").orderBy(ts_col)
     return (
         hashed.withColumn("_rn", F.row_number().over(w))
@@ -351,8 +491,6 @@ def minhash_store_update(
     (storage.write_bucketed) so the probe co-locates, and the batch side
     (tiny) broadcasts.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.dedup import (
         connected_components,
         minhash_lsh_duplicates,
@@ -383,9 +521,10 @@ def minhash_store_update(
     new_bands = _band_rows(sigs, bands, num_hashes, id_col)
 
     # 2. probe accepted history
-    try:
-        store_bands = spark.read.parquet(f"{store_path}/bands")
-        store_sigs = spark.read.parquet(f"{store_path}/sigs")
+    store_bands = _read_store(spark, f"{store_path}/bands")
+    store_sigs = _read_store(spark, f"{store_path}/sigs")
+    sigs_out = sigs
+    if store_bands is not None and store_sigs is not None:
         cand = (
             new_bands.join(
                 store_bands.select(
@@ -417,8 +556,6 @@ def minhash_store_update(
         )
         survivors = survivors.join(F.broadcast(dup_vs_store), id_col, "left_anti")
         sigs_out = sigs.join(F.broadcast(dup_vs_store), id_col, "left_anti")
-    except AnalysisException:  # first batch: store not created yet
-        sigs_out = sigs
 
     # 3. admit survivors (persist sigs_out's plan result once: it feeds
     # three writes)
@@ -494,27 +631,14 @@ def cm_store_update(
     100 TB answer to "how many distinct user-agents did we ever see per
     count bucket" style frequency queries.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.profile import cm_sketch
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    batch_sk = cm_sketch(batch_df, item_col, depth, width)
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_sk)
-            .groupBy("row", "col")
-            .agg(F.sum("count").alias("count"))
-        )
-    except AnalysisException:  # first batch
-        merged = batch_sk
-    # self-path overwrite: materialize off the source files first
-    # (storage.compact_partitions pattern), then atomically replace
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        cm_sketch(batch_df, item_col, depth, width),
+        store_path,
+        _agg_by(["row", "col"], F.sum, ["count"]),
     )
 
 
@@ -531,23 +655,18 @@ def kmv_store_update(
     sketch is exactly the sketch of the full history. Store size is
     bounded at k rows per group. Read estimates off the store with
     :func:`kmv_store_estimate`."""
-    from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.dedup import md5_long
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     h = md5_long(F.col(value_col).cast("string"), 15)
-    new_h = batch_df.select(*group_cols, h.alias("_h")).distinct()
-    try:
-        old = spark.read.parquet(store_path)
-        merged = old.unionByName(new_h)
-    except AnalysisException:
-        merged = new_h
-    topk = _kmv_bottom_k(merged, group_cols, k)
-    topk.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(store_path)
+    # bottom-k is idempotent, so folding the batch's bottom-k equals
+    # bottom-k over store ∪ batch
+    _fold_store(
+        _kmv_bottom_k(batch_df.select(*group_cols, h.alias("_h")), group_cols, k),
+        store_path,
+        lambda df: _kmv_bottom_k(df, group_cols, k),
+    )
 
 
 def kmv_store_estimate(
@@ -589,25 +708,14 @@ def hll_store_update(
     generations with :func:`merge_hll_stores`. ``p`` is the store's
     contract — registers hashed under one precision cannot be re-binned.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.profile import hll_registers
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    batch_regs = hll_registers(batch_df, group_cols, value_col, p)
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_regs)
-            .groupBy(*group_cols, "bucket")
-            .agg(F.max("max_rho").alias("max_rho"))
-        )
-    except AnalysisException:  # first batch
-        merged = batch_regs
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        hll_registers(batch_df, group_cols, value_col, p),
+        store_path,
+        _hll_merge(group_cols),
     )
 
 
@@ -633,22 +741,13 @@ def merge_hll_stores(
     group_cols: list[str],
 ) -> None:
     """Compact N independently-maintained HLL store GENERATIONS into one
-    — the max-algebra sibling of :func:`merge_kmv_stores` (bottom-k),
-    :func:`merge_counter_stores` (addition), merge_reservoir_stores
-    (priority top-k), merge_ivfpq_stores (id-dedup append), and
-    merge_bloom_stores (bit OR): per-register max over the union of
+    — the element-wise-max compaction (the six are listed at
+    :func:`merge_counter_stores`): per-register max over the union of
     generations is exactly the register set of the concatenated
     histories, so the compacted store answers with the same numbers one
     big stream would have. Cost O(Σ store sizes) ≤ O(N·2^p·|groups|),
     independent of the data the stores summarize."""
-    out = (
-        _read_union(spark, store_paths)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("max_rho").alias("max_rho"))
-    )
-    out.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        out_path
-    )
+    _write_store(_hll_merge(group_cols)(_read_union(spark, store_paths)), out_path)
 
 
 def km_store_update(
@@ -668,11 +767,8 @@ def km_store_update(
     function of the counters, read with :func:`km_store_survival`.
     Compaction across generations is plain
     :func:`merge_counter_stores` on (n_events, n_censored)."""
-    from pyspark.sql.utils import AnalysisException
-
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     ev = F.col(event_col).cast("int")
     batch_c = (
         batch_df.where(F.col(duration_col).isNotNull() & ev.isNotNull())
@@ -682,20 +778,10 @@ def km_store_update(
             F.sum(F.lit(1) - ev).alias("n_censored"),
         )
     )
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_c)
-            .groupBy(*group_cols, "t")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("n_censored").alias("n_censored"),
-            )
-        )
-    except AnalysisException:  # first batch
-        merged = batch_c
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        batch_c,
+        store_path,
+        _agg_by([*group_cols, "t"], F.sum, ["n_events", "n_censored"]),
     )
 
 
@@ -723,15 +809,10 @@ def stream_km_maintenance(
     subjects via foreachBatch — bounded state, exact equality with the
     batch KM curve of everything ever seen (counter addition)."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         km_store_update(batch_df, store_path, group_cols, duration_col, event_col)
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def hist_store_update(
@@ -750,11 +831,8 @@ def hist_store_update(
     revisit history to re-bin), values clamp into the edge bins. State
     ≤ bins rows forever; incremental == one-shot by construction.
     """
-    from pyspark.sql.utils import AnalysisException
-
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     v = F.col(value_col).cast("double")
     width = (hi - lo) / float(bins)
     idx = F.least(
@@ -766,16 +844,7 @@ def hist_store_update(
         .groupBy(idx.alias("bin"))
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_h)
-            .groupBy("bin")
-            .agg(F.sum("count").alias("count"))
-        )
-    except AnalysisException:
-        merged = batch_h
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(store_path)
+    _fold_store(batch_h, store_path, _agg_by(["bin"], F.sum, ["count"]))
 
 
 def hist_store_quantiles(
@@ -792,8 +861,6 @@ def hist_store_quantiles(
     scale.profile.histogram_quantiles, on the store's fixed grid.
     Deterministic (a pure function of the counters). Output:
     (prob, est_quantile)."""
-    from pyspark.sql import Window
-
     width = (hi - lo) / float(bins)
     h = spark.read.parquet(store_path)
     n = h.agg(F.sum("count").alias("_n"))
@@ -827,15 +894,10 @@ def stream_histogram(
     foreachBatch over :func:`hist_store_update`; read quantiles any time
     with :func:`hist_store_quantiles` without stopping the stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         hist_store_update(batch_df, store_path, value_col, lo, hi, bins)
 
-    w = value_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(value_stream, checkpoint, available_now, _step)
 
 
 def hh_store_update(
@@ -863,8 +925,6 @@ def hh_store_update(
     running estimate is below the current (k·slack)-th candidate —
     growing ``slack`` buys the usual space-for-recall trade.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.profile import cm_estimate
 
     if batch_df.isEmpty():
@@ -876,19 +936,19 @@ def hh_store_update(
     new_items = batch_df.select(
         F.col(item_col).cast("string").alias("item")
     ).distinct()
-    try:
-        cand = spark.read.parquet(cand_path).select("item").unionByName(
-            new_items
-        ).distinct()
-    except AnalysisException:
-        cand = new_items
+    old = _read_store(spark, cand_path)
+    cand = (
+        new_items
+        if old is None
+        else old.select("item").unionByName(new_items).distinct()
+    )
     sketch = spark.read.parquet(cm_path)
     pruned = (
         cm_estimate(sketch, cand, width=width, depth=depth)
         .orderBy(F.col("est_count").desc(), F.col("item"))
         .limit(k * slack)
     )
-    pruned.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(cand_path)
+    _write_store(pruned, cand_path)
 
 
 def hh_store_topk(
@@ -929,43 +989,10 @@ def stream_heavy_hitters(
     :func:`hh_store_update`; read the answer any time with
     :func:`hh_store_topk` without stopping the stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         hh_store_update(batch_df, store_path, item_col, k, depth, width, slack)
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def _read_union(spark: SparkSession, store_paths: list[str]) -> DataFrame:
-    """Union the rows of N persisted store generations — the shared
-    first step of every merge_*_stores compaction."""
-    merged = None
-    for p in store_paths:
-        cur = spark.read.parquet(p)
-        merged = cur if merged is None else merged.unionByName(cur)
-    return merged
-
-
-def _kmv_bottom_k(
-    hashes: DataFrame, group_cols: list[str], k: int
-) -> DataFrame:
-    """Distinct → per-group bottom-k by hash — the KMV merge rule,
-    shared by in-stream maintenance (kmv_store_update) and
-    cross-generation compaction (merge_kmv_stores) so a tie-break or
-    rule change lands in one place."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*group_cols).orderBy("_h")
-    return (
-        hashes.distinct()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def merge_kmv_stores(
@@ -986,9 +1013,7 @@ def merge_kmv_stores(
     stream would have. Cost: O(Σ store sizes) = O(N·k·|groups|),
     independent of the data the stores summarize."""
     topk = _kmv_bottom_k(_read_union(spark, store_paths), group_cols, k)
-    topk.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        out_path
-    )
+    _write_store(topk, out_path)
 
 
 def merge_counter_stores(
@@ -999,16 +1024,17 @@ def merge_counter_stores(
     count_cols: list[str],
 ) -> None:
     """Compact N generations of any ADDITION-merge store (count-min
-    counters, fixed-grid histogram bins, expectations violation
-    counters, pair co-occurrence counts, DSIR bucket counts) into one:
-    counters over disjoint histories sum. The sibling of
-    :func:`merge_kmv_stores` for the union→bottom-k family; together
-    they cover every mergeable-store algebra this module ships."""
-    out = _read_union(spark, store_paths).groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in count_cols]
-    )
-    out.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        out_path
+    counters, fixed-grid histogram bins, Kaplan-Meier counters,
+    expectations violation counters, pair co-occurrence counts, DSIR
+    bucket counts) into one: counters over disjoint histories sum. One
+    of six compactions, one per merge algebra: union→bottom-k
+    (:func:`merge_kmv_stores`), addition (this one), priority top-k
+    (:func:`merge_reservoir_stores`), id-dedup
+    (:func:`merge_ivfpq_stores`), bit OR (:func:`merge_bloom_stores`)
+    and element-wise max (:func:`merge_hll_stores`)."""
+    _write_store(
+        _agg_by(key_cols, F.sum, count_cols)(_read_union(spark, store_paths)),
+        out_path,
     )
 
 
@@ -1031,25 +1057,14 @@ def bloom_store_update(
     ``n_bits``/``depth`` are the store's contract (a filter cannot be
     re-hashed from its bits) — keep them fixed across the store's life.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.joins import bloom_words
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    words = bloom_words(batch_df, key_cols, n_bits=n_bits, depth=depth)
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(words)
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
-    except AnalysisException:  # first batch
-        merged = words
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        bloom_words(batch_df, key_cols, n_bits=n_bits, depth=depth),
+        store_path,
+        _BLOOM_MERGE,
     )
 
 
@@ -1068,15 +1083,10 @@ def stream_bloom(
     stream (no false negatives; false-positive rate set by n_bits/depth
     vs the tracked cardinality)."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         bloom_store_update(batch_df, store_path, key_cols, n_bits, depth)
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def bloom_store_prefilter(
@@ -1115,12 +1125,7 @@ def merge_bloom_stores(
     """Compact N Bloom store generations into one: bit OR per word —
     the same closure :func:`bloom_store_update` relies on within a
     stream (generations must share n_bits/depth, the store contract)."""
-    out = _read_union(spark, store_paths).groupBy("word").agg(
-        F.bit_or("bits").alias("bits")
-    )
-    out.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        out_path
-    )
+    _write_store(_BLOOM_MERGE(_read_union(spark, store_paths)), out_path)
 
 
 def merge_reservoir_stores(
@@ -1138,21 +1143,10 @@ def merge_reservoir_stores(
     :func:`sample_store_update` relies on within a stream, applied
     across stores. Ids colliding across generations dedupe by id
     (same contract as the store update: one id = one item)."""
-    from pyspark.sql import Window
-
-    gcols = list(group_cols or [])
-    both = _read_union(spark, store_paths).dropDuplicates(gcols + [id_col])
-    w = Window.partitionBy(*(gcols or [F.lit(1)])).orderBy(
-        F.col("priority_key").desc(), F.col(id_col)
+    topk = _reservoir_top_k(
+        _read_union(spark, store_paths), k, list(group_cols or []), id_col
     )
-    topk = (
-        both.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-    topk.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        out_path
-    )
+    _write_store(topk, out_path)
 
 
 def merge_ivfpq_stores(
@@ -1170,8 +1164,11 @@ def merge_ivfpq_stores(
     any-wins dedup is exact). Completes the sharded-ANN deployment
     story: per-shard streams maintain per-shard indexes; this folds
     them into the one searchable store."""
-    out = _read_union(spark, store_paths).dropDuplicates([id_col])
-    out.localCheckpoint().write.mode("overwrite").parquet(out_path)
+    _write_store(
+        _ivfpq_dedup(_read_union(spark, store_paths), id_col),
+        out_path,
+        one_file=False,
+    )
 
 
 def stream_sketch_maintenance(
@@ -1197,18 +1194,13 @@ def stream_sketch_maintenance(
     it to a single batch — drain those with the default trigger +
     ``query.processAllAvailable()`` instead."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         batch_df = batch_df.persist()
         cm_store_update(batch_df, cm_path, item_col, depth, width)
         kmv_store_update(batch_df, kmv_path, [group_col], item_col, k)
         batch_df.unpersist()
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def stream_hll_maintenance(
@@ -1228,15 +1220,10 @@ def stream_hll_maintenance(
     group, ever" when per-group bottom-k hashes (the KMV store) is
     already too much state."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         hll_store_update(batch_df, store_path, [group_col], value_col, p)
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def stream_decayed_activity(
@@ -1334,30 +1321,16 @@ def expectations_store_update(
     full history (the CM-store discipline applied to quality gates: a
     stream answers "has anything EVER violated rule X" without
     reprocessing history). State is ≤ |rules| rows forever."""
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.profile import validate_expectations
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    batch_counts = validate_expectations(batch_df, rules).select(
-        "rule", "n_rows", "n_violations"
-    )
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_counts)
-            .groupBy("rule")
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_violations").alias("n_violations"),
-            )
-        )
-    except AnalysisException:
-        merged = batch_counts
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        validate_expectations(batch_df, rules).select(
+            "rule", "n_rows", "n_violations"
+        ),
+        store_path,
+        _agg_by(["rule"], F.sum, ["n_rows", "n_violations"]),
     )
 
 
@@ -1372,15 +1345,10 @@ def stream_validate_expectations(
     :func:`expectations_store_update`; read the verdict any time with
     ``spark.read.parquet(store_path)`` (pass = n_violations == 0)."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         expectations_store_update(batch_df, store_path, rules)
 
-    w = stream_df.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def scd2_store_update(
@@ -1409,17 +1377,16 @@ def scd2_store_update(
     snapshot BEFORE a closed interval would have to rewrite history,
     which is a batch rebuild (events.scd2_from_snapshots), not a stream.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.events import scd2_from_snapshots
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     keys = list(key_cols)
     snap = batch_df.select(*keys, *attr_cols, ts_col)
-    try:
-        store = spark.read.parquet(store_path)
+    store = _read_store(batch_df.sparkSession, store_path)
+    if store is None:
+        merged = scd2_from_snapshots(snap, keys, list(attr_cols), ts_col)
+    else:
         bkeys = snap.select(*keys).distinct()
         affected = store.join(bkeys, keys, "left_semi")
         untouched = store.join(bkeys, keys, "left_anti")
@@ -1433,11 +1400,7 @@ def scd2_store_update(
             reopened.unionByName(snap), keys, list(attr_cols), ts_col
         )
         merged = untouched.unionByName(closed).unionByName(recomputed)
-    except AnalysisException:  # first batch
-        merged = scd2_from_snapshots(snap, keys, list(attr_cols), ts_col)
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
-    )
+    _write_store(merged, store_path)
 
 
 def stream_scd2(
@@ -1455,15 +1418,10 @@ def stream_scd2(
     of every snapshot seen (tested), queryable without stopping the
     stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         scd2_store_update(batch_df, store_path, key_cols, attr_cols, ts_col)
 
-    w = snapshot_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(snapshot_stream, checkpoint, available_now, _step)
 
 
 def holt_store_update(
@@ -1488,11 +1446,8 @@ def holt_store_update(
     identical operation sequence the full fold does. Unseen keys start
     fresh (level = x₀, trend = 0). Untouched store keys pass through.
     """
-    from pyspark.sql.utils import AnalysisException
-
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     keys = list(key_cols)
     oma = 1.0 - alpha
     omb = 1.0 - beta
@@ -1501,9 +1456,8 @@ def holt_store_update(
         F.col(order_col).alias("_o"),
         F.col(value_col).cast("double").alias("_v"),
     ).where(F.col("_v").isNotNull())
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException:  # first batch: empty store
+    store = _read_store(batch_df.sparkSession, store_path)
+    if store is None:  # first batch: empty store
         store = (
             snap.select(*keys)
             .where(F.lit(False))
@@ -1561,9 +1515,8 @@ def holt_store_update(
         store.join(bkeys, keys, "left_semi")
         .join(folded.select(*keys), keys, "left_anti")
     )
-    merged = untouched.unionByName(replay_only).unionByName(folded)
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _write_store(
+        untouched.unionByName(replay_only).unionByName(folded), store_path
     )
 
 
@@ -1584,17 +1537,12 @@ def stream_holt(
     :func:`alphalens_spark.performance.holt_linear` over every row seen
     (tested bit-exact), queryable without stopping the stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         holt_store_update(
             batch_df, store_path, key_cols, value_col, order_col, alpha, beta
         )
 
-    w = value_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(value_stream, checkpoint, available_now, _step)
 
 
 def cusum_store_update(
@@ -1630,11 +1578,8 @@ def cusum_store_update(
     ended), while the batch op truncates the baseline window instead —
     the equality proof covers keys that complete their baseline.
     """
-    from pyspark.sql.utils import AnalysisException
-
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     keys = list(key_cols)
     reserved = {"last_o", "mu", "k", "h", "gp", "gn", "alarm", "pending"}
     clash = reserved & set(keys)
@@ -1650,9 +1595,8 @@ def cusum_store_update(
     ).where(F.col("_v").isNotNull())
     o_type = snap.schema["_o"].dataType.simpleString()
     pend_type = f"array<struct<o:{o_type},v:bigint>>"
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException:  # first batch: empty store
+    store = _read_store(batch_df.sparkSession, store_path)
+    if store is None:  # first batch: empty store
         store = (
             snap.select(*keys)
             .where(F.lit(False))
@@ -1776,9 +1720,8 @@ def cusum_store_update(
         store.join(bkeys, keys, "left_semi")
         .join(folded.select(*keys), keys, "left_anti")
     )
-    merged = untouched.unionByName(replay_only).unionByName(folded)
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _write_store(
+        untouched.unionByName(replay_only).unionByName(folded), store_path
     )
 
 
@@ -1800,7 +1743,7 @@ def stream_cusum(
     :func:`alphalens_spark.events.cusum_changepoints` over every row
     seen (tested exactly — the recursion is all-integer)."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         cusum_store_update(
             batch_df,
             store_path,
@@ -1812,12 +1755,7 @@ def stream_cusum(
             threshold_frac,
         )
 
-    w = value_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(value_stream, checkpoint, available_now, _step)
 
 
 def cdc_store_update(
@@ -1841,24 +1779,19 @@ def cdc_store_update(
     higher-seq change for the same key was already applied would need a
     base + full-log rebuild, which is the batch operator's job).
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.cdc import apply_cdc, latest_changes
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     keys = list(key_cols)
-    payload = [c for c in batch_df.columns if c not in (*keys, op_col, seq_col)]
-    try:
-        store = spark.read.parquet(store_path)
-        merged = apply_cdc(store, batch_df, keys, op_col=op_col, seq_col=seq_col)
-    except AnalysisException:  # first batch: empty base
+    store = _read_store(batch_df.sparkSession, store_path)
+    if store is None:  # first batch: empty base
+        payload = [c for c in batch_df.columns if c not in (*keys, op_col, seq_col)]
         latest = latest_changes(batch_df, keys, seq_col)
         merged = latest.where(F.col(op_col) != "D").select(*keys, *payload)
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
-    )
+    else:
+        merged = apply_cdc(store, batch_df, keys, op_col=op_col, seq_col=seq_col)
+    _write_store(merged, store_path)
 
 
 def stream_apply_cdc(
@@ -1874,15 +1807,10 @@ def stream_apply_cdc(
     foreachBatch over :func:`cdc_store_update`; the store is queryable
     with ``spark.read.parquet(store_path)`` without stopping the stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         cdc_store_update(batch_df, store_path, key_cols, op_col, seq_col)
 
-    w = changes_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(changes_stream, checkpoint, available_now, _step)
 
 
 def cooccurrence_store_update(
@@ -1905,30 +1833,18 @@ def cooccurrence_store_update(
     Store size is bounded by the distinct-pair universe, not history
     length; merge cost is O(|batch pairs| + |store|) per batch.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.affinity import cooccurrence_pairs
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    batch_pairs = cooccurrence_pairs(
-        batch_df, basket_col, item_col, max_basket=max_basket
+    # the pair universe grows with the item catalog: keep the
+    # key-partitioned layout
+    _fold_store(
+        cooccurrence_pairs(batch_df, basket_col, item_col, max_basket=max_basket),
+        store_path,
+        _agg_by(["item_a", "item_b"], F.sum, ["n_baskets"]),
+        one_file=False,
     )
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_pairs)
-            .groupBy("item_a", "item_b")
-            .agg(F.sum("n_baskets").alias("n_baskets"))
-        )
-    except AnalysisException:  # first batch
-        merged = batch_pairs
-    # NO coalesce(1) here, unlike the fixed-size sketch stores: the pair
-    # universe grows with the item catalog, so the store keeps its
-    # key-partitioned layout (single-file would serialize every merge
-    # through one task at scale)
-    merged.localCheckpoint().write.mode("overwrite").parquet(store_path)
 
 
 def stream_cooccurrence(
@@ -1945,17 +1861,12 @@ def stream_cooccurrence(
     feeds :func:`alphalens_spark.scale.affinity.association_rules`-style
     readouts with ``spark.read.parquet(store_path)``."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         cooccurrence_store_update(
             batch_df, store_path, basket_col, item_col, max_basket
         )
 
-    w = baskets_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(baskets_stream, checkpoint, available_now, _step)
 
 
 def stream_ohlc(
@@ -2022,33 +1933,17 @@ def sample_store_update(
     unique across the stream's lifetime (re-sent ids dedupe by id, so
     replays are harmless but true duplicates under one id collapse).
     """
-    from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.curation import weighted_priority_sample
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     gcols = list(group_cols or [])
-    batch_top = weighted_priority_sample(
-        batch_df, weight_col, k=k, group_cols=gcols, id_col=id_col
-    )
-    try:
-        old = spark.read.parquet(store_path)
-        both = old.unionByName(batch_top).dropDuplicates(gcols + [id_col])
-        w = Window.partitionBy(*(gcols or [F.lit(1)])).orderBy(
-            F.col("priority_key").desc(), F.col(id_col)
-        )
-        merged = (
-            both.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-    except AnalysisException:  # first batch
-        merged = batch_top
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        weighted_priority_sample(
+            batch_df, weight_col, k=k, group_cols=gcols, id_col=id_col
+        ),
+        store_path,
+        lambda df: _reservoir_top_k(df, k, gcols, id_col),
     )
 
 
@@ -2066,17 +1961,12 @@ def stream_weighted_sample(
     foreachBatch over :func:`sample_store_update`; read the current
     sample any time with ``spark.read.parquet(store_path)``."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         sample_store_update(
             batch_df, store_path, weight_col, k, group_cols, id_col
         )
 
-    w = docs_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(docs_stream, checkpoint, available_now, _step)
 
 
 def ivfpq_store_update(
@@ -2092,7 +1982,9 @@ def ivfpq_store_update(
     (scale.similarity.encode_pq — cell assignment + PQ codes are pure
     functions of the vector once training is done) and merge into the
     persisted compressed index, deduping by id so checkpoint replays
-    are idempotent (newest batch wins).
+    are idempotent. Contract: one id means one vector (the same contract
+    as :func:`merge_ivfpq_stores`); which of two rows sharing an id
+    survives is unspecified.
 
     This completes the ANN story for a live corpus: train once
     (build_ivfpq), then stream adds at encode cost — the standard
@@ -2101,20 +1993,16 @@ def ivfpq_store_update(
     Store stays (id, cell, codes) — ~32x compressed; searches read it
     with ivfpq_topk(index=...).
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.similarity import encode_pq
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    enc = encode_pq(batch_df, centroids, codebooks, id_col, vec_col)
-    try:
-        old = spark.read.parquet(store_path)
-        merged = enc.unionByName(old).dropDuplicates([id_col])
-    except AnalysisException:  # first batch
-        merged = enc
-    merged.localCheckpoint().write.mode("overwrite").parquet(store_path)
+    _fold_store(
+        encode_pq(batch_df, centroids, codebooks, id_col, vec_col),
+        store_path,
+        lambda df: _ivfpq_dedup(df, id_col),
+        one_file=False,
+    )
 
 
 def stream_index_maintenance(
@@ -2132,17 +2020,12 @@ def stream_index_maintenance(
     live index with ``spark.read.parquet(store_path)`` →
     ``ivfpq_topk(index=...)`` without stopping the stream."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         ivfpq_store_update(
             batch_df, store_path, centroids, codebooks, id_col, vec_col
         )
 
-    w = emb_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(emb_stream, checkpoint, available_now, _step)
 
 
 def ab_store_update(
@@ -2165,32 +2048,19 @@ def ab_store_update(
     ``assignment`` is the same deterministic Column contract as
     :func:`alphalens_spark.events.ab_test_ztest`.
     """
-    from pyspark.sql.utils import AnalysisException
-
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    flags = (
-        batch_df.where(F.col(type_col).isin([success_type, exposure_type]))
-        .select(
-            F.col(user_col).alias("user"),
-            assignment.alias("variant"),
-            (F.col(type_col) == exposure_type).cast("int").alias("exposed"),
-            (F.col(type_col) == success_type).cast("int").alias("conv"),
-        )
-        .groupBy("user", "variant")
-        .agg(F.max("exposed").alias("exposed"), F.max("conv").alias("conv"))
+    merge = _agg_by(["user", "variant"], F.max, ["exposed", "conv"])
+    events = batch_df.where(
+        F.col(type_col).isin([success_type, exposure_type])
+    ).select(
+        F.col(user_col).alias("user"),
+        assignment.alias("variant"),
+        (F.col(type_col) == exposure_type).cast("int").alias("exposed"),
+        (F.col(type_col) == success_type).cast("int").alias("conv"),
     )
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(flags)
-            .groupBy("user", "variant")
-            .agg(F.max("exposed").alias("exposed"), F.max("conv").alias("conv"))
-        )
-    except AnalysisException:  # first batch
-        merged = flags
-    merged.localCheckpoint().write.mode("overwrite").parquet(store_path)
+    # per-event flags fold into per-user flags by the store's own rule
+    _fold_store(merge(events), store_path, merge, one_file=False)
 
 
 def ab_store_ztest(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2243,18 +2113,13 @@ def stream_ab(
     event stream via foreachBatch over :func:`ab_store_update`; read the
     z-test any time with :func:`ab_store_ztest`."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         ab_store_update(
             batch_df, store_path, assignment, success_type, exposure_type,
             user_col, type_col,
         )
 
-    w = events_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(events_stream, checkpoint, available_now, _step)
 
 
 def dsir_store_update(
@@ -2277,27 +2142,16 @@ def dsir_store_update(
     domain) artifact stays frozen; score any slice against the live
     store with :func:`dsir_store_weights`.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from alphalens_spark.scale.curation import dsir_bucket_counts
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    batch_counts = dsir_bucket_counts(
-        batch_df, n_buckets, text_col, id_col
-    ).select("_b", F.col("_ct").alias("n"))
-    try:
-        old = spark.read.parquet(store_path)
-        merged = (
-            old.unionByName(batch_counts)
-            .groupBy("_b")
-            .agg(F.sum("n").alias("n"))
-        )
-    except AnalysisException:  # first batch
-        merged = batch_counts
-    merged.coalesce(1).localCheckpoint().write.mode("overwrite").parquet(
-        store_path
+    _fold_store(
+        dsir_bucket_counts(batch_df, n_buckets, text_col, id_col).select(
+            "_b", F.col("_ct").alias("n")
+        ),
+        store_path,
+        _agg_by(["_b"], F.sum, ["n"]),
     )
 
 
@@ -2347,15 +2201,10 @@ def stream_dsir(
     via foreachBatch over :func:`dsir_store_update`; score any slice
     against the live store with :func:`dsir_store_weights`."""
 
-    def _step(batch_df: DataFrame, _bid: int) -> None:
+    def _step(batch_df: DataFrame) -> None:
         dsir_store_update(batch_df, store_path, n_buckets, text_col, id_col)
 
-    w = docs_stream.writeStream.foreachBatch(_step).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(docs_stream, checkpoint, available_now, _step)
 
 
 def stream_user_stats_tws(

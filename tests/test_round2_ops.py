@@ -342,6 +342,29 @@ def test_counter_store_generation_merge_equals_oneshot(spark, tmp_path):
     assert got == want  # counters over disjoint histories sum exactly
 
 
+def test_store_schema_mismatch_raises_and_keeps_history(spark, tmp_path):
+    """A store whose schema does not fit the batch must fail the update,
+    not be mistaken for a first batch and overwritten with the batch."""
+    from pyspark.errors import AnalysisException
+
+    from alphalens_spark.streaming.ops import (
+        _read_store,
+        cm_store_update,
+        hist_store_update,
+    )
+
+    assert _read_store(spark, str(tmp_path / "missing")) is None
+    store = str(tmp_path / "hist")
+    values = spark.createDataFrame([Row(v=float(i)) for i in range(100)])
+    hist_store_update(values, store, "v", 0.0, 100.0, bins=10)
+    items = spark.createDataFrame([Row(item=f"i{n}") for n in range(10)])
+    with pytest.raises(AnalysisException):
+        cm_store_update(items, store, width=128)
+    kept = spark.read.parquet(store)
+    assert kept.columns == ["bin", "count"]
+    assert kept.agg(F.sum("count")).first()[0] == 100
+
+
 def test_bloom_store_incremental_equals_oneshot(spark, tmp_path):
     """Bit-OR store algebra: the maintained filter of the full history
     is BIT-EXACTLY the one-shot filter, regardless of batching."""

@@ -7,7 +7,11 @@ import tempfile
 from pyspark.sql import functions as F
 
 from alphalens_spark.scale import multimodal
-from alphalens_spark.streaming import stream_event_counts, stream_factor_stats
+from alphalens_spark.streaming import (
+    stream_event_counts,
+    stream_factor_stats,
+    stream_running_quantile_counts,
+)
 
 D = lambda i: dt.datetime(2020, 1, 1) + dt.timedelta(days=i)
 
@@ -37,6 +41,34 @@ def test_stream_factor_stats_matches_batch(spark):
     d0 = got[D(0)]
     assert d0["n"] == 4 and d0["mean_factor"] == 1.5
     assert d0["min_factor"] == 0.0 and d0["max_factor"] == 3.0
+
+
+def test_stream_running_quantile_counts_matches_batch(spark):
+    rows = [(D(d), a, q) for d in range(3)
+            for a, q in zip("ABCDEF", [1, 1, 2, 2, 2, 3]) if (d + ord(a)) % 4]
+    batch = spark.createDataFrame(
+        rows, "date timestamp, asset string, factor_quantile int"
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        src = f"{tmp}/src"
+        batch.write.parquet(src)
+        stream = spark.readStream.schema(batch.schema).parquet(src)
+        out_q = (
+            stream_running_quantile_counts(stream)
+            .writeStream.format("memory")
+            .queryName("rqcounts")
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        out_q.awaitTermination(120)
+        got = sorted(tuple(r) for r in spark.sql("SELECT * FROM rqcounts").collect())
+    want = sorted(tuple(r) for r in stream_running_quantile_counts(batch).collect())
+    assert got == want
+    exact = {}
+    for d, _, q in rows:
+        exact[(d, q)] = exact.get((d, q), 0) + 1
+    assert {(r[0], r[1]): r[2] for r in got} == exact
 
 
 def test_stream_event_counts(spark):
