@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from alphalens_spark import datasets, performance as perf
 from alphalens_spark.datasets import ORACLE_PANEL_SQL
+from alphalens_spark.session import checkpoint
 
 PERIOD_COLS = ["1D", "5D"]
 ALIAS = {"1D": "1p", "5D": "5p"}
@@ -78,7 +79,7 @@ def _session_frame(
     name: str, spark: SparkSession, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
     """``build()`` persisted on first use, then reused for this session and
-    SF. persist, NOT localCheckpoint: a checkpoint would plan derived
+    SF. persist, NOT checkpoint: a checkpoint would plan derived
     queries faster (flat LogicalRDD), but it would collapse every
     shared-frame-derived row in the PLANS.md audit to a bare checkpoint
     scan; the driver-contract queries keep the full lineage visible for
@@ -5141,7 +5142,7 @@ def q_wordpiece_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     top = (
         w.orderBy(F.col("freq").desc(), F.col("word").asc())
@@ -8030,7 +8031,7 @@ def q_transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Journey centrality: weighted PageRank (graph.pagerank, 10 power
     iterations, dangling-mass redistribution) over the session-bounded
     event-type transition graph (events.transition_edges, 30-min gap).
-    Iterations are localCheckpointed node-key joins; the oracle replays
+    Iterations are checkpointed node-key joins; the oracle replays
     the identical fixed-point as an unrolled MATERIALIZED-CTE chain."""
     from alphalens_spark import graph
     from alphalens_spark.events import transition_edges
@@ -8061,7 +8062,7 @@ def q_transition_pagerank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-graph driver-solve guard DISABLED (small_graph_edges=0) so
     the driver row certifies the DISTRIBUTED power-iteration loop —
     n_iter rounds of node-keyed join + groupBy with eager
-    localCheckpoints — not the bounded-state fast path. Both paths are
+    checkpoints — not the bounded-state fast path. Both paths are
     equality-pinned in pytest; this row proves it under the driver's
     oracle hash too (the oracle is the identical unrolled CTE chain)."""
     from alphalens_spark import graph
@@ -8565,7 +8566,7 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohesive-subgraph mining: the 3-core of the co-purchase graph
     (graph.k_core — peel nodes of degree < k to the unique fixpoint;
     each round is one degree groupBy + two node-key semi-joins,
-    localCheckpointed). The oracle replays the identical monotone
+    checkpointed). The oracle replays the identical monotone
     peeling as 20 unrolled MATERIALIZED-CTE rounds (converges in 11 at
     sf0.01; extra rounds are no-ops)."""
     from alphalens_spark.graph import k_core
@@ -8715,7 +8716,7 @@ def q_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     label propagation (graph.label_propagation — Raghavan et al. 2007
     with the deterministic smallest-label tiebreak; per round one
     neighbor⋈labels node-key join + two linear groupBys, labels
-    localCheckpointed). The oracle replays the identical 4 rounds as
+    checkpointed). The oracle replays the identical 4 rounds as
     unrolled MATERIALIZED CTEs (graph.label_propagation_sql)."""
     from alphalens_spark.graph import label_propagation
 
@@ -11467,7 +11468,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     et al. 2016): 6 merge rounds over the word-frequency table — the
     only corpus-sized stage is the initial token count; each round is a
     vocabulary-sized pair groupBy, a 1-row argmax, and an array-HOF
-    greedy merge, localCheckpointed. Deterministic tie-break
+    greedy merge, checkpointed. Deterministic tie-break
     (count DESC, pair ASC); the oracle replays the identical fold as
     unrolled list-lambda CTEs (scale.text.bpe_sql)."""
     from alphalens_spark.scale.text import bpe_train
@@ -11490,7 +11491,7 @@ def q_bpe_merges_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver fast path DISABLED (small_vocab=0) so the driver row
     certifies the DISTRIBUTED merge loop — per round a vocabulary-sized
     pair groupBy, 1-row argmax broadcast, and an array-HOF greedy merge
-    with eager localCheckpoints — not the collected-dict solve. Both
+    with eager checkpoints — not the collected-dict solve. Both
     paths are pinned to the pure-Python reference in pytest; the oracle
     is the identical unrolled list-lambda CTE chain."""
     from alphalens_spark.scale.text import bpe_train

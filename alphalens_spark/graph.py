@@ -10,18 +10,31 @@ cluster representatives by centrality.
 Scale posture: on a real graph the state never leaves the cluster —
 each PageRank iteration is one edges⋈ranks equi-join on ``src`` plus
 one groupBy on ``dst`` (both linear shuffles partitioned by node key),
-dangling mass rides along as a 1-row broadcast, and periodic eager
-``localCheckpoint`` keeps lineage bounded (the connected-components
-pattern). When the REDUCED edge list is bounded (guarded), the solve
-runs driver-local instead — per-iteration job latency would otherwise
-dwarf the arithmetic a thousandfold; same precedent as pca_fit's
-driver eigh.
+dangling mass rides along as a 1-row broadcast, and a periodic
+:func:`~alphalens_spark.session.checkpoint` keeps lineage bounded (the
+connected-components pattern). When the REDUCED edge list is bounded
+(guarded), the solve runs driver-local instead — per-iteration job
+latency would otherwise dwarf the arithmetic a thousandfold; same
+precedent as pca_fit's driver eigh.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from alphalens_spark.session import checkpoint
+
+# Distributed PageRank cuts the rank lineage every third iteration, not
+# every one: each eager checkpoint is a scheduled job (fixed latency
+# that dominates on small graphs), while lineage only needs to stay
+# bounded — at most three join-agg layers between cuts.
+_PAGERANK_CHECKPOINT_EVERY = 3
+# HITS cuts h every iteration. Every second iteration was measured at
+# sf0.1 on purchase_hits (OPTIMIZATION_r09.md): min 1.98 s against
+# 2.05 s, but it lost 2 of 3 paired runs with 0.5 s of variance, so it
+# was rejected.
+_HITS_CHECKPOINT_EVERY = 1
 
 
 def pagerank(
@@ -31,7 +44,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    checkpoint_every: int = 3,
     small_graph_edges: int = 500_000,
     personalization: DataFrame | None = None,
 ) -> DataFrame:
@@ -64,7 +76,7 @@ def pagerank(
     # One shuffle has already reduced the graph to its distinct weighted
     # edge list; materialize it once — both paths (and the node-count
     # guard) read it.
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
 
     # Small-graph fast path: when the whole graph STATE is bounded (a
     # transition graph over event types is a handful of nodes), the
@@ -111,8 +123,8 @@ def pagerank(
     )
     # Iteration state lives partitioned by node; checkpoint keeps both
     # the lineage and the re-used frames (norm, nodes) from recomputing.
-    norm = norm.localCheckpoint(eager=True)
-    nodes = nodes.localCheckpoint(eager=True)
+    norm = checkpoint(norm)
+    nodes = checkpoint(nodes)
     # N is a bounded scalar (one 1-value job off the materialized node
     # set, the same contract cm_estimate documents); folding it into the
     # plan as a literal removes two broadcast exchanges PER ITERATION —
@@ -136,16 +148,14 @@ def pagerank(
             (F.coalesce(F.col("_w"), F.lit(0.0)) / F.lit(float(tot))).alias(
                 "_s"
             ),
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
         ranks = tele.select("node", F.col("_s").alias("pr"))
     else:
         ranks = nodes.select(
             "node", (F.lit(1.0) / F.lit(float(n_nodes))).alias("pr")
         )
     has_out = outw.select(F.col("src").alias("node")).distinct()
-    dangling_nodes = nodes.join(has_out, "node", "left_anti").localCheckpoint(
-        eager=True
-    )
+    dangling_nodes = checkpoint(nodes.join(has_out, "node", "left_anti"))
     # No dangling nodes (the common case for transition graphs, where
     # every type also appears as a source): D_t ≡ 0, so drop the
     # per-iteration mass aggregation + broadcast entirely. The count is
@@ -180,17 +190,13 @@ def pagerank(
                 + dang_mass / F.lit(float(n_nodes))
             )
         ranks = nxt.select("node", pr_expr.alias("pr"))
-        # checkpoint every few iterations, not every one: each eager
-        # checkpoint is a scheduled job (fixed latency that dominates on
-        # small graphs), while lineage only needs to stay bounded —
-        # depth ≤ checkpoint_every join-agg layers between cuts. The
-        # FINAL iteration is deliberately NOT checkpointed: same total
-        # work (the consumer's action executes it instead of the
+        # The FINAL iteration is deliberately NOT checkpointed: same
+        # total work (the consumer's action executes it instead of the
         # constructor), and the returned frame keeps a real plan — the
         # last join/agg layer stays visible to plan audits instead of
         # collapsing to a checkpoint scan.
-        if (it + 1) % checkpoint_every == 0 and it != n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        if (it + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 and it != n_iter - 1:
+            ranks = checkpoint(ranks)
     return ranks.select("node", F.col("pr").alias("pagerank"))
 
 
@@ -286,7 +292,7 @@ def triangle_count(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    und = und.localCheckpoint(eager=True)
+    und = checkpoint(und)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
@@ -305,7 +311,7 @@ def triangle_count(
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("hi"),
         F.when(fwd, F.col("_dv")).otherwise(F.col("_du")).alias("hi_deg"),
     )
-    oriented = oriented.localCheckpoint(eager=True)
+    oriented = checkpoint(oriented)
     # Wedges pivoted at `lo`: (lo→b, lo→c) with b before c in the SAME
     # (degree, node) total order the orientation used — a canonical
     # candidate per unordered pair, and the closing edge between b and c
@@ -383,7 +389,7 @@ def k_core(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     n_edges = e.count()
 
@@ -418,7 +424,7 @@ def k_core(
                 .select("u", "v")
             )
             rounds += 1
-        e2 = cur.localCheckpoint(eager=True)
+        e2 = checkpoint(cur)
         n2 = e2.count()
         if n2 == n_edges:
             # monotone peel: an unchanged count across the whole block
@@ -593,18 +599,26 @@ def _ppr_sql(
     )
 
 
-def _fits_broadcast(n_rows: int, n_fields: int, max_bytes: int) -> bool:
-    """Estimated-bytes broadcast budget for a fixed-width frame:
-    8 B per numeric field + 16 B of row overhead, against ``max_bytes``.
+def _fits_broadcast(
+    n_rows: int, fields: int | DataFrame, max_bytes: int
+) -> bool:
+    """Estimated-bytes broadcast budget: ``n_rows`` rows of the frame
+    ``fields``, each field priced at Catalyst's ``defaultSize`` for its
+    type (8 B for a long or double, 20 B for a string), plus 16 B of row
+    overhead, against ``max_bytes``. An int ``fields`` counts 8-byte
+    fields.
 
     Row-count thresholds ("broadcast below 2M nodes") silently scale
     with row WIDTH; a bytes budget is what the executor actually pays
     (VERDICT r08 item 10). The default 64 MiB budget puts the cutoff
-    for the 2-field label/score frames at 2,097,152 rows — the same
-    regime as the historic 2M-row threshold, so no plan changes on
-    current data.
+    for two 8-byte fields at 2,097,152 rows — the historic 2M-row
+    threshold. String node ids widen the row, so their cutoff is lower.
     """
-    return n_rows * (8 * n_fields + 16) <= max_bytes
+    if isinstance(fields, int):
+        row_bytes = 8 * fields
+    else:
+        row_bytes = fields._jdf.schema().defaultSize()
+    return n_rows * (row_bytes + 16) <= max_bytes
 
 
 def label_propagation(
@@ -613,7 +627,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    broadcast_labels: bool | None = None,
     broadcast_max_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
@@ -634,10 +647,9 @@ def label_propagation(
     parity).
 
     Scale shape (the HITS broadcast discipline, round-8): the static
-    2|E| neighbor list is hash-partitioned ONCE and checkpointed; when
-    the label frame fits the broadcast budget (``broadcast_labels``;
-    auto while the estimated (node, label) frame stays under
-    ``broadcast_max_bytes``) it is partitioned by the
+    2|E| neighbor list is hash-partitioned ONCE and persisted; when
+    the estimated (node, label) frame fits ``broadcast_max_bytes`` (see
+    :func:`_fits_broadcast`) it is partitioned by the
     GROUPING key ``node`` and each round is one ZERO-shuffle stage —
     in-memory edge scan + broadcast label lookup + two aggregations
     already clustered by their key (HashPartitioning(node) satisfies
@@ -645,9 +657,9 @@ def label_propagation(
     On graphs whose label vector outgrows the broadcast budget the
     neighbor list is partitioned by the JOIN key ``nbr`` instead and
     each round shuffle-joins only the |V|-sized label frame plus two
-    linear groupBys — never the edge list. Labels are eagerly
-    localCheckpointed every second round so lineage stays flat — the
-    pagerank/k_core iteration pattern.
+    linear groupBys — never the edge list. Labels are cut with
+    :func:`~alphalens_spark.session.checkpoint` every second round so
+    lineage stays flat — the pagerank/k_core iteration pattern.
     """
     canon = edges.select(
         F.least(F.col(src_col), F.col(dst_col)).alias("u"),
@@ -677,14 +689,13 @@ def label_propagation(
     # (dedup shuffle included) a second time (round-9 paired A/B:
     # q_copurchase_communities 1.42 -> 1.17 s at sf0.1)
     n_nodes = nodes.count()
-    if broadcast_labels is None:
-        # (node, label) — two 8-byte fields per row
-        broadcast_labels = _fits_broadcast(n_nodes, 2, broadcast_max_bytes)
+    lab = nodes.select("node", F.col("node").alias("label"))
+    broadcast_labels = _fits_broadcast(n_nodes, lab, broadcast_max_bytes)
     # hash-partition the (big, static) neighbor list ONCE and persist:
     # an InMemoryRelation PRESERVES outputPartitioning into every
-    # consumer plan, which localCheckpoint's LogicalRDD does not
-    # (verified on this Spark: repartition(k).localCheckpoint().groupBy(k)
-    # still exchanges; the cached form does not). Broadcast mode
+    # consumer plan, which a checkpoint's LogicalRDD does not (verified
+    # on this Spark: repartition(k), checkpointed, then groupBy(k) still
+    # exchanges; the cached form does not). Broadcast mode
     # partitions by the GROUPING key so both per-round aggregations run
     # exchange-free on top of the broadcast-hash label join; shuffle
     # mode partitions by the JOIN key so only the |V|-sized label frame
@@ -695,7 +706,6 @@ def label_propagation(
     nbrs.count()
     both.unpersist()
     bc = F.broadcast if broadcast_labels else (lambda df: df)
-    lab = nodes.select("node", F.col("node").alias("label"))
     # self-loop-only vertices: present in the input edge list but absent
     # from nbrs (self-loops are dropped before propagation); they keep
     # their own id as label, matching GraphFrames LPA's every-vertex
@@ -736,7 +746,7 @@ def label_propagation(
         # The final round stays un-checkpointed (pagerank rule): same
         # total work, and the returned frame keeps a real join/agg plan
         if it != n_iter - 1 and it % 2 == 1:
-            lab = lab.localCheckpoint(eager=True)
+            lab = checkpoint(lab)
     return lab.unionByName(
         isolated.select("node", F.col("node").alias("label"))
     )
@@ -826,7 +836,7 @@ def bfs_distances(
     """
     # ONE build exchange (the repartition; hash(v) ⊆ (u, v) satisfies the
     # distinct's clustering), then persist: the InMemoryRelation keeps
-    # the v-partitioning visible to every round (localCheckpoint loses
+    # the v-partitioning visible to every round (a checkpoint loses
     # it), so when AQE broadcasts the small frontier the expand join
     # preserves hash(v) and the layer distinct below runs exchange-free
     # — a zero-shuffle expansion round.
@@ -851,7 +861,7 @@ def bfs_distances(
         sources.select(F.col("node"), F.lit(0).cast("int").alias("dist"))
         .where(F.col("node").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     frontier = visited.select("node")
     d = 0
@@ -875,7 +885,7 @@ def bfs_distances(
         new = layers[0]
         for extra in layers[1:]:
             new = new.unionByName(extra)
-        new = new.localCheckpoint(eager=True)
+        new = checkpoint(new)
         stats = new.agg(
             F.count(F.lit(1)).alias("n"), F.max("dist").alias("md")
         ).collect()[0]
@@ -979,13 +989,13 @@ def sssp_distances(
         )
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     dist = (
         sources.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
         .groupBy("node")
         .agg(F.min("dist").alias("dist"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     hops = 0
     while hops < max_hops:
@@ -1001,7 +1011,7 @@ def sssp_distances(
                 .groupBy("node")
                 .agg(F.min("dist").alias("dist"))
             )
-        new_dist = cur.localCheckpoint(eager=True)
+        new_dist = checkpoint(cur)
         improved = (
             new_dist.join(
                 dist.select(F.col("node"), F.col("dist").alias("_old")),
@@ -1053,9 +1063,7 @@ def hits(
     n_iter: int = 6,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 1,
     renorm_every: int = 8,
-    broadcast_scores: bool | None = None,
     broadcast_max_bytes: int = 64 << 20,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg JACM'99) over a DIRECTED
@@ -1083,21 +1091,21 @@ def hits(
     hub 0, no in-edges authority 0.
 
     Scale shape (the pagerank discipline, round-8 hardened): the edge
-    list is materialized TWICE, hash-partitioned by src and by dst
-    (localCheckpoint preserves outputPartitioning — the LPA lesson), so
-    the static 2|E| rows are shuffled exactly twice up front and never
-    again; every half-step then joins the |V|-sized score frame and
-    aggregates on the endpoint its edge copy is already partitioned by.
-    When the score frame is small enough to broadcast
-    (``broadcast_scores``; auto while the estimated (node, score) frame
-    stays under ``broadcast_max_bytes`` — the matrix-vector-product
-    regime), each half-step is a single
+    list is persisted TWICE, hash-partitioned by src and by dst (a
+    persisted frame keeps its outputPartitioning, a checkpointed one
+    does not — the LPA lesson), so the static 2|E| rows are shuffled
+    exactly twice up front and never again; every half-step then joins
+    the |V|-sized score frame and aggregates on the endpoint its edge
+    copy is already partitioned by. When the estimated (node, score)
+    frame fits ``broadcast_max_bytes`` (see :func:`_fits_broadcast`;
+    the matrix-vector-product regime), each half-step is a single
     ZERO-shuffle stage: in-memory edge scan + broadcast hash lookup +
     partial-agg-free final aggregation. On graphs whose score vector
     outgrows the broadcast budget the score frame is shuffle-joined
-    instead (still no edge shuffle). Lineage is cut once per
-    ``checkpoint_every`` iterations (h only — the iteration's a is
-    re-derived lazily from the checkpointed h where needed), and the
+    instead (still no edge shuffle). Lineage is cut with
+    :func:`~alphalens_spark.session.checkpoint` after every iteration
+    (h only — the iteration's a is re-derived lazily from the
+    checkpointed h where needed), and the
     final iteration stays un-checkpointed so the returned frame keeps
     a real plan. Output: (node, hub, authority), one row per distinct
     endpoint.
@@ -1107,10 +1115,10 @@ def hits(
     # one exchange for distinct+src-partitioning (HashPartitioning(src)
     # satisfies the (src, dst) clustering dropDuplicates needs), one
     # more for the dst-partitioned copy of the in-memory rows
-    # persist (NOT localCheckpoint) the two static edge copies: an
+    # persist (NOT checkpoint) the two static edge copies: an
     # InMemoryRelation preserves outputPartitioning into every consumer
-    # plan, which localCheckpoint's LogicalRDD does not (verified on
-    # this Spark) — the zero-shuffle half-steps below depend on it
+    # plan, which a checkpoint's LogicalRDD does not (verified on this
+    # Spark) — the zero-shuffle half-steps below depend on it
     e_src = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -1130,9 +1138,8 @@ def hits(
         .distinct()
         .persist()
     )
-    if broadcast_scores is None:
-        # (node, h) — two 8-byte fields per row
-        broadcast_scores = _fits_broadcast(nodes.count(), 2, broadcast_max_bytes)
+    h = nodes.select("node", F.lit(1.0).alias("h"))
+    broadcast_scores = _fits_broadcast(nodes.count(), h, broadcast_max_bytes)
     bc = F.broadcast if broadcast_scores else (lambda df: df)
     # a-step joins scores on src and groups by dst; h-step the reverse.
     # Broadcast mode uses the copy partitioned by the GROUPING key so
@@ -1140,7 +1147,6 @@ def hits(
     # partitioned by the JOIN key so only the score frame moves.
     e_for_a = e_dst if broadcast_scores else e_src
     e_for_h = e_src if broadcast_scores else e_dst
-    h = nodes.select("node", F.lit(1.0).alias("h"))
     a = None
     for it in range(n_iter):
         a = (
@@ -1160,8 +1166,8 @@ def hits(
             h = h.crossJoin(F.broadcast(sh)).select(
                 "node", (F.col("h") / F.col("_s")).alias("h")
             )
-        if (it + 1) % checkpoint_every == 0 and it != n_iter - 1:
-            h = h.localCheckpoint(eager=True)
+        if (it + 1) % _HITS_CHECKPOINT_EVERY == 0 and it != n_iter - 1:
+            h = checkpoint(h)
     sh = h.agg(F.sum("h").alias("_sh"))  # 1 row
     sa = a.agg(F.sum("a").alias("_sa"))  # 1 row
     return (

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.calendar_ import DAY_IDX
+from alphalens_spark.session import checkpoint
 from alphalens_spark.utils import demean_forward_returns
 
 ANNUALIZATION_PERIODS = 252  # trading periods per year for a daily calendar
@@ -1082,7 +1083,7 @@ def rank_autocorr_profile(
             "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
         )
         .join(F.broadcast(didx), "date")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     prev = ranked.select(
         F.col("asset").alias("_a"),

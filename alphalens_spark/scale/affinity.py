@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 
 def _basket_arrays(
     df: DataFrame,
@@ -121,7 +123,7 @@ def association_rules(
     feeds all three derivations.
     """
     g = _basket_arrays(df, basket_col, item_col, max_basket)
-    g = g.localCheckpoint(eager=True)
+    g = checkpoint(g)
     pairs = (
         _basket_pairs(g)
         .groupBy("item_a", "item_b")
@@ -195,7 +197,7 @@ def item_similarity(
     marginal joins, 1-row total broadcast.
     """
     g = _basket_arrays(df, basket_col, item_col, max_basket)
-    g = g.localCheckpoint(eager=True)
+    g = checkpoint(g)
     pairs = (
         _basket_pairs(g)
         .groupBy("item_a", "item_b")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 # The eight Gopher "must contain >= 2" stop words (Rae et al. 2021, A1.1).
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
@@ -1071,7 +1073,7 @@ def dsir_importance_weights(
         # duplicates per consumer and the corpus SCANS AND HASHES TWICE
         # (plan audit showed 5 documents scans; at 100 TB that doubles
         # the dominant stage). Same reuse rule as minhash signatures.
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     cr = rawdb.groupBy("_b").agg(F.sum("_c").alias("_cr"))
     if target_ids is not None:
@@ -1231,7 +1233,7 @@ def epoch_shuffle(
         docs.select(F.col(id_col), key.alias("_k"))
         .repartitionByRange(F.col("_k").asc(), F.col(id_col).asc())
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     offsets = (
         keyed.groupBy("_pid")

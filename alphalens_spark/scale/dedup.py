@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 # deterministic MinHash parameters: h_i(x) = (a_i * x + b_i) mod P, the
 # classic universal-hash family. P = 2^31 − 1 (Mersenne) with inputs
 # reduced to 31 bits keeps every a·x + b product < 2^62 — exact in
@@ -442,9 +444,10 @@ def connected_components(
     labels (one equi-join + one groupBy-min); stop when a round changes
     nothing. Rounds needed = graph diameter — near-dup graphs are
     near-clique clusters with diameter 2-3, so this converges in a few
-    cheap rounds (each linear in |edges|). ``localCheckpoint`` cuts the
-    growing lineage each round (the iterative-algorithm discipline Spark
-    needs; without it round N replays rounds 1..N−1). For adversarial
+    cheap rounds (each linear in |edges|).
+    :func:`~alphalens_spark.session.checkpoint` cuts the growing lineage
+    each round (the iterative-algorithm discipline Spark needs; without
+    it round N replays rounds 1..N−1). For adversarial
     long-chain graphs at extreme scale, the alternating large-star/
     small-star algorithm (Kiveris et al., SOCC'14) halves rounds — not
     needed for dedup-shaped graphs.
@@ -467,7 +470,7 @@ def connected_components(
         edges.select(F.col("s").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     for _ in range(max_iter):
         prop = edges.join(
@@ -477,7 +480,7 @@ def connected_components(
             labels.unionByName(prop)
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         changed = (
             new.withColumnRenamed("comp", "comp_new")

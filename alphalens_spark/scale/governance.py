@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 __all__ = ["k_anonymity_sweep", "dp_noisy_counts", "fd_violations"]
 
 
@@ -51,7 +53,7 @@ def k_anonymity_sweep(
     classes = (
         df.groupBy(*qi_cols)
         .agg(F.count(F.lit(1)).alias("_sz"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     rows = []
     for k in k_thresholds:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 
 def normalize_record(col: str | Column) -> Column:
     """Canonical record-linkage normalization: lowercase, trim, collapse
@@ -176,7 +178,7 @@ def record_linkage_pairs(
 
     # --- distinct-text collapse path (default) ---
     names = base.groupBy("norm").agg(F.count(F.lit(1)).alias("_g"))
-    names = names.localCheckpoint(eager=True)
+    names = checkpoint(names)
     nb = names.select(
         "norm", "_g",
         F.explode(F.array_distinct(F.split("norm", " "))).alias("block_key"),

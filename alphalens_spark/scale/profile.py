@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 __all__ = [
     "profile_columns", "kmv_distinct", "histogram_quantiles", "cm_sketch",
     "cm_estimate", "winsorize", "heavy_hitters", "robust_zscore",
@@ -1045,7 +1047,7 @@ def ks_from_counts(pooled: DataFrame) -> DataFrame:
     keyed = (
         pooled.repartitionByRange(F.col("_v").asc())
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     offs = (
         keyed.groupBy("_pid")

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "in", "is"]
 
 
@@ -1111,7 +1113,7 @@ def bpe_train(
     (vocabulary-sized) — one pair-explode groupBy (map-side partials),
     a 1-row argmax collected to the driver (the bounded-scalar
     contract), and a pure array-HOF merge projection, with the state
-    localCheckpointed per round (iterative-algorithm discipline).
+    checkpointed per round (iterative-algorithm discipline).
     Matches a pure-Python reference implementation symbol-for-symbol
     (tested); replays in SQL via :func:`bpe_sql`.
 
@@ -1136,7 +1138,7 @@ def bpe_train(
                 _bpe_driver(vocab, n_merges),
                 "step int, a string, b string, merged string, pair_count long",
             )
-    words = words.localCheckpoint(eager=True)
+    words = checkpoint(words)
     out = []
     for step in range(1, n_merges + 1):
         pairs = (
@@ -1169,7 +1171,7 @@ def bpe_train(
         out.append((step, a, b, a + b, int(cnt)))
         words = words.select(
             _bpe_apply_merge(F.col("syms"), a, b).alias("syms"), "freq"
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
     return spark.createDataFrame(
         out, "step int, a string, b string, merged string, pair_count long"
     )
@@ -1385,7 +1387,7 @@ def ngram_language_id(
     prof = (
         train_g.groupBy("_l", "_g")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     totals = prof.groupBy("_l").agg(F.sum("_c").alias("_tl"))
     vocab = prof.select("_g").distinct().agg(
@@ -1731,7 +1733,7 @@ def unigram_lm_train(
     relation is |words|·len·max_piece_len rows; the DP is
     ``max_word_len`` rounds of position-keyed joins and the backtrace
     walks the same table backwards — vocabulary-sized work throughout,
-    localCheckpointed per round.
+    checkpointed per round.
 
     Output: (piece, usage, cost_micro) — the trained vocabulary, its
     hard-EM usage mass, and its final integer micro-nat cost.
@@ -1752,7 +1754,7 @@ def unigram_lm_train(
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # bounded-vocabulary fast path (the driver-BPE / small-graph-PageRank
     # precedent): the EM state is VOCABULARY-sized, and below the guard
@@ -1798,7 +1800,7 @@ def unigram_lm_train(
             F.col("s.l").alias("l"),
             F.expr("substring(word, s.p, s.l)").alias("piece"),
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # DP/backtrace rounds are bounded by the LONGEST WORD actually in
     # the corpus (1-row driver action, the cm_estimate scalar contract)
@@ -1815,7 +1817,7 @@ def unigram_lm_train(
         .select("piece")
     )
     vocab = top.unionByName(chars).distinct()
-    counts = vocab.join(weights, "piece").localCheckpoint(eager=True)
+    counts = checkpoint(vocab.join(weights, "piece"))
 
     def _costs(cnt: DataFrame) -> DataFrame:
         total = cnt.agg(F.sum("c").alias("_t"))
@@ -1837,7 +1839,7 @@ def unigram_lm_train(
                 "cost",
                 (F.col("start") + F.col("l") - 1).alias("end"),
             )
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         # Viterbi forward: acc holds (word, pos, dist, back_l) for every
         # settled position; round j settles pos == j
@@ -1877,7 +1879,7 @@ def unigram_lm_train(
                     F.col("s.nd").alias("dist"),
                     F.col("s.l").alias("back_l"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(checkpoint)
             )
             acc = acc.unionByName(best_j)
         # backtrace from pos == len(word), collecting the optimal pieces
@@ -1889,7 +1891,7 @@ def unigram_lm_train(
             step = (
                 seg.where(F.col("pos") > 0)
                 .join(acc, ["word", "pos"])
-                .localCheckpoint(eager=True)
+                .transform(checkpoint)
             )
             got = step.select(
                 "word",
@@ -1916,7 +1918,7 @@ def unigram_lm_train(
                 ).alias("c"),
             )
             .where(F.col("c") > 0)
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     final_cost = _costs(counts)
     return (
@@ -1953,7 +1955,7 @@ def rare_term_overlap_topk(
     n_shared_terms, score_e6, rnk ≤ k).
 
     NOTE: calling this runs two eager jobs at PLAN-CONSTRUCTION time —
-    the distinct (doc, term) table materializes (localCheckpoint; it is
+    the distinct (doc, term) table materializes (checkpoint; it is
     read by the df aggregate and both join sides) and ``docs`` is
     counted for the integer df cap — the documented
     budget_keep_condition/brute-force precedent for construction-time
@@ -1969,7 +1971,7 @@ def rare_term_overlap_topk(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(toks)).alias("t"),
     ).where(F.col("t") != "")
-    dterms = dterms.localCheckpoint(eager=True)  # read by df agg + both join sides
+    dterms = checkpoint(dterms)  # read by df agg + both join sides
     n_docs = docs.count()
     df_cap = n_docs * max_df_per_mille // 1000
     dfreq = (
@@ -2047,7 +2049,7 @@ def rake_keywords(
     ph = docs.select(
         F.col(group_col).alias("g"), F.explode(phrases).alias("phrase")
     )
-    ph = ph.localCheckpoint(eager=True)  # read by word stats + phrase table
+    ph = checkpoint(ph)  # read by word stats + phrase table
     pw = ph.select(
         "g",
         "phrase",

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "alphalens_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -63,3 +63,25 @@ def get_spark(app_name: str = "alphalens_spark", shuffle_partitions: int | None 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage — the one place the
+    library does.
+
+    When the session has a checkpoint dir (``spark.checkpoint.dir`` in
+    the Spark conf, or ``SparkContext.setCheckpointDir``) the rows are
+    written there (``df.checkpoint``), so a lost executor does not fail
+    a later read. Otherwise they stay in executor block storage
+    (``df.localCheckpoint``): faster, but a lost block fails every query
+    that still reads them. Both forms plan as ``Scan ExistingRDD`` and
+    neither keeps ``df``'s output partitioning — persist a frame whose
+    hash partitioning later stages rely on.
+
+    Always eager: a lazy reliable checkpoint of a frame that is then
+    overwritten onto its own source path would read the path after the
+    overwrite deleted it.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from alphalens_spark.session import checkpoint
+
 
 def write_bucketed(
     df: DataFrame,
@@ -105,14 +107,14 @@ def compact_partitions(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         for val, n_before, n_target in todo:
-            # localCheckpoint materializes the partition OFF the source
+            # checkpoint materializes the partition OFF the source
             # path before the overwrite — Spark (correctly) refuses to
             # overwrite a path an active plan still reads from
             part = (
                 spark.read.parquet(path)
                 .where(f"{partition_col} = '{val}'")
                 .coalesce(n_target)
-                .localCheckpoint()
+                .transform(checkpoint)
             )
             (
                 part.write.mode("overwrite")

@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 
 def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
     """The persisted store at ``path``, or None before its first write —
@@ -52,11 +54,11 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
 def _write_store(df: DataFrame, path: str, one_file: bool = True) -> None:
     """The self-path overwrite every store uses: materialize off the
     source files first (storage.compact_partitions pattern), then
-    atomically replace. ``one_file=False`` keeps the key-partitioned
+    overwrite. ``one_file=False`` keeps the key-partitioned
     layout for stores that grow with a key universe (co-occurrence
     pairs, A/B users, IVF-PQ ids): single-file would serialize every
     merge through one task at scale."""
-    (df.coalesce(1) if one_file else df).localCheckpoint().write.mode(
+    checkpoint(df.coalesce(1) if one_file else df).write.mode(
         "overwrite"
     ).parquet(path)
 

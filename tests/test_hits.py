@@ -90,10 +90,25 @@ def test_broadcast_budget_is_bytes_based(spark):
     assert _fits_broadcast(2_097_152, 2, 64 << 20)          # exactly at budget
     assert not _fits_broadcast(2_097_153, 2, 64 << 20)      # one row over
     assert not _fits_broadcast(2_000_000, 4, 64 << 20)      # wider rows, same count
+    # a frame is priced per field type (Catalyst defaultSize): long
+    # (node, label) rows match the 8-byte count, while string ids are
+    # 20 B each — 2M string-keyed rows pass the 8-byte estimate (64 MB)
+    # but really need 112 MB, so they must not broadcast
+    longs = spark.createDataFrame([], "node long, label long")
+    strs = spark.createDataFrame([], "node string, label string")
+    assert _fits_broadcast(2_097_152, longs, 64 << 20)
+    assert not _fits_broadcast(2_097_153, longs, 64 << 20)
+    assert _fits_broadcast(2_000_000, 2, 64 << 20)
+    assert not _fits_broadcast(2_000_000, strs, 64 << 20)
     # tiny budget forces the shuffle fallback; output must be identical
     df = spark.createDataFrame(EDGES, "src string, dst string")
     bc = sorted(map(tuple, label_propagation(df, n_iter=2).collect()))
     sh = sorted(map(tuple, label_propagation(
         df, n_iter=2, broadcast_max_bytes=1
+    ).collect()))
+    assert bc == sh
+    bc = sorted(map(tuple, hits(df, n_iter=3).collect()))
+    sh = sorted(map(tuple, hits(
+        df, n_iter=3, broadcast_max_bytes=1
     ).collect()))
     assert bc == sh
