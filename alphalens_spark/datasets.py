@@ -190,12 +190,7 @@ def factor_data(spark: SparkSession, sf_dir: str, max_loss: float | None = None)
     Lazy end-to-end (max_loss=None skips the reference's loss-accounting
     counts, which are driver actions).
     """
-    from alphalens_spark.utils import (
-        compute_forward_returns,
-        get_clean_factor_and_forward_returns,
-        period_label,
-        quantize_factor,
-    )
+    from alphalens_spark.utils import get_clean_factor_and_forward_returns
 
     panel = price_factor_panel(spark, sf_dir)
     if max_loss is not None:
@@ -212,7 +207,9 @@ def factor_data(spark: SparkSession, sf_dir: str, max_loss: float | None = None)
     return _factor_data_from_panel(panel)
 
 
-def _factor_data_from_panel(panel: DataFrame) -> DataFrame:
+def _factor_data_from_panel(
+    panel: DataFrame, periods=PERIODS, quantiles: int = 5
+) -> DataFrame:
     """Fused fast path over an already-built (date, asset, price, factor)
     panel: factor rides through the forward-return grid (carry_cols) —
     one window shuffle, no factor⋈returns join; identical output to the
@@ -223,10 +220,11 @@ def _factor_data_from_panel(panel: DataFrame) -> DataFrame:
         quantize_factor,
     )
 
-    period_cols = [period_label(k) for k in sorted(PERIODS)]
-    fwd = compute_forward_returns(panel, PERIODS, carry_cols=["factor"])
+    periods = tuple(sorted(periods))
+    period_cols = [period_label(k) for k in periods]
+    fwd = compute_forward_returns(panel, periods, carry_cols=["factor"])
     clean = fwd.na.drop(subset=[*period_cols, "factor"])
-    return quantize_factor(clean, quantiles=5, method="ntile").where(
+    return quantize_factor(clean, quantiles=quantiles, method="ntile").where(
         F.col("factor_quantile").isNotNull()
     )
 

@@ -20,7 +20,7 @@ precedent as pca_fit's driver eigh.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from alphalens_spark.session import checkpoint
@@ -74,9 +74,9 @@ def pagerank(
         w.cast("double").alias("w"),
     ).groupBy("src", "dst").agg(F.sum("w").alias("w"))
     # One shuffle has already reduced the graph to its distinct weighted
-    # edge list; materialize it once — both paths (and the node-count
-    # guard) read it.
-    e = checkpoint(e)
+    # edge list; materialize it once — both paths read it.
+    e_obs = Observation()
+    e = checkpoint(e.observe(e_obs, F.count(F.lit(1)).alias("n")))
 
     # Small-graph fast path: when the whole graph STATE is bounded (a
     # transition graph over event types is a handful of nodes), the
@@ -103,7 +103,7 @@ def pagerank(
             .agg(F.sum("_w").alias("_w"))
         )
 
-    if small_graph_edges and e.count() <= small_graph_edges:
+    if small_graph_edges and e_obs.get["n"] <= small_graph_edges:
         # seed set is bounded by the small-graph guard itself here
         seed_rows = (
             [(r["node"], r["_w"]) for r in seeds.collect()]
@@ -124,19 +124,18 @@ def pagerank(
     # Iteration state lives partitioned by node; checkpoint keeps both
     # the lineage and the re-used frames (norm, nodes) from recomputing.
     norm = checkpoint(norm)
-    nodes = checkpoint(nodes)
-    # N is a bounded scalar (one 1-value job off the materialized node
-    # set, the same contract cm_estimate documents); folding it into the
-    # plan as a literal removes two broadcast exchanges PER ITERATION —
-    # measured ~0.45 s/iteration of pure broadcast/scheduling overhead
-    # on a 25-edge graph.
-    n_nodes = nodes.count()
+    # Folding N into the plan as a literal removes two broadcast
+    # exchanges PER ITERATION — measured ~0.45 s/iteration of pure
+    # broadcast/scheduling overhead on a 25-edge graph.
+    n_obs = Observation()
+    nodes = checkpoint(nodes.observe(n_obs, F.count(F.lit(1)).alias("n")))
+    n_nodes = n_obs.get["n"]
 
     tele = None
     if seeds is not None:
         # restrict to graph nodes, normalize to a distribution, and pin
         # s(v) = 0 on every non-seed node; the restricted-seed total is a
-        # bounded scalar (1-row agg, the n_nodes contract)
+        # bounded scalar (1-row agg)
         in_graph = seeds.join(nodes, "node")
         tot = in_graph.agg(F.sum("_w").alias("t")).collect()[0]["t"]
         if not tot:
@@ -155,12 +154,15 @@ def pagerank(
             "node", (F.lit(1.0) / F.lit(float(n_nodes))).alias("pr")
         )
     has_out = outw.select(F.col("src").alias("node")).distinct()
-    dangling_nodes = checkpoint(nodes.join(has_out, "node", "left_anti"))
     # No dangling nodes (the common case for transition graphs, where
     # every type also appears as a source): D_t ≡ 0, so drop the
-    # per-iteration mass aggregation + broadcast entirely. The count is
-    # free — dangling_nodes is already materialized.
-    any_dangling = dangling_nodes.count() > 0
+    # per-iteration mass aggregation + broadcast entirely.
+    d_obs = Observation()
+    dangling_nodes = checkpoint(
+        nodes.join(has_out, "node", "left_anti")
+        .observe(d_obs, F.count(F.lit(1)).alias("n"))
+    )
+    any_dangling = d_obs.get["n"] > 0
 
     for it in range(n_iter):
         contrib = (
@@ -236,17 +238,11 @@ def _pagerank_driver(
         for _ in range(n_iter):
             dang = pr[~has_out].sum()
             pr = (1.0 - damping) * s + damping * (P.T @ pr + dang * s)
-        spark = e.sparkSession
-        out_schema = e.select(F.col("src").alias("node")).schema.add(
-            "pagerank", "double"
-        )
-        return spark.createDataFrame(
-            [(v, float(pr[idx[v]])) for v in node_list], schema=out_schema
-        )
-    pr = np.full(n_nodes, 1.0 / n_nodes)
-    for _ in range(n_iter):
-        dang = pr[~has_out].sum()
-        pr = (1.0 - damping) / n_nodes + damping * (P.T @ pr + dang / n_nodes)
+    else:
+        pr = np.full(n_nodes, 1.0 / n_nodes)
+        for _ in range(n_iter):
+            dang = pr[~has_out].sum()
+            pr = (1.0 - damping) / n_nodes + damping * (P.T @ pr + dang / n_nodes)
     spark = e.sparkSession
     out_schema = e.select(F.col("src").alias("node")).schema.add(
         "pagerank", "double"
@@ -373,11 +369,12 @@ def k_core(
 
     Scale shape: each round is one degree groupBy + two anti-joins
     keyed on node (all linear shuffles). TWO peel rounds run per eager
-    materialization with ONE edge-count fixpoint check per block
-    (round-8: per-round job-barrier latency, not data volume, dominates
-    this class at bench SF); peeling is monotone, so an unchanged edge
-    count after a block means BOTH rounds were no-ops and the block's
-    first degree frame is the fixpoint. Peeling removes ≥1 node per
+    materialization (round-8: per-round job-barrier latency, not data
+    volume, dominates this class at bench SF), and the block's edge
+    count is observed on that checkpoint job — the fixpoint check runs
+    no job of its own. Peeling is monotone, so an unchanged edge count
+    after a block means BOTH rounds were no-ops and the block's first
+    degree frame is the fixpoint. Peeling removes ≥1 node per
     non-final round, but in practice converges in a handful of rounds —
     ``max_rounds`` is a runaway guard, and hitting it raises rather
     than returning a non-core.
@@ -389,9 +386,10 @@ def k_core(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .transform(checkpoint)
     )
-    n_edges = e.count()
+    obs = Observation()
+    e = checkpoint(e.observe(obs, F.count(F.lit(1)).alias("n")))
+    n_edges = obs.get["n"]
 
     def _deg(frame: DataFrame) -> DataFrame:
         return (
@@ -424,8 +422,9 @@ def k_core(
                 .select("u", "v")
             )
             rounds += 1
-        e2 = checkpoint(cur)
-        n2 = e2.count()
+        obs = Observation()
+        e2 = checkpoint(cur.observe(obs, F.count(F.lit(1)).alias("n")))
+        n2 = obs.get["n"]
         if n2 == n_edges:
             # monotone peel: an unchanged count across the whole block
             # means its first round already removed nothing, so deg0
@@ -828,11 +827,11 @@ def bfs_distances(
     TWO expansion rounds run per eager materialization (two joins of
     lineage is well inside planner comfort; round-8 measured the
     per-round job barrier, not data volume, dominating this class at
-    bench SF — the LPA checkpoint-cadence lesson), and the emptiness /
-    deepest-layer check is ONE 1-row aggregate over the checkpointed
-    block, so a 2-round block costs 2 jobs where the 1-round form cost
-    4. Early stop when a block comes back empty or its deepest layer
-    produced no nodes.
+    bench SF — the LPA checkpoint-cadence lesson). The block's row
+    count and deepest layer are observed on its checkpoint job, so the
+    emptiness / deepest-layer check runs no job of its own. Early stop
+    when a block comes back empty or its deepest layer produced no
+    nodes.
     """
     # ONE build exchange (the repartition; hash(v) ⊆ (u, v) satisfies the
     # distinct's clustering), then persist: the InMemoryRelation keeps
@@ -885,10 +884,13 @@ def bfs_distances(
         new = layers[0]
         for extra in layers[1:]:
             new = new.unionByName(extra)
-        new = checkpoint(new)
-        stats = new.agg(
-            F.count(F.lit(1)).alias("n"), F.max("dist").alias("md")
-        ).collect()[0]
+        obs = Observation()
+        new = checkpoint(
+            new.observe(
+                obs, F.count(F.lit(1)).alias("n"), F.max("dist").alias("md")
+            )
+        )
+        stats = obs.get
         if stats["n"] == 0:
             break
         # visited is a flat union of already-checkpointed blocks, so
@@ -964,11 +966,12 @@ def sssp_distances(
 
     Scale shape: each round is ONE dist⋈edges node-key equi-join + one
     min groupBy (both linear, node-keyed shuffles). TWO relaxation
-    rounds run per eager materialization with ONE improved-set check
-    per block (round-8: job-barrier latency, not data volume, dominates
-    this class at bench SF; two joins + two aggs of lineage stay well
-    inside planner comfort); early stop when a block leaves every
-    distance unchanged (bounded count over the improved set).
+    rounds run per eager materialization (round-8: job-barrier latency,
+    not data volume, dominates this class at bench SF; two joins + two
+    aggs of lineage stay well inside planner comfort); early stop when
+    a block leaves every distance unchanged. Relaxation only adds nodes
+    and lowers (or sets NULL) distances, so "unchanged" is equal
+    (rows, non-NULL dists, Σ dist) observed on consecutive checkpoints.
 
     Output: (node, dist long) for every node reachable within
     ``max_hops``.
@@ -991,12 +994,19 @@ def sssp_distances(
         .agg(F.min("w").alias("w"))
         .transform(checkpoint)
     )
-    dist = (
+    block_stats = (
+        F.count(F.lit(1)).alias("n"),
+        F.count("dist").alias("nd"),
+        F.sum("dist").alias("sd"),
+    )
+    obs = Observation()
+    dist = checkpoint(
         sources.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
         .groupBy("node")
         .agg(F.min("dist").alias("dist"))
-        .transform(checkpoint)
+        .observe(obs, *block_stats)
     )
+    stats = obs.get
     hops = 0
     while hops < max_hops:
         step = min(2, max_hops - hops)
@@ -1011,20 +1021,11 @@ def sssp_distances(
                 .groupBy("node")
                 .agg(F.min("dist").alias("dist"))
             )
-        new_dist = checkpoint(cur)
-        improved = (
-            new_dist.join(
-                dist.select(F.col("node"), F.col("dist").alias("_old")),
-                "node",
-                "left",
-            )
-            .where(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .limit(1)
-            .count()
-        )
-        dist = new_dist
+        obs = Observation()
+        dist = checkpoint(cur.observe(obs, *block_stats))
         hops += step
-        if improved == 0:
+        prev, stats = stats, obs.get
+        if stats == prev:
             break
     return dist
 

@@ -79,23 +79,14 @@ def incremental_update(
     Returns {"since": last stored date key or None,
              "rows_written": int, "dates_written": int}.
     """
-    from alphalens_spark.utils import (
-        compute_forward_returns,
-        period_label,
-        quantize_factor,
-    )
+    from alphalens_spark.datasets import _factor_data_from_panel
 
     last = store_last_date(spark, store_path)
     src = panel
     if last is not None:
         src = panel.where(F.date_format("date", "yyyy-MM-dd") > F.lit(last))
 
-    period_cols = [period_label(k) for k in sorted(periods)]
-    fwd = compute_forward_returns(src, tuple(sorted(periods)), carry_cols=["factor"])
-    clean = fwd.na.drop(subset=[*period_cols, "factor"])
-    fd = quantize_factor(clean, quantiles=quantiles, method="ntile").where(
-        F.col("factor_quantile").isNotNull()
-    )
+    fd = _factor_data_from_panel(src, periods, quantiles)
     out = fd.withColumn(DATE_KEY, F.date_format("date", "yyyy-MM-dd")).persist()
     rows = out.count()
     dates = out.select(DATE_KEY).distinct().count()

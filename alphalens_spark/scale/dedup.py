@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.session import checkpoint
@@ -243,7 +243,6 @@ def minhash_lsh_duplicates(
     bands: int = 16,
     shingle_k: int = 3,
     threshold: float = 0.7,
-    broadcast_candidates: bool = True,
     shingle_hash: str = "xxhash64",
     collapse_exact: bool = True,
     shuffle_payload: str = "auto",
@@ -279,9 +278,8 @@ def minhash_lsh_duplicates(
     lists ride through the persisted signature frame (``extra_cols``),
     so the whole computation scans the corpus text exactly ONCE (the
     earlier form paid a second scan + window shuffle to rebuild the
-    membership map). ``broadcast_candidates`` is kept for API
-    compatibility; the joinless form has no candidate relation to
-    broadcast. Output: (id_a, id_b, est_jaccard), id_a < id_b, distinct.
+    membership map). Output: (id_a, id_b, est_jaccard), id_a < id_b,
+    distinct.
 
     ``shuffle_payload`` picks what the banding exchange carries
     (guide §2.3 "shuffle keys and metadata instead of payloads" / §8):
@@ -444,7 +442,8 @@ def connected_components(
     labels (one equi-join + one groupBy-min); stop when a round changes
     nothing. Rounds needed = graph diameter — near-dup graphs are
     near-clique clusters with diameter 2-3, so this converges in a few
-    cheap rounds (each linear in |edges|).
+    cheap rounds (each linear in |edges|); the change count is observed
+    on the round's checkpoint job, with no comparison join.
     :func:`~alphalens_spark.session.checkpoint` cuts the growing lineage
     each round (the iterative-algorithm discipline Spark needs; without
     it round N replays rounds 1..N−1). For adversarial
@@ -473,23 +472,24 @@ def connected_components(
         .transform(checkpoint)
     )
     for _ in range(max_iter):
-        prop = edges.join(
-            labels, edges["s"] == labels["node"]
-        ).select(F.col("d").alias("node"), F.col("comp"))
-        new = (
-            labels.unionByName(prop)
+        # propagated rows carry a NULL own label, so max(own) is the
+        # node's previous label and min(comp) < own iff the label fell
+        prop = edges.join(labels, edges["s"] == labels["node"]).select(
+            F.col("d").alias("node"), "comp", F.lit(None).alias("own")
+        )
+        obs = Observation()
+        labels = checkpoint(
+            labels.withColumn("own", F.col("comp"))
+            .unionByName(prop)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .transform(checkpoint)
+            .agg(F.min("comp").alias("comp"), F.max("own").alias("own"))
+            .observe(
+                obs,
+                F.count(F.when(F.col("comp") < F.col("own"), 1)).alias("n"),
+            )
+            .select("node", "comp")
         )
-        changed = (
-            new.withColumnRenamed("comp", "comp_new")
-            .join(labels, "node")
-            .where(F.col("comp_new") != F.col("comp"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
+        if obs.get["n"] == 0:
             break
     edges.unpersist()
     return labels

@@ -7,7 +7,7 @@ no Python in the hot path. Inputs: the driver ``documents`` table
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.session import checkpoint
@@ -1740,6 +1740,7 @@ def unigram_lm_train(
     """
     from alphalens_spark.scale.dedup import spread_for_compute
 
+    w_obs = Observation()  # vocabulary size and longest word
     w = (
         spread_for_compute(docs)
         .select(F.explode(_tokens(text_col)).alias("word"))
@@ -1754,15 +1755,21 @@ def unigram_lm_train(
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
+        .observe(
+            w_obs,
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.length("word")).alias("wl"),
+        )
         .transform(checkpoint)
     )
+    w_stats = w_obs.get
     # bounded-vocabulary fast path (the driver-BPE / small-graph-PageRank
     # precedent): the EM state is VOCABULARY-sized, and below the guard
     # the ~2·max_word_len per-round job latencies of the distributed DP
     # dwarf the arithmetic a thousandfold — identical output proven by
     # the equality test that runs BOTH paths (driver_guard=0 forces the
     # distributed one)
-    if driver_guard and w.count() <= driver_guard:
+    if driver_guard and w_stats["n"] <= driver_guard:
         rows = [(r["word"], r["freq"]) for r in w.collect()]
         out = _unigram_lm_driver(
             rows, seed_size, max_piece_len, n_iter, max_word_len
@@ -1803,11 +1810,9 @@ def unigram_lm_train(
         .transform(checkpoint)
     )
     # DP/backtrace rounds are bounded by the LONGEST WORD actually in
-    # the corpus (1-row driver action, the cm_estimate scalar contract)
-    # — extra rounds would be no-op joins; the oracle unrolls a fixed
-    # superset and its surplus rounds are no-ops for the same reason
-    wl = w.agg(F.max(F.length("word"))).collect()[0][0] or 1
-    max_word_len = min(max_word_len, int(wl))
+    # the corpus (observed above) — extra rounds would be no-op joins;
+    # the oracle unrolls a fixed superset, no-ops for the same reason
+    max_word_len = min(max_word_len, int(w_stats["wl"] or 1))
 
     weights = subs.groupBy("piece").agg(F.sum("freq").alias("c"))
     chars = subs.where(F.col("l") == 1).select("piece").distinct()

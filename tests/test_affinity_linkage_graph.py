@@ -301,9 +301,11 @@ def test_k_core_tight_max_rounds_still_converges(spark):
 
 def test_k_core_empty(spark):
     df = spark.createDataFrame([(1, 2), (2, 3)], "src int, dst int")
-    out = graph.k_core(df, 3)
-    assert out.count() == 0
-    assert out.columns == ["node", "degree"]
+    # no 3-core, and an edge list that has no edges at all
+    for edges in (df, df.limit(0)):
+        out = graph.k_core(edges, 3)
+        assert out.count() == 0
+        assert out.columns == ["node", "degree"]
 
 
 def test_item_similarity_values(spark):
@@ -653,6 +655,9 @@ def test_bfs_distances_path_graph(spark):
         for r in bfs_distances(edges, src, max_depth=3).collect()
     }
     assert out3 == {1: 0, 2: 1, 3: 2, 4: 3}
+    # a source outside the graph reaches nothing: only itself, at 0
+    away = spark.createDataFrame([(99,)], "node long")
+    assert bfs_distances(edges, away).collect() == [(99, 0)]
 
 
 def test_bfs_distances_multi_source_and_undirected(spark):
@@ -703,6 +708,9 @@ def test_sssp_weighted_shorter_path_wins(spark):
     src = spark.createDataFrame([(1,)], "node long")
     out = {r["node"]: r["dist"] for r in sssp_distances(edges, src).collect()}
     assert out == {1: 0, 2: 10, 3: 20}
+    # a source outside the graph relaxes nothing: only itself, at 0
+    away = spark.createDataFrame([(99,)], "node long")
+    assert sssp_distances(edges, away).collect() == [(99, 0)]
 
 
 def test_sssp_hop_bound_and_multi_source(spark):

@@ -12,6 +12,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 
 from alphalens_spark import graph, session
+from alphalens_spark.scale import dedup
 from alphalens_spark.streaming import ops
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "alphalens_spark"
@@ -116,3 +117,68 @@ def test_store_update_survives_lost_blocks_with_checkpoint_dir(
         assert _hist_store(spark, tmp_path / "reliable") == want
     with pytest.raises(Py4JJavaError, match=LOST):
         _hist_store(spark, tmp_path / "local")
+
+
+# Jobs one call runs on the fixture below, final collect included (the
+# second call in a session with 4 shuffle partitions). The iterative
+# operators read sizes and convergence from metrics observed on their
+# checkpoint jobs, so a round runs no job besides its checkpoint's.
+# Measured: 32, 22, 56-58, 35-36 and 49-52 jobs. AQE's stage timing
+# moves a count by a job or two from run to run, hence the slack. Lower
+# a ceiling when a change saves jobs; never raise one.
+JOB_CEILINGS = {
+    "connected_components": 32,
+    "k_core": 22,
+    "bfs_distances": 60,
+    "sssp_distances": 40,
+    "pagerank": 53,
+}
+PATH = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22)]
+CHORDS = [(1, 3), (2, 4), (3, 5)]
+
+
+def _graph_op(spark, name):
+    pairs = spark.createDataFrame(PATH, "id_a long, id_b long")
+    edges = spark.createDataFrame(PATH + CHORDS, "src long, dst long")
+    weighted = spark.createDataFrame(
+        [(a, b, 1 + a % 3) for a, b in PATH + CHORDS],
+        "src long, dst long, weight long",
+    )
+    src = spark.createDataFrame([(1,)], "node long")
+    return {
+        "connected_components": lambda: dedup.connected_components(pairs),
+        "k_core": lambda: graph.k_core(edges, 2),
+        "bfs_distances": lambda: graph.bfs_distances(edges, src),
+        "sssp_distances": lambda: graph.sssp_distances(weighted, src),
+        "pagerank": lambda: graph.pagerank(
+            edges, n_iter=5, small_graph_edges=0
+        ),
+    }[name]
+
+
+def _jobs(spark, fn):
+    """Rows of ``fn()`` and the number of Spark jobs computing them ran."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup("job_ceiling", "job_ceiling")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
+        rows = sorted(map(tuple, fn().collect()))
+        # the tracker is fed by the listener bus: drain it before reading
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return rows, len(after - before)
+
+
+@pytest.mark.parametrize("name", sorted(JOB_CEILINGS))
+def test_iterative_operator_job_ceiling(spark, name):
+    fn = _graph_op(spark, name)
+    want, _ = _jobs(spark, fn)
+    rows, jobs = _jobs(spark, fn)
+    assert rows == want and rows
+    assert jobs <= JOB_CEILINGS[name], (name, jobs)

@@ -27,6 +27,17 @@ def test_plan_summary_counts_shuffle_and_scan_pruning(spark):
     assert any("GreaterThan(l_quantity" in f for f in s.scans[0].pushed_filters)
 
 
+def test_scan_report_shows_what_reached_the_reader(spark):
+    li = datasets.load_table(spark, SF_DIR, "lineitem")
+    df = li.where(F.col("l_quantity") > 30).select("l_orderkey")
+    (scan,) = plans.scan_report(df)
+    assert sorted(scan.read_columns) == ["l_orderkey", "l_quantity"]
+    assert any("GreaterThan(l_quantity" in f for f in scan.pushed_filters)
+    assert "lineitem" in scan.location
+    # a self-join reads the table twice: one entry per scan
+    assert len(plans.scan_report(df.join(df, "l_orderkey"))) == 2
+
+
 def test_plan_summary_broadcast_join_classified(spark):
     li = datasets.load_table(spark, SF_DIR, "lineitem")
     ord_ = datasets.load_table(spark, SF_DIR, "orders").select(

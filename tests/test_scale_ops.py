@@ -113,6 +113,9 @@ def test_connected_components_chain_and_isolated_pair(spark):
     )
     comp = {r["node"]: r["comp"] for r in dedup.connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
+    # zero pairs: the first round observes no change on an empty frame
+    none = dedup.connected_components(pairs.limit(0))
+    assert none.collect() == [] and none.columns == ["node", "comp"]
 
 
 def test_duplicate_clusters_end_to_end(spark):
@@ -768,3 +771,10 @@ def test_unigram_lm_long_words_excluded_consistently(spark):
     # letters (x, etc.) never enter the vocabulary at all
     pieces = {p for p, _u, _c in a}
     assert "x" not in pieces and "ban" in pieces
+    # no word within the cap: the word table is empty and its observed
+    # longest word is NULL on both paths
+    only_long = docs.select("doc_id", F.lit("extraordinary").alias("text"))
+    for guard in (0, 65536):
+        assert unigram_lm_train(
+            only_long, driver_guard=guard, **kw
+        ).collect() == []

@@ -4,6 +4,8 @@
 import datetime as dt
 import math
 
+import pytest
+
 from alphalens_spark import portfolio, tears
 from alphalens_spark.calendar_ import trading_calendar
 from alphalens_spark.utils import get_clean_factor_and_forward_returns
@@ -54,6 +56,36 @@ def test_event_returns_tear_sheet_smoke(spark):
     out = tears.create_event_returns_tear_sheet(fd, prices, avgretplot=(2, 3))
     acr = out["avg_cumulative_returns"]
     assert set(acr["offset"]) == set(range(-2, 4))
+
+
+def test_event_study_tear_sheet_smoke(spark):
+    fd, prices = _factor_data(spark)
+    out = tears.create_event_study_tear_sheet(fd, prices, avgretplot=(2, 3))
+    assert set(out) == {
+        "event_distribution", "avg_cumulative_returns",
+        "mean_return_by_quantile", "factor_returns_equal_weight",
+    }
+    # 4 assets on each of the 10 factor dates, all in January
+    assert out["event_distribution"]["n_events"].tolist() == [40]
+    assert set(out["avg_cumulative_returns"]["offset"]) == set(range(-2, 4))
+    # not demeaned: top quantile {A, B} earns (0.25 + 0.5) / 2 a day,
+    # bottom {C, D} (0 - 0.5) / 2
+    mean = out["mean_return_by_quantile"].set_index("factor_quantile")["mean_1D"]
+    assert mean.to_dict() == {2: 0.375, 1: -0.25}
+    assert len(out["factor_returns_equal_weight"]) == 10
+
+
+def test_plot_ic_by_group(spark):
+    from alphalens_spark import performance, plotting
+
+    fd, _ = _factor_data(spark)
+    ic = performance.mean_information_coefficient(fd, ["1D"], by_group=True)
+    bars = plotting.plot_ic_by_group(ic, ["1D", "5D"])
+    # groups sorted; only the periods the frame carries; both groups
+    # rank their two assets in factor order, so each IC is 1
+    assert bars.index.tolist() == ["g1", "g2"]
+    assert bars.columns.tolist() == ["ic_1D"]
+    assert bars["ic_1D"].tolist() == pytest.approx([1.0, 1.0])
 
 
 def test_pyfolio_input(spark):

@@ -278,6 +278,33 @@ def test_add_trading_periods(spark):
     assert out == {0.0: D(1), 1.0: D(2)}  # last row shifts off the calendar
 
 
+def test_diff_trading_periods_counts_trading_days(spark):
+    from alphalens_spark.calendar_ import diff_trading_periods
+
+    # two non-trading days after D(1): D(1) -> D(4) is one trading period
+    cal = trading_calendar(
+        spark.createDataFrame([(D(i),) for i in (0, 1, 4, 5, 6)], "date timestamp")
+    )
+    spans = spark.createDataFrame(
+        [(D(0), D(1)), (D(1), D(4)), (D(0), D(6)), (D(5), D(1))],
+        "start timestamp, end timestamp",
+    )
+    idx = {
+        side: cal.select(
+            F.col("date").alias(side), F.col("day_idx").alias(f"{side}_idx")
+        )
+        for side in ("start", "end")
+    }
+    out = spans.join(idx["start"], "start").join(idx["end"], "end").select(
+        "start", "end",
+        diff_trading_periods(cal, F.col("start_idx"), F.col("end_idx")).alias("n"),
+    )
+    got = {(r["start"], r["end"]): r["n"] for r in out.collect()}
+    assert got == {
+        (D(0), D(1)): 1, (D(1), D(4)): 1, (D(0), D(6)): 4, (D(5), D(1)): -2,
+    }
+
+
 def test_common_start_returns_standalone(spark):
     from alphalens_spark.performance import common_start_returns
 
