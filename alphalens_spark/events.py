@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.performance import _explode_series, _ordered_series
+
 
 def sessionize(
     events: DataFrame,
@@ -676,16 +678,25 @@ def ohlc_bars(
     keys = [F.date_trunc(unit, F.col(ts_col)).alias("bar_ts")] + [
         F.col(c) for c in by
     ]
+    return events.groupBy(*keys).agg(*_ohlc_aggs(ts_col, value_col, id_col))
+
+
+def _ohlc_aggs(ts_col: str, value_col: str, id_col: str) -> list[Column]:
+    """The six OHLC bar aggregates (open, high, low, close, n, volume),
+    shared by :func:`ohlc_bars` and its watermarked streaming twin
+    ``streaming.ops.stream_ohlc``. Open/close are ``min_by``/``max_by``
+    over the (ts, id) order struct — declarative, so they also maintain
+    incrementally inside streaming window state."""
     order = F.struct(F.col(ts_col), F.col(id_col))
     v = F.col(value_col)
-    return events.groupBy(*keys).agg(
+    return [
         F.round(F.min_by(v, order), 6).alias("open"),
         F.round(F.max(v), 6).alias("high"),
         F.round(F.min(v), 6).alias("low"),
         F.round(F.max_by(v, order), 6).alias("close"),
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(v), 6).alias("volume"),
-    )
+    ]
 
 
 def common_paths(
@@ -874,9 +885,18 @@ def ab_test_ztest(
         .agg(F.max("_e").alias("_exposed"), F.max("_s").alias("_conv"))
         .where(F.col("_exposed") == 1)
     )
+    return _ab_readout(per_user, "_conv")
+
+
+def _ab_readout(per_user: DataFrame, conv_col: str) -> DataFrame:
+    """The A/B readout from exposed users (one row per (user, variant),
+    ``conv_col`` the 0/1 conversion flag) to the pair z-table: per-variant
+    counts, then the pooled two-proportion z per variant pair. Shared by
+    :func:`ab_test_ztest` and ``streaming.ops.ab_store_ztest``, whose
+    incremental == one-shot equality rests on it."""
     per_variant = per_user.groupBy("variant").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("_conv").alias("conv"),
+        F.sum(conv_col).alias("conv"),
     )
     a = per_variant.select(
         F.col("variant").alias("variant_a"),
@@ -1093,73 +1113,70 @@ def cusum_changepoints(
     row per observation; alarm_side ∈ {1, −1, 0} (which side fired).
     """
     keys = list(key_cols)
-    arr = (
-        daily.where(F.col(value_col).isNotNull())
-        .groupBy(*keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(day_col).alias("o"),
-                        F.col(value_col).cast("long").alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-    )
+    arr = _ordered_series(daily, keys, day_col, value_col, "long")
     base_sum = F.aggregate(
         F.slice("xs", 1, baseline), F.lit(0).cast("long"), lambda a, x: a + x["v"]
     )
     base_n = F.least(F.size("xs"), F.lit(baseline))
     mu = F.round(base_sum / base_n).cast("long")
-    k = F.round(F.abs(mu) * F.lit(drift_frac)).cast("long")
-    h = F.round(F.abs(mu) * F.lit(threshold_frac)).cast("long")
+    k, h = _cusum_limits(mu, drift_frac, threshold_frac)
     staged = arr.select(
         *keys, "xs", mu.alias("_mu"), k.alias("_k"), h.alias("_h")
     )
-
-    zero = F.lit(0).cast("long")
-
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)
-        # alarm restarts both sides
-        pgp = F.when(prev["alarm"] != 0, zero).otherwise(prev["gp"])
-        pgn = F.when(prev["alarm"] != 0, zero).otherwise(prev["gn"])
-        gp = F.greatest(zero, pgp + (x["v"] - F.col("_mu") - F.col("_k")))
-        gn = F.greatest(zero, pgn + (F.col("_mu") - x["v"] - F.col("_k")))
-        alarm = (
-            F.when(gp > F.col("_h"), F.lit(1))
-            .when(gn > F.col("_h"), F.lit(-1))
-            .otherwise(F.lit(0))
-            .cast("int")
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(gp.alias("gp"), gn.alias("gn"), alarm.alias("alarm"))
-            ),
-        )
-
     # fold from the (0, 0, no-alarm) seed — the first real element then
     # computes max(0, 0 + (v − μ − k)) etc., which IS the head-row rule,
     # so no first-element special case exists (the streaming store's
     # seeded-continuation proof); the seed itself is sliced off
-    seed = F.array(
-        F.struct(
-            zero.alias("gp"), zero.alias("gn"), F.lit(0).cast("int").alias("alarm")
-        )
+    ys = F.slice(
+        F.aggregate(F.col("xs"), F.array(_cusum_zero_state()), _cusum_step),
+        2,
+        F.size("xs"),
     )
-    ys = F.slice(F.aggregate(F.col("xs"), seed, _step), 2, F.size("xs"))
-    staged2 = staged.select(*keys, "xs", ys.alias("ys"))
-    return staged2.select(
-        *keys, F.posexplode(F.arrays_zip("xs", "ys"))
-    ).select(
-        *keys,
-        F.col("col.xs.o").alias(day_col),
-        F.col("col.xs.v").alias(value_col),
-        F.col("col.ys.gp").alias("gpos"),
-        F.col("col.ys.gn").alias("gneg"),
-        F.col("col.ys.alarm").alias("alarm_side"),
+    return _explode_series(
+        staged, keys, ys, day_col, value_col,
+        {"gpos": ".gp", "gneg": ".gn", "alarm_side": ".alarm"},
+    )
+
+
+def _cusum_limits(mu: Column, drift_frac: float, threshold_frac: float):
+    """CUSUM allowance ``k = round(drift_frac·|μ|)`` and alarm threshold
+    ``h = round(threshold_frac·|μ|)`` as exact longs — shared with the
+    streaming store ``streaming.ops.cusum_store_update``."""
+    k = F.round(F.abs(mu) * F.lit(drift_frac)).cast("long")
+    h = F.round(F.abs(mu) * F.lit(threshold_frac)).cast("long")
+    return k, h
+
+
+def _cusum_zero_state() -> Column:
+    """The CUSUM fold's (g⁺, g⁻, alarm) = (0, 0, none) start state."""
+    zero = F.lit(0).cast("long")
+    return F.struct(
+        zero.alias("gp"), zero.alias("gn"), F.lit(0).cast("int").alias("alarm")
+    )
+
+
+def _cusum_step(acc, x):
+    """One two-sided CUSUM step over (o, v) elements against the row's
+    ``_mu`` / ``_k`` / ``_h`` columns; the accumulator is an
+    array<struct<gp, gn, alarm>>. Shared by :func:`cusum_changepoints`
+    and ``streaming.ops.cusum_store_update``, so a seeded continuation
+    executes the identical integer operation sequence."""
+    zero = F.lit(0).cast("long")
+    prev = F.element_at(acc, -1)
+    # alarm restarts both sides
+    pgp = F.when(prev["alarm"] != 0, zero).otherwise(prev["gp"])
+    pgn = F.when(prev["alarm"] != 0, zero).otherwise(prev["gn"])
+    gp = F.greatest(zero, pgp + (x["v"] - F.col("_mu") - F.col("_k")))
+    gn = F.greatest(zero, pgn + (F.col("_mu") - x["v"] - F.col("_k")))
+    alarm = (
+        F.when(gp > F.col("_h"), F.lit(1))
+        .when(gn > F.col("_h"), F.lit(-1))
+        .otherwise(F.lit(0))
+        .cast("int")
+    )
+    return F.concat(
+        acc,
+        F.array(F.struct(gp.alias("gp"), gn.alias("gn"), alarm.alias("alarm"))),
     )
 
 
@@ -1199,20 +1216,7 @@ def mann_kendall_trend(
     Output: ``key_cols`` + (n, s, tie_term, z_e6) — all exact integers.
     """
     keys = list(key_cols)
-    arr = (
-        daily.where(F.col(value_col).isNotNull())
-        .groupBy(*keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(day_col).alias("o"),
-                        F.col(value_col).cast("long").alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-    )
+    arr = _ordered_series(daily, keys, day_col, value_col, "long")
     xs = F.col("xs")
     long0 = F.lit(0).cast("long")
     # S: for each position i, sum sign(v_j − v_i) over the tail j > i

@@ -28,9 +28,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from alphalens_spark.scale.curation import _nonempty_lines as nonempty_lines
-from alphalens_spark.scale.curation import _words as words
+from alphalens_spark.scale.dedup import _tokens as tokens
+from alphalens_spark.scale.dedup import _tokens as words
 from alphalens_spark.scale.dedup import md5_long
-from alphalens_spark.scale.text import _tokens as tokens
 
 __all__ = [
     "md5_long",

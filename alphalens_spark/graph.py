@@ -103,6 +103,11 @@ def pagerank(
             .agg(F.sum("_w").alias("_w"))
         )
 
+    if e_obs.get["n"] == 0 and seeds is None:
+        # no edges, no nodes: uniform PageRank is the empty distribution
+        # (personalized PageRank still rejects its seeds below)
+        return e.select(F.col("src").alias("node"), F.lit(0.0).alias("pagerank"))
+
     if small_graph_edges and e_obs.get["n"] <= small_graph_edges:
         # seed set is bounded by the small-graph guard itself here
         seed_rows = (
@@ -218,12 +223,19 @@ def _pagerank_driver(
     node_list = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
     idx = {v: i for i, v in enumerate(node_list)}
     n_nodes = len(node_list)
-    W = np.zeros((n_nodes, n_nodes))
-    for r in rows:
-        W[idx[r["src"]], idx[r["dst"]]] = r["w"]
-    out = W.sum(axis=1)
+    # edge arrays, not a dense n×n matrix: memory stays O(edges) (a
+    # sparse 20k-node graph would need two 3.2 GB float64 matrices)
+    src = np.fromiter((idx[r["src"]] for r in rows), dtype=np.int64, count=len(rows))
+    dst = np.fromiter((idx[r["dst"]] for r in rows), dtype=np.int64, count=len(rows))
+    w = np.fromiter((r["w"] for r in rows), dtype=np.float64, count=len(rows))
+    out = np.bincount(src, weights=w, minlength=n_nodes)
     has_out = out > 0
-    P = np.divide(W, out[:, None], out=np.zeros_like(W), where=has_out[:, None])
+    # an edge out of a zero-out-weight (dangling) node carries nothing
+    p = np.divide(w, out[src], out=np.zeros_like(w), where=has_out[src])
+
+    def spread(pr):  # Pᵀ·pr: each edge carries p·pr[src] to its dst
+        return np.bincount(dst, weights=p * pr[src], minlength=n_nodes)
+
     if seed_rows is not None:
         s = np.zeros(n_nodes)
         for node, wgt in seed_rows:
@@ -237,12 +249,12 @@ def _pagerank_driver(
         pr = s.copy()
         for _ in range(n_iter):
             dang = pr[~has_out].sum()
-            pr = (1.0 - damping) * s + damping * (P.T @ pr + dang * s)
+            pr = (1.0 - damping) * s + damping * (spread(pr) + dang * s)
     else:
         pr = np.full(n_nodes, 1.0 / n_nodes)
         for _ in range(n_iter):
             dang = pr[~has_out].sum()
-            pr = (1.0 - damping) / n_nodes + damping * (P.T @ pr + dang / n_nodes)
+            pr = (1.0 - damping) / n_nodes + damping * (spread(pr) + dang / n_nodes)
     spark = e.sparkSession
     out_schema = e.select(F.col("src").alias("node")).schema.add(
         "pagerank", "double"

@@ -912,6 +912,61 @@ def factor_rank_autocorrelation(
     )
 
 
+def _ordered_series(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_col: str,
+    value_col: str,
+    value_type: str = "double",
+) -> DataFrame:
+    """The collect half of the ordered-series scaffold shared by
+    :func:`ewma`, :func:`holt_linear` and the events module's
+    ``cusum_changepoints`` / ``mann_kendall_trend``: NULL values
+    dropped, then ONE groupBy per key gathers ``xs`` =
+    array_sort(collect_list(struct(o, v))) — the whole series ordered by
+    ``order_col``, ready for a map-side array fold. The series per key
+    is bounded by the ORDER dimension (dates), so no window and no
+    per-step shuffle is needed."""
+    return (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(*keys)
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col(order_col).alias("o"),
+                        F.col(value_col).cast(value_type).alias("v"),
+                    )
+                )
+            ).alias("xs")
+        )
+    )
+
+
+def _explode_series(
+    arr: DataFrame,
+    keys: Sequence[str],
+    ys: Column,
+    order_col: str,
+    value_col: str,
+    outputs: dict[str, str],
+) -> DataFrame:
+    """The explode half of the scaffold: zip each key's ``xs`` with the
+    folded series ``ys`` and emit one row per observation — ``keys`` +
+    (order_col, value_col) + one column per ``outputs`` entry (output
+    name → path under ``col.ys``, ``""`` for ys itself). Two-step
+    select: the fold materializes once before the explode (Generate
+    re-evaluates projected expressions per exploded row — the round-2
+    lesson)."""
+    staged = arr.select(*keys, "xs", ys.alias("ys"))
+    return staged.select(*keys, F.posexplode(F.arrays_zip("xs", "ys"))).select(
+        *keys,
+        F.col("col.xs.o").alias(order_col),
+        F.col("col.xs.v").alias(value_col),
+        *[F.col(f"col.ys{path}").alias(name) for name, path in outputs.items()],
+    )
+
+
 def ewma(
     df: DataFrame,
     value_col: str,
@@ -940,20 +995,7 @@ def ewma(
     by_cols = [by] if isinstance(by, str) else list(by)
     alpha = 2.0 / (span + 1.0)
     oma = 1.0 - alpha
-    arr = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*by_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(order_col).alias("o"),
-                        F.col(value_col).cast("double").alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-    )
+    arr = _ordered_series(df, by_cols, order_col, value_col)
     ys = F.aggregate(
         F.col("xs"),
         F.array().cast("array<double>"),
@@ -966,18 +1008,38 @@ def ewma(
             )
         ),
     )
-    # two-step select: the fold materializes once before the explode
-    # (Generate re-evaluates projected expressions per exploded row —
-    # the round-2 lesson)
-    staged = arr.select(*by_cols, "xs", ys.alias("ys"))
-    return staged.select(
-        *by_cols, F.posexplode(F.arrays_zip("xs", "ys"))
-    ).select(
-        *by_cols,
-        F.col("col.xs.o").alias(order_col),
-        F.col("col.xs.v").alias(value_col),
-        F.col("col.ys").alias("ewma"),
-    )
+    return _explode_series(arr, by_cols, ys, order_col, value_col, {"ewma": ""})
+
+
+def _holt_step(alpha: float, beta: float):
+    """The Holt level+trend fold step over (o, v) elements, shared by
+    :func:`holt_linear` and the streaming store
+    ``streaming.ops.holt_store_update`` (whose seeded continuation must
+    execute the identical operation sequence). The accumulator is an
+    array<struct<l, b>>; an empty accumulator starts the series at
+    (l, b) = (x₀, 0)."""
+    oma = 1.0 - alpha
+    omb = 1.0 - beta
+
+    def step(acc, x):
+        prev = F.element_at(acc, -1)
+        new_l = x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
+        # the trend update re-states new_l's expression tree verbatim —
+        # both engines then evaluate the identical double arithmetic
+        new_b = (
+            x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
+            - prev["l"]
+        ) * F.lit(beta) + prev["b"] * F.lit(omb)
+        return F.when(
+            F.size(acc) == 0,
+            F.array(F.struct(x["v"].alias("l"), F.lit(0.0).alias("b"))),
+        ).otherwise(
+            F.concat(
+                acc, F.array(F.struct(new_l.alias("l"), new_b.alias("b")))
+            )
+        )
+
+    return step
 
 
 def holt_linear(
@@ -1008,55 +1070,14 @@ def holt_linear(
     forecast.
     """
     by_cols = [by] if isinstance(by, str) else list(by)
-    oma = 1.0 - alpha
-    omb = 1.0 - beta
-    arr = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*by_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(order_col).alias("o"),
-                        F.col(value_col).cast("double").alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-    )
-
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)
-        new_l = x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
-        # the trend update re-states new_l's expression tree verbatim —
-        # both engines then evaluate the identical double arithmetic
-        new_b = (
-            x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
-            - prev["l"]
-        ) * F.lit(beta) + prev["b"] * F.lit(omb)
-        return F.when(
-            F.size(acc) == 0,
-            F.array(F.struct(x["v"].alias("l"), F.lit(0.0).alias("b"))),
-        ).otherwise(
-            F.concat(
-                acc, F.array(F.struct(new_l.alias("l"), new_b.alias("b")))
-            )
-        )
-
+    arr = _ordered_series(df, by_cols, order_col, value_col)
     ys = F.aggregate(
         F.col("xs"),
         F.array().cast("array<struct<l:double,b:double>>"),
-        _step,
+        _holt_step(alpha, beta),
     )
-    staged = arr.select(*by_cols, "xs", ys.alias("ys"))
-    return staged.select(
-        *by_cols, F.posexplode(F.arrays_zip("xs", "ys"))
-    ).select(
-        *by_cols,
-        F.col("col.xs.o").alias(order_col),
-        F.col("col.xs.v").alias(value_col),
-        F.col("col.ys.l").alias("level"),
-        F.col("col.ys.b").alias("trend"),
+    return _explode_series(
+        arr, by_cols, ys, order_col, value_col, {"level": ".l", "trend": ".b"}
     )
 
 

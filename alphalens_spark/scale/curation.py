@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.scale.dedup import _tokens
 from alphalens_spark.session import checkpoint
 
 # The eight Gopher "must contain >= 2" stop words (Rae et al. 2021, A1.1).
@@ -40,10 +41,6 @@ GOPHER_THRESHOLDS = {
     "max_top_ngram_char_frac": {2: 0.20, 3: 0.18, 4: 0.16},
     "max_dup_ngram_char_frac": {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10},
 }
-
-
-def _words(text_col: str) -> Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def _nonempty_lines(text_col: str) -> Column:
@@ -80,7 +77,7 @@ def gopher_quality(
     over the lowercased text, divided by total lowercased char count.
     """
     ns = sorted(set(top_ns) | set(dup_ns))
-    words = _words(text_col)
+    words = _tokens(text_col)
     lines = _nonempty_lines(text_col)
     t = F.lower(F.trim(F.col(text_col)))
 
@@ -379,7 +376,7 @@ def pack_sequences(
     """
     from alphalens_spark.scale.dedup import md5_long
 
-    n_tok = F.size(_words(text_col))
+    n_tok = F.size(_tokens(text_col))
     base = docs.select(
         F.col(id_col),
         F.pmod(md5_long(F.col(id_col).cast("string"), 15), F.lit(n_shards))
@@ -446,7 +443,7 @@ def mixture_weights(
     oversample = weight/nat_frac (the epochs-over-natural multiplier a
     loader applies per group).
     """
-    toks = F.size(_words(text_col))
+    toks = F.size(_tokens(text_col))
     # persist: the group-dimension totals feed BOTH the 1-row normalizer
     # aggregate and the output projection — unpersisted, each consumer
     # re-planned the full corpus scan + groupBy (two fact scans for a
@@ -501,7 +498,7 @@ def duplicate_ngram_spans(
     No all-pairs stage anywhere. Output: one row per merged span
     (id, span_start, span_end, span_words).
     """
-    words = _words(text_col)
+    words = _tokens(text_col)
     grams = F.when(
         F.size(words) >= k,
         F.transform(
@@ -561,7 +558,7 @@ def duplicate_span_stats(
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.sum("span_words").alias("dup_words"),
     )
-    n_words = docs.select(F.col(id_col), F.size(_words(text_col)).alias("n_words"))
+    n_words = docs.select(F.col(id_col), F.size(_tokens(text_col)).alias("n_words"))
     return (
         n_words.join(agg, id_col, "left")
         .select(
@@ -969,7 +966,7 @@ def corpus_report(
     the two exact distincts plan via Expand — the only shuffled part).
     Output: a single row.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = _tokens(text_col)
     base = docs.select(
         F.col(id_col),
         F.md5(F.col(text_col)).alias("_h"),

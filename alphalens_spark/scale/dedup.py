@@ -137,6 +137,13 @@ def _expand_rep_pairs(
     return cross.unionByName(within)
 
 
+def _tokens(text_col: str = "text") -> F.Column:
+    """The library's one word tokenizer: lower-cased, trimmed text split
+    on whitespace runs. Every text, curation and dedup operator tokenizes
+    through it (``functions.tokens`` / ``functions.words``)."""
+    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
+
 def _shingles(text_col: str, k: int = 3) -> F.Column:
     """Token k-gram shingle array (JVM-side transform, no Python UDF).
 
@@ -144,12 +151,22 @@ def _shingles(text_col: str, k: int = 3) -> F.Column:
     (30× fewer hash evaluations than char shingles on prose) while
     preserving near-dup sensitivity for document-level dedup.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = _tokens(text_col)
     n = F.greatest(F.size(toks) - (k - 1), F.lit(1))
     idx = F.sequence(F.lit(1), n)
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
     )
+
+
+def _gram_set(text_col: str, n: int, hash_grams: bool) -> F.Column:
+    """A document's distinct word n-gram set: :func:`_shingles`, with
+    each gram hashed to an 8-byte xxhash64 posting key when
+    ``hash_grams`` is set (plain strings keep the set oracle-readable)."""
+    grams = _shingles(text_col, n)
+    if not hash_grams:
+        return grams
+    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
 
 
 def minhash_signatures(
@@ -557,7 +574,7 @@ def simhash(
           as the oracle of the vectorized path.
     """
     n_bits = simhash_bits(token_hash)
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = _tokens(text_col)
     th = (
         (lambda t: md5_long(t, 15))
         if token_hash == "md5"
@@ -638,17 +655,7 @@ def ngram_jaccard_pairs(
     recomputed over the CAPPED gram sets so the score stays a true
     Jaccard of the represented sets.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    gram = (
-        (lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-        if hash_grams  # 8-byte postings at scale; plain strings for oracles
-        else (lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))), gram
-        )
-    )
+    grams = _gram_set(text_col, n, hash_grams)
     g = spread_for_compute(docs).select(F.col(id_col).alias("id"), grams.alias("_g"), F.size(grams).alias("_n"))
     ex = g.select("id", "_n", F.explode("_g").alias("gram"))
     if max_df is not None:
@@ -697,17 +704,7 @@ def decontaminate(
 
     Output: (id,) of the clean documents.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    gram = (
-        (lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-        if hash_grams
-        else (lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))), gram
-        )
-    )
+    grams = _gram_set(text_col, n, hash_grams)
     bench_grams = (
         spread_for_compute(benchmark).select(F.explode(grams).alias("gram")).distinct()
     )
@@ -1056,17 +1053,7 @@ def ngram_containment_pairs(
     cap (sizes recomputed over the capped sets). Output:
     (id_a, id_b, containment).
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    gram = (
-        (lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-        if hash_grams
-        else (lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))), gram
-        )
-    )
+    grams = _gram_set(text_col, n, hash_grams)
     g = spread_for_compute(docs).select(
         F.col(id_col).alias("id"), grams.alias("_g"), F.size(grams).alias("_n")
     )
@@ -1113,7 +1100,7 @@ def fuzzy_token_pairs(
     shuffles (vocab build + neighborhood join). Output: (tok_a, tok_b,
     count_a, count_b) with tok_a < tok_b, distance exactly 1.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = _tokens(text_col)
     vocab = (
         docs.select(F.explode(toks).alias("tok"))
         .where((F.length("tok") > 0) & (F.length("tok") <= max_token_len))
@@ -1281,17 +1268,7 @@ def allpairs_jaccard_pairs(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    gram = (
-        (lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-        if hash_grams
-        else (lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))), gram
-        )
-    )
+    grams = _gram_set(text_col, n, hash_grams)
     # persist + eager materialize: the gram-set projection feeds the
     # postings explode AND both sides of the verification join — without
     # the pin each consumer re-runs tokenize→hash over the corpus (the

@@ -2,15 +2,17 @@
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct; decode / feature-extraction run as Arrow-batched
-``mapInPandas`` stages. Three REAL codecs live below: the netpbm
-family (binary PGM/PPM — parse_netpbm / decode_netpbm_features /
-resize_netpbm), RIFF/WAVE PCM16 audio (make_wav / parse_wav), and PNG
-(make_png / parse_png — PNG's entropy coding is stdlib zlib, full
-None/Sub/Up/Average/Paeth unfiltering). Formats whose entropy coding
-genuinely needs an external library (JPEG's Huffman-DCT, MP3/AAC,
-video) stay STUBBED behind ``decoder='fake'`` (a deterministic
-stand-in) with the identical Spark-side plumbing, so dropping the
-library in only replaces the kernel body.
+``mapInPandas`` stages. Five REAL codecs live below, all stdlib +
+numpy: the netpbm family (binary PGM/PPM), 24-bit BMP, RIFF/WAVE PCM16
+audio, PNG (its entropy coding is stdlib zlib; full None/Sub/Up/
+Average/Paeth unfiltering) and baseline grayscale JPEG (huffman + DCT).
+Each has a ``make_*`` encoder and a ``parse_*`` decoder that raises
+ValueError on any malformed payload. The four image codecs share one
+embedding→image encoder (:func:`_embeddings_as_image`) and one
+decode→pixel-stats kernel (:func:`_pixel_stats`). Formats that need an
+external library (MP3/AAC, video) are represented by the deterministic
+byte-level stand-ins :func:`decode_and_featurize` and
+:func:`resize_media`, which keep the identical Spark-side plumbing.
 
 Scale notes: payload bytes stay in Arrow record batches end to end (no
 per-row Python); metadata-only transforms (filtering by size/mime,
@@ -63,26 +65,17 @@ def documents_as_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def decode_and_featurize(
-    media: DataFrame, feature_dim: int = 16, decoder: str = "fake"
-) -> DataFrame:
+def decode_and_featurize(media: DataFrame, feature_dim: int = 16) -> DataFrame:
     """Decode payloads and emit a fixed-dim feature vector per item.
 
     Arrow-batched ``mapInPandas``: each Python worker receives whole
     record batches (payload bytes as ``bytes`` objects), vectorizes over
-    the batch, yields feature frames. ``decoder='fake'`` is the
-    deterministic stub kernel (byte-histogram features); a real decoder
-    (``decoder='pil'`` etc.) raises until the library is installed —
-    clearly marking the stubbed boundary.
+    the batch, yields feature frames. The kernel is a deterministic
+    stand-in (an L1-normalized byte histogram) for formats whose real
+    decoder needs an external library (MP3/AAC, video); the real
+    stdlib codecs have their own kernels (e.g.
+    :func:`decode_netpbm_features`).
     """
-    if decoder != "fake":
-        raise NotImplementedError(
-            f"decoder={decoder!r}: MP3/video decoding needs "
-            "torchaudio/ffmpeg, not available in this environment; use "
-            "parse_netpbm / parse_png / parse_wav / parse_jpeg for REAL "
-            "stdlib-only codecs or the 'fake' decoder for the identical "
-            "Spark plumbing"
-        )
 
     def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -138,28 +131,19 @@ def sample_frames(
 
 
 def resize_media(
-    media: DataFrame,
-    target_width: int = 32,
-    target_height: int = 32,
-    resizer: str = "fake",
+    media: DataFrame, target_width: int = 32, target_height: int = 32
 ) -> DataFrame:
     """Resize plumbing: payload → fixed-size payload + updated metadata.
 
     Same Arrow-batched ``mapInPandas`` shape a real image resize uses
-    (PIL/cv2 per batch); ``resizer='fake'`` nearest-neighbor-samples the
-    BYTE stream to exactly ``target_width*target_height`` bytes — a
+    (PIL/cv2 per batch); the kernel nearest-neighbor-samples the BYTE
+    stream to exactly ``target_width*target_height`` bytes — a
     deterministic stand-in with the real operator's schema, batch shape
-    and output-size invariant. A real backend raises until its library
-    exists, marking the stubbed boundary.
+    and output-size invariant (:func:`resize_netpbm` is the real
+    pixel resize).
 
     Output: (media_id, payload binary, width int, height int, n_bytes long).
     """
-    if resizer != "fake":
-        raise NotImplementedError(
-            f"resizer={resizer!r}: real image resizing needs PIL/cv2, not "
-            "available in this environment; 'fake' exercises the identical "
-            "Spark plumbing"
-        )
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -237,10 +221,32 @@ def chunk_udtf():
 
 # ---------------------------------------------------------------------------
 # REAL decode kernels for the netpbm family (binary PGM 'P5' / PPM 'P6') —
-# a genuine image codec implementable with numpy alone, so the container's
-# lack of PIL/cv2 no longer forces every decoder to be a stub. JPEG/PNG
-# style entropy-coded formats still require PIL and stay gated.
+# a genuine image codec implementable with numpy alone. Every parse_*
+# in this module is wrapped by _decode_errors_as_value_error; the encoder
+# and pixel-stats kernels the four image codecs share (_embeddings_as_image,
+# _pixel_stats) follow the netpbm kernels.
 # ---------------------------------------------------------------------------
+
+
+def _decode_errors_as_value_error(parse):
+    """Make a ``parse_*`` decoder raise ValueError on EVERY malformed
+    payload. A truncated or corrupted payload makes a decoder index past
+    its buffer (IndexError), unpack a short header (struct.error) or
+    inflate a broken stream (zlib.error); each of those means "malformed
+    payload", so each surfaces as the documented ValueError and the
+    stats kernels catch that one type."""
+    import functools
+    import struct
+    import zlib
+
+    @functools.wraps(parse)
+    def parse_or_value_error(payload):
+        try:
+            return parse(payload)
+        except (IndexError, struct.error, zlib.error) as e:
+            raise ValueError(f"malformed payload: {e}") from e
+
+    return parse_or_value_error
 
 
 def make_netpbm(arr) -> bytes:
@@ -257,6 +263,7 @@ def make_netpbm(arr) -> bytes:
     return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
 
 
+@_decode_errors_as_value_error
 def parse_netpbm(payload: bytes):
     """Decode binary PGM (P5) / PPM (P6) bytes to an (h, w, c) uint8
     array. Full header grammar: tokens separated by whitespace, ``#``
@@ -385,52 +392,51 @@ def resize_netpbm(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return media.mapInPandas(_resize, schema=MEDIA_SCHEMA)
 
 
-def embeddings_as_netpbm(
-    emb: DataFrame, w: int = 8, h: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+def _embeddings_as_image(
+    emb: DataFrame, w: int, h: int, id_col: str, vec_col: str, make, mime: str
 ) -> DataFrame:
-    """Render each embedding as a real binary PGM image (values quantized
-    px = floor(clip((x+1)/2, 0, 1) · 255), reshaped h×w) — a
-    deterministic image corpus synthesized from driver data, so the REAL
-    decode path gets a full value oracle (the quantization replays in
-    SQL). Arrow-batched encoder; payload is a genuine P5 file."""
+    """The one embedding→image encoder behind ``embeddings_as_*``: each
+    vector's first w·h values quantize to px = floor(clip((x+1)/2, 0, 1)
+    · 255), reshape to an (h, w) gray raster and encode with ``make``
+    (a ``make_*`` codec function). A deterministic image corpus from
+    driver data, so every REAL decode path gets a full value oracle (the
+    quantization replays in SQL). Arrow-batched; output MEDIA_SCHEMA."""
     import numpy as np
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads, nb = [], []
+            payloads = []
             for vec in pdf[vec_col]:
                 v = np.asarray(vec, dtype=np.float64)[: w * h]
                 px = np.floor(np.clip((v + 1.0) / 2.0, 0.0, 1.0) * 255.0)
-                img = px.astype(np.uint8).reshape(h, w)
-                p = make_netpbm(img)
-                payloads.append(p)
-                nb.append(len(p))
+                payloads.append(make(px.astype(np.uint8).reshape(h, w)))
             yield pd.DataFrame(
                 {
                     "media_id": pdf[id_col],
                     "payload": payloads,
-                    "mime": "image/x-portable-graymap",
+                    "mime": mime,
                     "width": pd.array([w] * len(pdf), dtype="Int32"),
                     "height": pd.array([h] * len(pdf), dtype="Int32"),
-                    "n_bytes": pd.array(nb, dtype="Int64"),
+                    "n_bytes": pd.array([len(p) for p in payloads], dtype="Int64"),
                 }
             )
 
     return emb.select(id_col, vec_col).mapInPandas(_encode, schema=MEDIA_SCHEMA)
 
 
-def netpbm_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL-decode summary with exact-integer outputs (oracle-friendly):
-    per item (media_id, width, height, px_sum, px_min, px_max) from the
-    actually-parsed raster. Malformed payloads → NULL stats."""
+def _pixel_stats(media: DataFrame, parse) -> DataFrame:
+    """The one decode→pixel-stats kernel behind ``*_pixel_stats``: per
+    item (media_id, width, height, px_sum, px_min, px_max) over every
+    channel of the raster ``parse`` (a ``parse_*`` decoder) returns.
+    Exact-integer outputs, so the SQL oracle compares them exactly;
+    malformed payloads (parse raises ValueError) → NULL stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ws, hs, sums, mins, maxs = [], [], [], [], []
             for payload in pdf["payload"]:
                 try:
-                    img = parse_netpbm(payload)
+                    img = parse(payload)
                     hh, ww, _ = img.shape
                     flat = img.astype("int64")
                     ws.append(ww)
@@ -452,13 +458,29 @@ def netpbm_pixel_stats(media: DataFrame) -> DataFrame:
                 }
             )
 
-    return media.mapInPandas(
+    return media.select("media_id", "payload").mapInPandas(
         _stats,
         schema=(
             "media_id long, width int, height int, "
             "px_sum long, px_min int, px_max int"
         ),
     )
+
+
+def embeddings_as_netpbm(
+    emb: DataFrame, w: int = 8, h: int = 8,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """Render each embedding as a real binary PGM (P5) image — see
+    :func:`_embeddings_as_image` for the quantization."""
+    return _embeddings_as_image(
+        emb, w, h, id_col, vec_col, make_netpbm, "image/x-portable-graymap"
+    )
+
+
+def netpbm_pixel_stats(media: DataFrame) -> DataFrame:
+    """REAL-decode pixel summary of netpbm payloads (:func:`_pixel_stats`)."""
+    return _pixel_stats(media, parse_netpbm)
 
 
 # --------------------------------------------------------------------------
@@ -498,6 +520,7 @@ def make_bmp(arr) -> bytes:
     return header + info + bytes(raster)
 
 
+@_decode_errors_as_value_error
 def parse_bmp(payload: bytes):
     """REAL BMP decode for 24-bit BI_RGB payloads (the make_bmp output
     and any standard uncompressed 24bpp BMP): validates the file
@@ -542,84 +565,23 @@ def embeddings_as_bmp(
     emb: DataFrame, w: int = 8, h: int = 8,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Render each embedding as a real 24-bit BMP (same deterministic
-    quantization as the netpbm/PNG corpus: px = floor(clip((x+1)/2,
-    0, 1)·255), gray replicated across B=G=R) so the BMP decode path —
+    """Render each embedding as a real 24-bit BMP, gray replicated across
+    B=G=R (:func:`_embeddings_as_image`), so the BMP decode path —
     through real headers, BGR order, row padding, and the bottom-up
     flip — gets a full value oracle (per-channel stats are 3× the gray
     raster's, replayed in SQL)."""
-    import numpy as np
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, nb = [], []
-            for vec in pdf[vec_col]:
-                v = np.asarray(vec, dtype=np.float64)[: w * h]
-                px = np.floor(np.clip((v + 1.0) / 2.0, 0.0, 1.0) * 255.0)
-                img = px.astype(np.uint8).reshape(h, w)
-                p = make_bmp(img)
-                payloads.append(p)
-                nb.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "payload": payloads,
-                    "mime": "image/bmp",
-                    "width": pd.array([w] * len(pdf), dtype="Int32"),
-                    "height": pd.array([h] * len(pdf), dtype="Int32"),
-                    "n_bytes": pd.array(nb, dtype="Int64"),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(_encode, schema=MEDIA_SCHEMA)
+    return _embeddings_as_image(emb, w, h, id_col, vec_col, make_bmp, "image/bmp")
 
 
 def bmp_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL-decode summary for BMP payloads with exact-integer outputs
-    (oracle-friendly): per item (media_id, width, height, px_sum,
-    px_min, px_max) over ALL channels of the actually-parsed RGB
-    raster. Malformed payloads → NULL stats."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums, mins, maxs = [], [], [], [], []
-            for payload in pdf["payload"]:
-                try:
-                    img = parse_bmp(payload)
-                    hh, ww, _ = img.shape
-                    flat = img.astype("int64")
-                    ws.append(ww)
-                    hs.append(hh)
-                    sums.append(int(flat.sum()))
-                    mins.append(int(flat.min()))
-                    maxs.append(int(flat.max()))
-                except ValueError:
-                    ws.append(None); hs.append(None)
-                    sums.append(None); mins.append(None); maxs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "px_sum": pd.array(sums, dtype="Int64"),
-                    "px_min": pd.array(mins, dtype="Int32"),
-                    "px_max": pd.array(maxs, dtype="Int32"),
-                }
-            )
-
-    return media.mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, width int, height int, "
-            "px_sum long, px_min int, px_max int"
-        ),
-    )
+    """REAL-decode pixel summary of BMP payloads over ALL channels of the
+    parsed RGB raster (:func:`_pixel_stats`)."""
+    return _pixel_stats(media, parse_bmp)
 
 
 # --------------------------------------------------------------------------
 # REAL audio codec: RIFF/WAVE PCM16 (pure numpy + struct — PCM is not
-# entropy-coded, so like netpbm it needs no external library; the stub
-# boundary shrinks to entropy-coded formats: JPEG/PNG, MP3/AAC, video)
+# entropy-coded, so like netpbm it needs no external library)
 # --------------------------------------------------------------------------
 
 WAV_SCHEMA = (
@@ -650,6 +612,7 @@ def make_wav(samples, sample_rate: int = 8000) -> bytes:
     return hdr + data
 
 
+@_decode_errors_as_value_error
 def parse_wav(payload: bytes):
     """Decode RIFF/WAVE PCM16 mono bytes → (int16 numpy array,
     sample_rate). Walks the chunk list (fmt may be followed by LIST/fact
@@ -732,8 +695,6 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
     zero_crossings counts sign-boundary flips ((s_i ≥ 0) ≠ (s_{i+1} ≥ 0)),
     the classic cheap voiced/unvoiced feature. Malformed payloads →
     NULL stats."""
-    import struct
-
     import numpy as np
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -751,7 +712,7 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
                     mins.append(int(s.min()))
                     maxs.append(int(s.max()))
                     zcs.append(int(np.count_nonzero(nn[1:] != nn[:-1])))
-                except (ValueError, struct.error):
+                except ValueError:
                     rates.append(None)
                     ns.append(None)
                     sums.append(None)
@@ -780,14 +741,12 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# REAL image codec #2: PNG, stdlib-zlib only. PNG's entropy coding IS
+# REAL image codec #3: PNG, stdlib-zlib only. PNG's entropy coding IS
 # zlib (RFC 2083: DEFLATE-compressed filtered scanlines), which ships in
-# the Python stdlib — so unlike JPEG/MP3 (whose arithmetic/Huffman-DCT
-# stages genuinely need an external library) a COMPLETE PNG codec needs
-# no new dependency. Encoder writes filter-0 scanlines; decoder
-# implements the full filter set (None/Sub/Up/Average/Paeth, spec §6)
-# so externally-produced 8-bit gray/RGB PNGs decode too, not just our
-# own output. The stub boundary is now: JPEG, MP3/AAC, video.
+# the Python stdlib, so a COMPLETE PNG codec needs no new dependency.
+# Encoder writes filter-0 scanlines; decoder implements the full filter
+# set (None/Sub/Up/Average/Paeth, spec §6) so externally-produced 8-bit
+# gray/RGB PNGs decode too, not just our own output.
 # --------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -843,6 +802,7 @@ def _paeth(a: int, b: int, c: int) -> int:
     return c
 
 
+@_decode_errors_as_value_error
 def parse_png(payload: bytes):
     """Decode PNG bytes → (h, w, channels) uint8 numpy array.
 
@@ -925,87 +885,21 @@ def embeddings_as_png(
     emb: DataFrame, w: int = 8, h: int = 8,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Render each embedding as a real PNG (same quantization as
-    embeddings_as_netpbm: px = floor(clip((x+1)/2, 0, 1) · 255)) — a
-    deterministic image corpus from driver data so the REAL
-    entropy-coded decode path gets a full value oracle."""
-    import numpy as np
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, nb = [], []
-            for vec in pdf[vec_col]:
-                v = np.asarray(vec, dtype=np.float64)[: w * h]
-                px = np.floor(np.clip((v + 1.0) / 2.0, 0.0, 1.0) * 255.0)
-                p = make_png(px.astype(np.uint8).reshape(h, w))
-                payloads.append(p)
-                nb.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "width": pd.array([w] * len(pdf), dtype="Int32"),
-                    "height": pd.array([h] * len(pdf), dtype="Int32"),
-                    "n_bytes": pd.array(nb, dtype="Int64"),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(_encode, schema=MEDIA_SCHEMA)
+    """Render each embedding as a real PNG (:func:`_embeddings_as_image`)
+    so the entropy-coded decode path gets a full value oracle."""
+    return _embeddings_as_image(emb, w, h, id_col, vec_col, make_png, "image/png")
 
 
 def png_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL-decode summary for PNG payloads with exact-integer outputs
-    (oracle-friendly): per item (media_id, width, height, px_sum,
-    px_min, px_max) from the actually-inflated, unfiltered raster.
-    Malformed payloads → NULL stats. Same contract as
-    netpbm_pixel_stats, different codec underneath."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums, mins, maxs = [], [], [], [], []
-            for payload in pdf["payload"]:
-                try:
-                    img = parse_png(payload)
-                    hh, ww, _ = img.shape
-                    flat = img.astype(np.int64)
-                    ws.append(ww)
-                    hs.append(hh)
-                    sums.append(int(flat.sum()))
-                    mins.append(int(flat.min()))
-                    maxs.append(int(flat.max()))
-                except (ValueError, zlib.error, struct.error):
-                    ws.append(None); hs.append(None)
-                    sums.append(None); mins.append(None); maxs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "px_sum": pd.array(sums, dtype="Int64"),
-                    "px_min": pd.array(mins, dtype="Int32"),
-                    "px_max": pd.array(maxs, dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, width int, height int, "
-            "px_sum long, px_min int, px_max int"
-        ),
-    )
+    """REAL-decode pixel summary of PNG payloads, from the inflated,
+    unfiltered raster (:func:`_pixel_stats`)."""
+    return _pixel_stats(media, parse_png)
 
 
 # --------------------------------------------------------------------------
 # JPEG — baseline sequential DCT, grayscale profile (ITU T.81). Real
 # entropy-coded codec: huffman + zigzag + quantized DCT on encode,
-# marker walk + huffman decode + dequant + IDCT on decode. Retires the
-# former JPEG stub boundary the way parse_png retired PNG's. Reference
+# marker walk + huffman decode + dequant + IDCT on decode. Reference
 # parity note: the reference (alphalens) has no media surface at all —
 # this is extension territory for the LLM-pipeline mandate.
 # --------------------------------------------------------------------------
@@ -1276,6 +1170,7 @@ def _jpeg_extend(bits: int, size: int) -> int:
     return bits
 
 
+@_decode_errors_as_value_error
 def parse_jpeg(payload: bytes):
     """Decode baseline sequential grayscale JPEG bytes → (h, w, 1)
     uint8 array: marker walk (DQT/SOF0/DHT/SOS), huffman decode of the
@@ -1362,6 +1257,11 @@ def parse_jpeg(payload: bytes):
     end = data.rfind(b"\xff\xd9")
     if end < 0:
         raise ValueError("missing EOI")
+    # every 8×8 block costs at least two code bits (one DC code, one AC
+    # code), so a corrupted SOF size fails here, before the raster is
+    # allocated
+    if ((h + 7) // 8) * ((w + 7) // 8) * 2 > 8 * (end - pos):
+        raise ValueError("entropy stream too short for the frame size")
     br = _BitReader(data[pos:end])
 
     cosb = _jpeg_cos_basis()
@@ -1412,76 +1312,15 @@ def embeddings_as_jpeg(
     emb: DataFrame, w: int = 8, h: int = 8,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Render each embedding as a real baseline JPEG (same quantization
-    as embeddings_as_netpbm/png: px = floor(clip((x+1)/2, 0, 1) · 255))
-    — a deterministic image corpus from driver data so the REAL
-    huffman+DCT decode path gets a full value oracle."""
-    import numpy as np
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, nb = [], []
-            for vec in pdf[vec_col]:
-                v = np.asarray(vec, dtype=np.float64)[: w * h]
-                px = np.floor(np.clip((v + 1.0) / 2.0, 0.0, 1.0) * 255.0)
-                p = make_jpeg(px.astype(np.uint8).reshape(h, w))
-                payloads.append(p)
-                nb.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "width": pd.array([w] * len(pdf), dtype="Int32"),
-                    "height": pd.array([h] * len(pdf), dtype="Int32"),
-                    "n_bytes": pd.array(nb, dtype="Int64"),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(_encode, schema=MEDIA_SCHEMA)
+    """Render each embedding as a real baseline JPEG
+    (:func:`_embeddings_as_image`) so the huffman+DCT decode path gets a
+    full value oracle."""
+    return _embeddings_as_image(emb, w, h, id_col, vec_col, make_jpeg, "image/jpeg")
 
 
 def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL-decode summary for JPEG payloads with exact-integer outputs
-    (oracle-friendly): per item (media_id, width, height, px_sum,
-    px_min, px_max) from the huffman-decoded, dequantized, IDCT'd
-    raster. Malformed payloads → NULL stats. Same contract as
-    png_pixel_stats / netpbm_pixel_stats, third codec underneath — and
-    the only LOSSY one, so the oracle must replay quantization, not
-    just re-derive source pixels."""
-    import numpy as np
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums, mins, maxs = [], [], [], [], []
-            for payload in pdf["payload"]:
-                try:
-                    img = parse_jpeg(payload)
-                    hh, ww, _ = img.shape
-                    flat = img.astype(np.int64)
-                    ws.append(ww)
-                    hs.append(hh)
-                    sums.append(int(flat.sum()))
-                    mins.append(int(flat.min()))
-                    maxs.append(int(flat.max()))
-                except ValueError:
-                    ws.append(None); hs.append(None)
-                    sums.append(None); mins.append(None); maxs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "px_sum": pd.array(sums, dtype="Int64"),
-                    "px_min": pd.array(mins, dtype="Int32"),
-                    "px_max": pd.array(maxs, dtype="Int32"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, width int, height int, "
-            "px_sum long, px_min int, px_max int"
-        ),
-    )
+    """REAL-decode pixel summary of JPEG payloads, from the
+    huffman-decoded, dequantized, IDCT'd raster (:func:`_pixel_stats`).
+    JPEG is the only LOSSY codec here, so its oracle replays the
+    quantization instead of re-deriving the source pixels."""
+    return _pixel_stats(media, parse_jpeg)

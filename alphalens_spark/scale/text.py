@@ -10,13 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.scale.dedup import _tokens
 from alphalens_spark.session import checkpoint
 
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "in", "is"]
-
-
-def _tokens(text_col: str = "text") -> F.Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def unigram_bigram_features(text_col: str = "text") -> F.Column:

@@ -1448,11 +1448,11 @@ def holt_store_update(
     identical operation sequence the full fold does. Unseen keys start
     fresh (level = x₀, trend = 0). Untouched store keys pass through.
     """
+    from alphalens_spark.performance import _holt_step
+
     if batch_df.isEmpty():
         return
     keys = list(key_cols)
-    oma = 1.0 - alpha
-    omb = 1.0 - beta
     snap = batch_df.select(
         *keys,
         F.col(order_col).alias("_o"),
@@ -1484,20 +1484,6 @@ def holt_store_update(
         F.first("trend", ignorenulls=True).alias("_b0"),
     )
 
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)
-        new_l = x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
-        new_b = (
-            x["v"] * F.lit(alpha) + (prev["l"] + prev["b"]) * F.lit(oma)
-            - prev["l"]
-        ) * F.lit(beta) + prev["b"] * F.lit(omb)
-        return F.when(
-            F.size(acc) == 0,
-            F.array(F.struct(x["v"].alias("l"), F.lit(0.0).alias("b"))),
-        ).otherwise(
-            F.concat(acc, F.array(F.struct(new_l.alias("l"), new_b.alias("b"))))
-        )
-
     seed = F.when(
         F.col("_l0").isNotNull(),
         F.array(F.struct(F.col("_l0").alias("l"), F.col("_b0").alias("b"))),
@@ -1505,7 +1491,9 @@ def holt_store_update(
     folded = arr.select(
         *keys,
         F.element_at("xs", -1)["o"].alias("last_o"),
-        F.element_at(F.aggregate(F.col("xs"), seed, _step), -1).alias("_st"),
+        F.element_at(
+            F.aggregate(F.col("xs"), seed, _holt_step(alpha, beta)), -1
+        ).alias("_st"),
     ).select(
         *keys,
         "last_o",
@@ -1580,6 +1568,12 @@ def cusum_store_update(
     ended), while the batch op truncates the baseline window instead —
     the equality proof covers keys that complete their baseline.
     """
+    from alphalens_spark.events import (
+        _cusum_limits,
+        _cusum_step,
+        _cusum_zero_state,
+    )
+
     if batch_df.isEmpty():
         return
     keys = list(key_cols)
@@ -1646,18 +1640,12 @@ def cusum_store_update(
         F.size(combined) >= baseline,
         F.round(base_sum / F.lit(baseline)).cast("long"),
     )
+    k_new, h_new = _cusum_limits(mu_new, drift_frac, threshold_frac)
     mu_eff = F.coalesce(F.col("_mu0"), mu_new)
-    k_eff = F.coalesce(
-        F.col("_k0"),
-        F.round(F.abs(mu_new) * F.lit(drift_frac)).cast("long"),
-    )
-    h_eff = F.coalesce(
-        F.col("_h0"),
-        F.round(F.abs(mu_new) * F.lit(threshold_frac)).cast("long"),
-    )
+    k_eff = F.coalesce(F.col("_k0"), k_new)
+    h_eff = F.coalesce(F.col("_h0"), h_new)
     # established keys fold only their new rows; freshly-completed
     # baselines fold the whole buffered history from the zero seed
-    zero = F.lit(0).cast("long")
     fold_input = F.when(F.col("_mu0").isNotNull(), F.col("new")).otherwise(
         F.when(F.size(combined) >= baseline, combined).otherwise(
             F.array().cast(pend_type)
@@ -1670,11 +1658,7 @@ def cusum_store_update(
             F.col("_gn0").alias("gn"),
             F.col("_al0").alias("alarm"),
         ),
-    ).otherwise(
-        F.struct(
-            zero.alias("gp"), zero.alias("gn"), F.lit(0).cast("int").alias("alarm")
-        )
-    )
+    ).otherwise(_cusum_zero_state())
     staged = arr.select(
         *keys,
         combined.alias("_combined"),
@@ -1685,27 +1669,8 @@ def cusum_store_update(
         h_eff.alias("_h"),
     )
 
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)
-        pgp = F.when(prev["alarm"] != 0, zero).otherwise(prev["gp"])
-        pgn = F.when(prev["alarm"] != 0, zero).otherwise(prev["gn"])
-        gp = F.greatest(zero, pgp + (x["v"] - F.col("_mu") - F.col("_k")))
-        gn = F.greatest(zero, pgn + (F.col("_mu") - x["v"] - F.col("_k")))
-        alarm = (
-            F.when(gp > F.col("_h"), F.lit(1))
-            .when(gn > F.col("_h"), F.lit(-1))
-            .otherwise(F.lit(0))
-            .cast("int")
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(gp.alias("gp"), gn.alias("gn"), alarm.alias("alarm"))
-            ),
-        )
-
     final = F.element_at(
-        F.aggregate(F.col("_fold_in"), F.col("_seed"), _step), -1
+        F.aggregate(F.col("_fold_in"), F.col("_seed"), _cusum_step), -1
     )
     folded = staged.select(
         *keys,
@@ -1890,22 +1855,15 @@ def stream_ohlc(
     Output matches the batch op: (bar_ts, by…, open, high, low, close,
     n, volume) with bar_ts = window start.
     """
+    from alphalens_spark.events import _ohlc_aggs
+
     keys = [F.window(ts_col, window).alias("win")] + [
         F.col(c) for c in (by or [])
     ]
-    order = F.struct(F.col(ts_col), F.col(id_col))
-    v = F.col(value_col)
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(*keys)
-        .agg(
-            F.round(F.min_by(v, order), 6).alias("open"),
-            F.round(F.max(v), 6).alias("high"),
-            F.round(F.min(v), 6).alias("low"),
-            F.round(F.max_by(v, order), 6).alias("close"),
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(v), 6).alias("volume"),
-        )
+        .agg(*_ohlc_aggs(ts_col, value_col, id_col))
         .select(
             F.col("win.start").alias("bar_ts"),
             *[F.col(c) for c in (by or [])],
@@ -2070,34 +2028,10 @@ def ab_store_ztest(spark: SparkSession, store_path: str) -> DataFrame:
     counts and the pooled two-proportion z per variant pair — identical
     output contract to the batch :func:`alphalens_spark.events.
     ab_test_ztest` (incremental == one-shot tested)."""
+    from alphalens_spark.events import _ab_readout
+
     per_user = spark.read.parquet(store_path).where(F.col("exposed") == 1)
-    pv = per_user.groupBy("variant").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("conv")
-    )
-    a = pv.select(
-        F.col("variant").alias("variant_a"),
-        F.col("n").alias("n_a"),
-        F.col("conv").alias("conv_a"),
-    )
-    b = pv.select(
-        F.col("variant").alias("variant_b"),
-        F.col("n").alias("n_b"),
-        F.col("conv").alias("conv_b"),
-    )
-    j = a.join(b, F.col("variant_a") < F.col("variant_b"))
-    p_a = F.col("conv_a") / F.col("n_a")
-    p_b = F.col("conv_b") / F.col("n_b")
-    pool = (F.col("conv_a") + F.col("conv_b")) / (F.col("n_a") + F.col("n_b"))
-    z = F.try_divide(
-        p_a - p_b,
-        F.sqrt(pool * (1 - pool) * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))),
-    )
-    return j.select(
-        "variant_a", "variant_b", "n_a", "conv_a", "n_b", "conv_b",
-        (F.round(p_a, 6) + F.lit(0.0)).alias("rate_a"),
-        (F.round(p_b, 6) + F.lit(0.0)).alias("rate_b"),
-        (F.round(z, 6) + F.lit(0.0)).alias("z"),
-    )
+    return _ab_readout(per_user, "conv")
 
 
 def stream_ab(

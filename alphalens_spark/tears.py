@@ -229,11 +229,11 @@ def create_corpus_tear_sheet(
     from pyspark.sql import functions as F
 
     from alphalens_spark.scale.curation import corpus_report
-    from alphalens_spark.scale.dedup import cross_source_dup_matrix
+    from alphalens_spark.scale.dedup import _tokens, cross_source_dup_matrix
     from alphalens_spark.scale.profile import column_entropy
     from alphalens_spark.scale.text import quality_score, tfidf_top_terms
 
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = _tokens(text_col)
     k = 8
     shingles = F.when(
         F.size(toks) >= k,

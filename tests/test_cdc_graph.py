@@ -235,6 +235,35 @@ def test_pagerank_dangling_mass_redistributes(spark):
     for n in want:
         assert abs(got[n] - want[n]) < 1e-12, n
     assert abs(sum(got.values()) - 1.0) < 1e-12
+    # no edges at all: an empty (node, pagerank) frame on the driver
+    # path and on the distributed path, not a ZeroDivisionError
+    empty = spark.createDataFrame([], "src string, dst string, w double")
+    for small_graph_edges in (500_000, 0):
+        out = graph.pagerank(
+            empty, n_iter=10, weight_col="w", small_graph_edges=small_graph_edges
+        )
+        assert out.columns == ["node", "pagerank"]
+        assert out.collect() == []
+
+
+def test_pagerank_driver_path_memory_is_linear_in_edges(spark):
+    """The driver path iterates over edge arrays: a 3,000-node path
+    graph must not allocate dense n×n matrices (two float64 3000² arrays
+    are ~144 MB)."""
+    import tracemalloc
+
+    n = 3000
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    tracemalloc.start()
+    try:
+        out = graph.pagerank(df, n_iter=3)  # 2,999 edges → driver path
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out.count() == n
+    assert peak < 32 * 2**20, f"driver path peak {peak / 2**20:.1f} MB"
 
 
 def test_pagerank_unweighted_counts_parallel_edges(spark):

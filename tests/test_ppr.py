@@ -100,6 +100,14 @@ def test_ppr_zero_weight_seeds_raise(spark, edges_df):
             edges_df, weight_col="weight", personalization=sdf,
             small_graph_edges=0,
         ).collect()
+    # an empty edge list has no node to seed, on either path
+    empty = spark.createDataFrame([], "src string, dst string, weight double")
+    for small_graph_edges in (500_000, 0):
+        with pytest.raises(ValueError, match="zero total weight"):
+            pagerank(
+                empty, weight_col="weight", personalization=sdf,
+                small_graph_edges=small_graph_edges,
+            ).collect()
 
 
 def test_ppr_duplicate_seed_rows_accumulate(spark, edges_df):

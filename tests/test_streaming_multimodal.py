@@ -119,15 +119,6 @@ def test_decode_and_featurize_deterministic(spark):
     assert abs(sum(feats[0]) - 1.0) < 1e-6      # L1-normalized histogram
 
 
-def test_decode_real_decoder_is_stubbed(spark):
-    media = multimodal.documents_as_media(_docs(spark))
-    try:
-        multimodal.decode_and_featurize(media, decoder="pil")
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
-
-
 def test_sample_frames(spark):
     media = multimodal.documents_as_media(_docs(spark))
     frames = multimodal.sample_frames(media, every_n_bytes=1024, max_frames=4)
@@ -255,10 +246,6 @@ def test_resize_media_fixed_output_size(spark):
     for r in out:
         assert r["n_bytes"] == 8 * 4 and len(r["payload"]) == 32
         assert (r["width"], r["height"]) == (8, 4)
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        resize_media(documents_as_media(docs), resizer="pil").collect()
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):
@@ -511,6 +498,46 @@ def test_png_pixel_stats_spark(spark):
     assert got[99]["px_sum"] is None and got[99]["width"] is None
 
 
+def test_parsers_raise_value_error_on_any_malformed_payload():
+    """Seeded fuzz over the five real decoders: 400 truncations or
+    3-byte corruptions of a valid payload each. A decoder either decodes
+    or raises ValueError — never IndexError / struct.error / zlib.error,
+    which the stats kernels do not catch and which would fail the whole
+    Spark task instead of nulling one row."""
+    import random
+
+    import numpy as np
+
+    ramp = (np.arange(64).reshape(8, 8) * 4).astype(np.uint8)
+    cases = {
+        "netpbm": (multimodal.make_netpbm(ramp), multimodal.parse_netpbm),
+        "bmp": (multimodal.make_bmp(ramp), multimodal.parse_bmp),
+        "png": (multimodal.make_png(ramp), multimodal.parse_png),
+        "jpeg": (multimodal.make_jpeg(ramp), multimodal.parse_jpeg),
+        "wav": (
+            multimodal.make_wav(np.arange(-32, 32) * 1000), multimodal.parse_wav
+        ),
+    }
+    for name, (good, parse) in cases.items():
+        rng = random.Random(7)
+        for i in range(400):
+            if i % 2 == 0:
+                bad = good[: rng.randrange(len(good))]
+            else:
+                b = bytearray(good)
+                for _ in range(3):
+                    b[rng.randrange(len(b))] = rng.randrange(256)
+                bad = bytes(b)
+            try:
+                parse(bad)
+            except ValueError:
+                pass
+            except Exception as e:  # noqa: BLE001 — the assertion itself
+                raise AssertionError(
+                    f"parse_{name} raised {type(e).__name__} on mutation {i}"
+                ) from e
+
+
 def test_tws_running_stats_guarded_or_matches_batch(spark):
     """Spark-4 arbitrary-stateful-v2 surface (transformWithStateInPandas
     + typed ValueState): in environments without the protobuf package
@@ -649,6 +676,10 @@ def test_jpeg_pixel_stats_spark(spark):
     payloads = {i: multimodal.make_jpeg(img) for i, img in imgs.items()}
     rows = [(i, bytearray(p)) for i, p in payloads.items()]
     rows.append((99, bytearray(b"not a jpeg")))
+    # a truncated stream (cut inside the DHT segment) is malformed data
+    # too: NULL stats for its row, the other rows still decode
+    ramp = (np.arange(64).reshape(8, 8) * 4).astype(np.uint8)
+    rows.append((98, bytearray(multimodal.make_jpeg(ramp)[:165])))
     media = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {
         r["media_id"]: r for r in multimodal.jpeg_pixel_stats(media).collect()
@@ -660,3 +691,44 @@ def test_jpeg_pixel_stats_spark(spark):
         assert got[i]["px_min"] == int(local.min())
         assert got[i]["px_max"] == int(local.max())
     assert got[99]["px_sum"] is None and got[99]["width"] is None
+    assert got[98]["px_sum"] is None and got[98]["width"] is None
+
+
+def test_parsers_raise_value_error_on_any_malformed_payload():
+    """Seeded fuzz over the five real decoders: 400 truncations or
+    3-byte corruptions of a valid payload each. A decoder either decodes
+    or raises ValueError — never IndexError / struct.error / zlib.error,
+    which the stats kernels do not catch and which would fail the whole
+    Spark task instead of nulling one row."""
+    import random
+
+    import numpy as np
+
+    ramp = (np.arange(64).reshape(8, 8) * 4).astype(np.uint8)
+    cases = {
+        "netpbm": (multimodal.make_netpbm(ramp), multimodal.parse_netpbm),
+        "bmp": (multimodal.make_bmp(ramp), multimodal.parse_bmp),
+        "png": (multimodal.make_png(ramp), multimodal.parse_png),
+        "jpeg": (multimodal.make_jpeg(ramp), multimodal.parse_jpeg),
+        "wav": (
+            multimodal.make_wav(np.arange(-32, 32) * 1000), multimodal.parse_wav
+        ),
+    }
+    for name, (good, parse) in cases.items():
+        rng = random.Random(7)
+        for i in range(400):
+            if i % 2 == 0:
+                bad = good[: rng.randrange(len(good))]
+            else:
+                b = bytearray(good)
+                for _ in range(3):
+                    b[rng.randrange(len(b))] = rng.randrange(256)
+                bad = bytes(b)
+            try:
+                parse(bad)
+            except ValueError:
+                pass
+            except Exception as e:  # noqa: BLE001 — the assertion itself
+                raise AssertionError(
+                    f"parse_{name} raised {type(e).__name__} on mutation {i}"
+                ) from e

@@ -12,6 +12,10 @@ the re-rounding comparator is now opt-in (ORACLE_CHECK_LOOSE=1) for
 debugging only — a query that needs it to pass is NOT done.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
+The Spark session is sized to this host unless SPARK_GRAFT_CPUS /
+SPARK_DRIVER_MEMORY say otherwise: the cores this process may run on,
+and a driver heap of at most a quarter of physical memory (so two
+sweeps side by side fit in memory).
 Set ORACLE_CHECK_TIME=1 to append per-query spark/oracle wall times —
 the numbers that decide which oracles need cheapening for the driver's
 per-round budget (round 3 found one 700 s oracle this way).
@@ -106,17 +110,26 @@ def value_hash(cols, rows):
     return h.hexdigest()[:16]
 
 
+def size_session_to_host() -> None:
+    """Default SPARK_GRAFT_CPUS to the usable cores and cap
+    SPARK_DRIVER_MEMORY at a quarter of physical memory (never above the
+    session's 16g default); an explicit setting of either wins."""
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{min(phys_mb // 4, 16 * 1024)}m")
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    size_session_to_host()
     import __spark_entry__ as entry_mod
     from alphalens_spark.session import get_spark
 
     spark = get_spark("oracle_check")
     con = duckdb_connect_views(sf_dir)
 
-    import os
     import time
 
     timing = os.environ.get("ORACLE_CHECK_TIME") == "1"
