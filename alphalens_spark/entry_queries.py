@@ -144,7 +144,7 @@ def _stream_roundtrip(
     sf_dir: str,
     prefix: str,
     src_df: DataFrame,
-    start_fn,
+    step,
     n_files: int = 1,
     seed: DataFrame | None = None,
     split_col: str | None = None,
@@ -157,11 +157,14 @@ def _stream_roundtrip(
     incremental run; ``n_files == 1`` → coalesce(1), the single-batch
     form for stores whose arrival contract an unordered file listing
     cannot honor), optionally pre-seed the store (``seed`` — the CDC
-    base snapshot), run ``start_fn(stream_df, store_path, checkpoint)``
+    base snapshot), run ``step(batch_df, store_path)`` on every
+    micro-batch under :func:`streaming.ops.stream_store` (AvailableNow)
     to completion, and return the store path for the readout.
     Review-extracted: 13 certification queries each carried this
     ~10-line block; a scaffold change now lands once."""
     import shutil
+
+    from alphalens_spark.streaming.ops import stream_store
 
     root = _roundtrip_path(prefix, sf_dir)
     src, store, ck = f"{root}/src", f"{root}/store", f"{root}/ck"
@@ -182,7 +185,9 @@ def _stream_roundtrip(
         reader = spark.readStream.schema(src_df.schema).option(
             "maxFilesPerTrigger", 1
         )
-        q = start_fn(reader.parquet(f"{src}/b*"), store, ck)
+        q = stream_store(
+            reader.parquet(f"{src}/b*"), ck, step, store, available_now=True
+        )
         _await_done(q, prefix)
         return store
     if n_files == 1:
@@ -199,7 +204,7 @@ def _stream_roundtrip(
     reader = spark.readStream.schema(src_df.schema)
     if n_files > 1:
         reader = reader.option("maxFilesPerTrigger", 1)
-    q = start_fn(reader.parquet(src), store, ck)
+    q = stream_store(reader.parquet(src), ck, step, store, available_now=True)
     _await_done(q, prefix)
     return store
 
@@ -1598,33 +1603,22 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-dup suppression (foreachBatch incremental
-    MinHash-LSH vs a persisted signature store, md5 shingle variant) run
-    to completion over the documents parquet: returns the ADMITTED doc
-    ids. Single availableNow batch → the keeper rule is min-id per
-    near-dup cluster, which the oracle replays as the recursive-CTE
-    transitive closure over the same LSH pairs."""
-    import shutil
-    import tempfile
+    """STREAMING near-dup suppression (streaming.minhash_store_update:
+    incremental MinHash-LSH vs a persisted signature store, md5 shingle
+    variant) run to completion over the documents parquet: returns the
+    ADMITTED doc ids. Single availableNow batch → the keeper rule is
+    min-id per near-dup cluster, which the oracle replays as the
+    recursive-CTE transitive closure over the same LSH pairs."""
+    from alphalens_spark.streaming.ops import minhash_store_update
 
-    from alphalens_spark.streaming.ops import stream_dedup_minhash
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/documents.*")
-    tmp = tempfile.mkdtemp(prefix="stream_neardup_")
-    try:
-        q = stream_dedup_minhash(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            f"{tmp}/ckpt",
-            threshold=0.5,
-            shingle_hash="md5",
-        ).start()
-        _await_done(q, "stream_dedup_minhash")
-        kept = [r["doc_id"] for r in spark.read.parquet(f"{tmp}/out").select("doc_id").collect()]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    store = _stream_roundtrip(
+        spark, sf_dir, "neardup_stream", docs,
+        lambda b, p: minhash_store_update(
+            b, p, f"{p}/out", threshold=0.5, shingle_hash="md5"
+        ),
+    )
+    kept = [r["doc_id"] for r in spark.read.parquet(f"{store}/out").select("doc_id").collect()]
     return spark.createDataFrame([(int(i),) for i in sorted(kept)], "doc_id bigint")
 
 
@@ -4244,7 +4238,7 @@ def q_stream_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HyperLogLog register store (store #16, the element-wise
     MAX algebra) certified end-to-end — GENUINELY multi-batch (4 source
     files, one per micro-batch): the document stream maintains per-source
-    registers via streaming.stream_hll_maintenance; the
+    registers via streaming.hll_store_update; the
     hll_store_estimate readout must equal the one-shot batch
     hll_distinct SQL exactly — register max over disjoint histories IS
     the register of the concatenated history, so the maintained store is
@@ -4252,7 +4246,7 @@ def q_stream_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition family, replaying a batch cannot inflate it)."""
     from alphalens_spark.streaming.ops import (
         hll_store_estimate,
-        stream_hll_maintenance,
+        hll_store_update,
     )
 
     docs = datasets.load_table(spark, sf_dir, "documents").select(
@@ -4260,10 +4254,7 @@ def q_stream_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "hll_stream", docs,
-        lambda st, sp, ck: stream_hll_maintenance(
-            st, sp, ck, group_col="source", value_col="text", p=6,
-            available_now=True,
-        ),
+        lambda b, sp: hll_store_update(b, sp, ["source"], "text", p=6),
         n_files=4,
     )
     return _finalize(hll_store_estimate(spark, store, ["source"], p=6))
@@ -5724,7 +5715,7 @@ def q_heavy_hitters_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cormode & Muthukrishnan 2005 §4). Top-k plans as
     TakeOrderedAndProject, never a global window; the salted-md5 sketch
     and every estimate replay in SQL. Streaming twin:
-    streaming.ops.stream_heavy_hitters (CM store + bounded candidates).
+    streaming.ops.hh_store_update (CM store + bounded candidates).
     """
     from alphalens_spark.scale.profile import heavy_hitters
     from alphalens_spark.scale.text import _tokens
@@ -6530,22 +6521,21 @@ FROM agg"""
 def q_stream_cusum_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming store #14 certified end-to-end: the per-event-type
     daily series streams (availableNow) through
-    streaming.stream_cusum's foreachBatch store maintenance, and the
+    streaming.cusum_store_update under stream_store, and the
     resulting parquet state store is compared against the BATCH CUSUM
     recursion's final row per key (recursive-CTE oracle) — the
     all-integer recursion makes store == batch exact, so the store
     VALUES carry a full oracle, not a rows-only check. Replay-safe:
     re-running against an existing store is a no-op (the monotone
     last_o filter drops already-folded rows)."""
-    from alphalens_spark.streaming.ops import stream_cusum
+    from alphalens_spark.streaming.ops import cusum_store_update
 
     daily = _daily_event_value_e4(spark, sf_dir)
     store = _stream_roundtrip(
         spark, sf_dir, "cusum_stream", daily,
-        lambda st, p, ck: stream_cusum(
-            st, p, ck, ["event_type"], "value_e4", "day",
+        lambda b, p: cusum_store_update(
+            b, p, ["event_type"], "value_e4", "day",
             baseline=7, drift_frac=0.05, threshold_frac=0.5,
-            available_now=True,
         ),
     )
     return spark.read.parquet(store).select(
@@ -6752,20 +6742,19 @@ FROM cum CROSS JOIN tot t GROUP BY t.n1, t.n2"""
 def q_stream_holt_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Holt smoothing store (#13) certified end-to-end: each
     event type's daily 1e-4-integer value series streams through
-    streaming.stream_holt's foreachBatch maintenance; the final
+    streaming.holt_store_update under stream_store; the final
     (level, trend) per key must equal the batch holt_linear recursion's
     last row, replayed here as a recursive-CTE oracle. The fold is a
     pinned multiply-add sequence on exact-integer inputs, so store ==
     batch is BIT-exact; export in 1e-6 units via round(x·1e6) (the
     cross-engine-stable form — see holt_factor)."""
-    from alphalens_spark.streaming.ops import stream_holt
+    from alphalens_spark.streaming.ops import holt_store_update
 
     daily = _daily_event_value_e4(spark, sf_dir)
     store = _stream_roundtrip(
         spark, sf_dir, "holt_stream", daily,
-        lambda st, p, ck: stream_holt(
-            st, p, ck, ["event_type"], "value_e4", "day",
-            alpha=0.5, beta=0.3, available_now=True,
+        lambda b, p: holt_store_update(
+            b, p, ["event_type"], "value_e4", "day", alpha=0.5, beta=0.3
         ),
     )
     return spark.read.parquet(store).select(
@@ -6820,7 +6809,7 @@ def q_stream_hist_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     range."""
     from alphalens_spark.streaming.ops import (
         hist_store_quantiles,
-        stream_histogram,
+        hist_store_update,
     )
 
     li = datasets.load_table(spark, sf_dir, "lineitem").select(
@@ -6828,9 +6817,8 @@ def q_stream_hist_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "hist_stream", li,
-        lambda st, p, ck: stream_histogram(
-            st, p, ck, "l_extendedprice", lo=0.0, hi=110000.0, bins=64,
-            available_now=True,
+        lambda b, p: hist_store_update(
+            b, p, "l_extendedprice", lo=0.0, hi=110000.0, bins=64
         ),
         n_files=4,
     )
@@ -6872,7 +6860,7 @@ FROM pj WHERE rn = 1"""
 def q_stream_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD2 store certified end-to-end: the per-user daily
     state snapshots (same derivation as `scd2_user_state`) stream
-    through streaming.stream_scd2's foreachBatch maintenance and the
+    through streaming.scd2_store_update under stream_store and the
     resulting dimension store is value-compared against the batch
     scd2_from_snapshots SQL — store == batch is the op's contract.
     GENUINELY multi-batch as of round 8: SCD2's arrival contract is
@@ -6881,7 +6869,7 @@ def q_stream_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint day into two sequentially-written source files drained one
     per micro-batch in time order (the midpoint is a 1-row bounded
     collect, the scalar contract)."""
-    from alphalens_spark.streaming.ops import stream_scd2
+    from alphalens_spark.streaming.ops import scd2_store_update
 
     ev = datasets.load_table(spark, sf_dir, "events")
     snap = (
@@ -6897,9 +6885,7 @@ def q_stream_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         mid = lo + (hi - lo) / 2
         store = _stream_roundtrip(
             spark, sf_dir, "scd2_stream", snap,
-            lambda st, p, ck: stream_scd2(
-                st, p, ck, ["user_id"], ["state"], "day", available_now=True
-            ),
+            lambda b, p: scd2_store_update(b, p, ["user_id"], ["state"], "day"),
             ordered_splits=[
                 snap.where(F.col("day") <= F.lit(mid)),
                 snap.where(F.col("day") > F.lit(mid)),
@@ -6925,15 +6911,13 @@ def q_stream_heavy_hitters_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch heavy_hitters SQL (`heavy_hitters_terms`'s oracle): CM merge
     is exact, and top-20 survives the k·slack=160 candidate prune."""
     from alphalens_spark.scale.text import _tokens
-    from alphalens_spark.streaming.ops import hh_store_topk, stream_heavy_hitters
+    from alphalens_spark.streaming.ops import hh_store_topk, hh_store_update
 
     docs = datasets.load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(_tokens("text")).alias("tok"))
     store = _stream_roundtrip(
         spark, sf_dir, "hh_stream", toks,
-        lambda st, p, ck: stream_heavy_hitters(
-            st, p, ck, "tok", k=20, depth=4, width=512, available_now=True
-        ),
+        lambda b, p: hh_store_update(b, p, "tok", k=20, depth=4, width=512),
         n_files=4,
     )
     return hh_store_topk(spark, store, k=20, depth=4, width=512)
@@ -6946,14 +6930,14 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC snapshot store certified end-to-end: the store is
     SEEDED with the `customer` base snapshot, then the (op, seq)
     changelog (same derivation as `apply_cdc`) streams through
-    streaming.stream_apply_cdc — the resulting store must equal the
+    streaming.cdc_store_update — the resulting store must equal the
     one-shot batch apply_cdc(base, whole_feed) SQL. GENUINELY
     multi-batch as of round 8: the arrival contract is per-key
     seq-monotone ACROSS batches, satisfied by the scaffold's
     ordered_splits form — the changelog splits at its median seq into
     two sequentially-written source files drained one per micro-batch
     in seq order."""
-    from alphalens_spark.streaming.ops import stream_apply_cdc
+    from alphalens_spark.streaming.ops import cdc_store_update
 
     cust = datasets.load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -6979,9 +6963,7 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()[0]
         store = _stream_roundtrip(
             spark, sf_dir, "cdc_stream", changes,
-            lambda st, p, ck: stream_apply_cdc(
-                st, p, ck, ["c_custkey"], available_now=True
-            ),
+            lambda b, p: cdc_store_update(b, p, ["c_custkey"]),
             seed=cust,
             ordered_splits=[
                 changes.where(F.col("seq") <= F.lit(int(mid_seq))),
@@ -7005,16 +6987,15 @@ def q_stream_reservoir_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot weighted_priority_sample of the whole corpus exactly
     (`weighted_sample`'s oracle), independent of how the stream was
     batched."""
-    from alphalens_spark.streaming.ops import stream_weighted_sample
+    from alphalens_spark.streaming.ops import sample_store_update
 
     docs = datasets.load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
     store = _stream_roundtrip(
         spark, sf_dir, "reservoir_stream", docs,
-        lambda st, p, ck: stream_weighted_sample(
-            st, p, ck, "n_chars", k=5, group_cols=["source"],
-            available_now=True,
+        lambda b, p: sample_store_update(
+            b, p, "n_chars", k=5, group_cols=["source"]
         ),
         n_files=4,
     )
@@ -7032,7 +7013,7 @@ def q_stream_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sketch-maintenance sidecar certified end-to-end — and
     GENUINELY multi-batch (4 source files, one per micro-batch): the
     document stream maintains BOTH mergeable sketches via
-    streaming.stream_sketch_maintenance (CM counters merge by addition,
+    streaming.sketch_store_update (CM counters merge by addition,
     per-source KMV by union→bottom-k); the kmv_store_estimate readout
     (k=16, the estimator branch) must equal the one-shot batch
     kmv_distinct SQL exactly — KMV's merge rule makes the maintained
@@ -7040,7 +7021,7 @@ def q_stream_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from alphalens_spark.streaming.ops import (
         kmv_store_estimate,
-        stream_sketch_maintenance,
+        sketch_store_update,
     )
 
     docs = datasets.load_table(spark, sf_dir, "documents").select(
@@ -7048,10 +7029,9 @@ def q_stream_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "kmv_stream", docs,
-        lambda st, p, ck: stream_sketch_maintenance(
-            st, f"{p}/cm", f"{p}/kmv", ck, item_col="text",
+        lambda b, p: sketch_store_update(
+            b, f"{p}/cm", f"{p}/kmv", item_col="text",
             group_col="source", depth=4, width=512, k=16,
-            available_now=True,
         ),
         n_files=4,
     )
@@ -7078,7 +7058,7 @@ def q_stream_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alphalens_spark.streaming.ops import (
         kmv_store_estimate,
         merge_kmv_stores,
-        stream_sketch_maintenance,
+        sketch_store_update,
     )
 
     docs = datasets.load_table(spark, sf_dir, "documents").select(
@@ -7091,10 +7071,9 @@ def q_stream_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores = [
         _stream_roundtrip(
             spark, sf_dir, f"kmvc_g{i}", half,
-            lambda st, p, ck: stream_sketch_maintenance(
-                st, f"{p}/cm", f"{p}/kmv", ck, item_col="text",
+            lambda b, p: sketch_store_update(
+                b, f"{p}/cm", f"{p}/kmv", item_col="text",
                 group_col="source", depth=4, width=512, k=16,
-                available_now=True,
             ),
             n_files=2,
         )
@@ -7124,7 +7103,7 @@ def q_stream_bloom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch."""
     from alphalens_spark.streaming.ops import (
         bloom_store_prefilter,
-        stream_bloom,
+        bloom_store_update,
     )
 
     cust = (
@@ -7134,9 +7113,7 @@ def q_stream_bloom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "bloom_stream", cust,
-        lambda st, p, ck: stream_bloom(
-            st, p, ck, ["c_custkey"], available_now=True
-        ),
+        lambda b, p: bloom_store_update(b, p, ["c_custkey"]),
         n_files=4,
     )
     orders = datasets.load_table(spark, sf_dir, "orders").select(
@@ -7161,7 +7138,7 @@ def q_stream_expectations_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation counters merge by addition, so the streamed store must
     equal the one-shot validate_expectations SQL over the whole history
     — the 'has anything EVER violated rule X' gate without reprocessing."""
-    from alphalens_spark.streaming.ops import stream_validate_expectations
+    from alphalens_spark.streaming.ops import expectations_store_update
 
     rules = {
         "qty_in_range": "l_quantity BETWEEN 1 AND 50",
@@ -7176,9 +7153,7 @@ def q_stream_expectations_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "expect_stream", li,
-        lambda st, p, ck: stream_validate_expectations(
-            st, p, ck, rules, available_now=True
-        ),
+        lambda b, p: expectations_store_update(b, p, rules),
         n_files=4,
     )
     return spark.read.parquet(store).select(
@@ -7195,22 +7170,22 @@ ORACLES["stream_expectations_state"] = ORACLES["validate_expectations"]
 def q_stream_cooccurrence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming pair co-occurrence store certified end-to-end: order
     baskets (l_orderkey → distinct l_partkey) stream through
-    streaming.stream_cooccurrence; pair counts merge by addition, so
+    streaming.cooccurrence_store_update; pair counts merge by addition, so
     the store must equal the one-shot batch pair-count SQL. GENUINELY
     multi-batch as of round 8: the store's contract is basket-COMPLETE
     batches (a basket split across micro-batches under-counts its
     cross-batch pairs), which hash-splitting the source files on the
     basket key satisfies — every order lands whole in exactly one of
     the 4 micro-batches, and pair counts then merge by addition."""
-    from alphalens_spark.streaming.ops import stream_cooccurrence
+    from alphalens_spark.streaming.ops import cooccurrence_store_update
 
     li = datasets.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     store = _stream_roundtrip(
         spark, sf_dir, "cooc_stream", li,
-        lambda st, p, ck: stream_cooccurrence(
-            st, p, ck, "l_orderkey", "l_partkey", available_now=True
+        lambda b, p: cooccurrence_store_update(
+            b, p, "l_orderkey", "l_partkey"
         ),
         n_files=4,
         split_col="l_orderkey",
@@ -7235,14 +7210,12 @@ def q_stream_dsir_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbed the whole corpus, dsir_store_weights scored against it
     must equal the one-shot dsir_importance_weights SQL exactly (same
     target domain src0/src1, same 256 buckets)."""
-    from alphalens_spark.streaming.ops import dsir_store_weights, stream_dsir
+    from alphalens_spark.streaming.ops import dsir_store_update, dsir_store_weights
 
     docs = datasets.load_table(spark, sf_dir, "documents")
     store = _stream_roundtrip(
         spark, sf_dir, "dsir_stream", docs.select("doc_id", "text"),
-        lambda st, p, ck: stream_dsir(
-            st, p, ck, n_buckets=256, available_now=True
-        ),
+        lambda b, p: dsir_store_update(b, p, n_buckets=256),
         n_files=4,
     )
     target = docs.where(F.col("source").isin("src0", "src1"))
@@ -7257,14 +7230,14 @@ def q_stream_ivfpq_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch (4 source files, one per micro-batch): quantizers train
     once batch-side (build_ivfpq's deterministic Lloyd + PQ), then the
     embedding stream encodes against the FROZEN quantizers via
-    streaming.stream_index_maintenance. Because encode is a pure
+    streaming.ivfpq_store_update. Because encode is a pure
     function of (vector, quantizers) and adds dedupe by id, the
     streamed index equals the batch-encoded index row-for-row — so
     searching it with the identical ivfpq_topk config must reproduce
     the batch `embedding_ivfpq_topk` output, whose oracle re-derives
     both quantizers in unrolled CTEs."""
     from alphalens_spark.scale.similarity import build_ivfpq, ivfpq_topk
-    from alphalens_spark.streaming.ops import stream_index_maintenance
+    from alphalens_spark.streaming.ops import ivfpq_store_update
 
     emb = datasets.load_table(spark, sf_dir, "embeddings")
     cents, books, _ = build_ivfpq(
@@ -7272,9 +7245,7 @@ def q_stream_ivfpq_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = _stream_roundtrip(
         spark, sf_dir, "ivfpq_stream", emb,
-        lambda st, p, ck: stream_index_maintenance(
-            st, p, ck, cents, books, available_now=True
-        ),
+        lambda b, p: ivfpq_store_update(b, p, cents, books),
         n_files=4,
     )
     queries = emb.where(F.col("vec_id") % 20 == 0).select(
@@ -7301,7 +7272,7 @@ def q_stream_ab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates/z from the store's EXACT integer counts with the same
     micro-unit expressions as the batch query."""
     from alphalens_spark.scale.dedup import md5_long
-    from alphalens_spark.streaming.ops import ab_store_ztest, stream_ab
+    from alphalens_spark.streaming.ops import ab_store_update, ab_store_ztest
 
     ev = datasets.load_table(spark, sf_dir, "events").select(
         "user_id", "event_type"
@@ -7311,9 +7282,7 @@ def q_stream_ab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     store = _stream_roundtrip(
         spark, sf_dir, "ab_stream", ev,
-        lambda st, p, ck: stream_ab(
-            st, p, ck, assignment, available_now=True
-        ),
+        lambda b, p: ab_store_update(b, p, assignment),
         n_files=4,
     )
     # THE shared micro-unit projection (batch and stream alias one
@@ -9394,21 +9363,19 @@ def q_stream_km_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra applied to KM risk sets) certified end-to-end — GENUINELY
     multi-batch (4 source files, one per micro-batch): finished
     subjects stream into per-(priority, t) event/censor counters via
-    streaming.stream_km_maintenance; the km_store_survival readout must
+    streaming.km_store_update; the km_store_survival readout must
     equal the one-shot batch survival_km SQL exactly — the KM curve is
     a pure function of the counters and counters over disjoint subject
     batches sum."""
     from alphalens_spark.streaming.ops import (
         km_store_survival,
-        stream_km_maintenance,
+        km_store_update,
     )
 
     subj = _km_subjects(spark, sf_dir)
     store = _stream_roundtrip(
         spark, sf_dir, "km_stream", subj,
-        lambda st, sp, ck: stream_km_maintenance(
-            st, sp, ck, ["priority"], available_now=True
-        ),
+        lambda b, sp: km_store_update(b, sp, ["priority"]),
         n_files=4,
     )
     return _finalize(km_store_survival(spark, store, ["priority"]))
@@ -11904,18 +11871,20 @@ def q_quantile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     fd = _fd(spark, sf_dir)
     from pyspark.sql import Window
 
-    didx = perf._factor_dates_idx(fd)
+    from alphalens_spark.calendar_ import DAY_IDX, trading_calendar
+
+    didx = trading_calendar(fd)
     cur = fd.select("asset", "date", "factor_quantile").join(
         F.broadcast(didx), "date"
     )
     prev = cur.select(
         F.col("asset").alias("_a"),
-        (F.col("_didx") + 1).alias("_t"),
+        (F.col(DAY_IDX) + 1).alias("_t"),
         F.col("factor_quantile").alias("q_from"),
     )
     moved = cur.join(
         prev,
-        (F.col("asset") == F.col("_a")) & (F.col("_didx") == F.col("_t")),
+        (F.col("asset") == F.col("_a")) & (F.col(DAY_IDX) == F.col("_t")),
     ).select("q_from", F.col("factor_quantile").alias("q_to"))
     counts = moved.groupBy("q_from", "q_to").agg(
         F.count(F.lit(1)).alias("n")

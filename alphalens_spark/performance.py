@@ -18,9 +18,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from alphalens_spark.calendar_ import DAY_IDX
+from alphalens_spark.calendar_ import DAY_IDX, trading_calendar
 from alphalens_spark.session import checkpoint
-from alphalens_spark.utils import demean_forward_returns
+from alphalens_spark.utils import (
+    demean_forward_returns,
+    timedelta_strings_to_integers,
+)
 
 ANNUALIZATION_PERIODS = 252  # trading periods per year for a daily calendar
 
@@ -661,7 +664,7 @@ def factor_alpha_beta(
     )
     joined = returns.join(universe, "date")
     if periods is None:
-        periods = [int("".join(ch for ch in c if ch.isdigit())) for c in period_cols]
+        periods = timedelta_strings_to_integers(period_cols)
     aggs = []
     for c, k in zip(period_cols, periods):
         x, y = F.col(f"u_{c}"), F.col(f"ret_{c}")
@@ -792,23 +795,6 @@ def compute_mean_returns_spread(
     )
 
 
-def _factor_dates_idx(factor_data: DataFrame) -> DataFrame:
-    """Dense 1..N index over the distinct dates present in factor_data.
-
-    The reference's positional ``shift(p)`` runs over the factor date axis
-    (performance.py:592, 635-637); this dim table makes it an equi-join.
-    Tiny (one row per date) → always broadcast. Same
-    collect_set→posexplode shape as calendar_.trading_calendar: dedup +
-    order in one aggregate, no global window (and no WindowExec warning).
-    """
-    return (
-        factor_data.select("date")
-        .agg(F.array_sort(F.collect_set("date")).alias("_ds"))
-        .select(F.posexplode("_ds").alias("_pos", "date"))
-        .select("date", (F.col("_pos") + 1).cast("int").alias("_didx"))
-    )
-
-
 def quantile_turnover(
     factor_data: DataFrame,
     periods: Sequence[int] = (1,),
@@ -824,7 +810,7 @@ def quantile_turnover(
 
     Output: (factor_quantile, period, date, turnover).
     """
-    didx = _factor_dates_idx(factor_data)
+    didx = trading_calendar(factor_data)
     mem = (
         factor_data.select("date", "asset", "factor_quantile")
         .join(F.broadcast(didx), "date")
@@ -841,11 +827,11 @@ def quantile_turnover(
     # and re-derived its own input for the probe side). A row is new to
     # its quantile when the lagged quantile is NULL or different —
     # identical to the former same-quantile left-anti null-match test.
-    w = Window.partitionBy("asset").orderBy("_didx")
+    w = Window.partitionBy("asset").orderBy(DAY_IDX)
     lagged = mem.select(
         "factor_quantile",
         "date",
-        "_didx",
+        DAY_IDX,
         *[
             F.last("factor_quantile")
             .over(w.rangeBetween(-int(p), -int(p)))
@@ -864,9 +850,9 @@ def quantile_turnover(
         )
     ).alias("_s")
     cur = (
-        lagged.select("factor_quantile", "date", "_didx", per)
-        .select("factor_quantile", "date", "_didx", "_s.period", "_s._pq")
-        .where(F.col("_didx") > F.col("period"))
+        lagged.select("factor_quantile", "date", DAY_IDX, per)
+        .select("factor_quantile", "date", DAY_IDX, "_s.period", "_s._pq")
+        .where(F.col(DAY_IDX) > F.col("period"))
     )
     is_new = F.col("_pq").isNull() | (F.col("_pq") != F.col("factor_quantile"))
     return (
@@ -888,7 +874,7 @@ def factor_rank_autocorrelation(
     Spark: avg-rank window per date → self-join on (asset, date_pos - p)
     → per-date Pearson corr of the two rank vectors. No pivot.
     """
-    didx = _factor_dates_idx(factor_data)
+    didx = trading_calendar(factor_data)
     ranked = (
         factor_data.select(
             "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
@@ -901,7 +887,7 @@ def factor_rank_autocorrelation(
     # (asset, didx); this is one asset-keyed exchange, and the inner-join
     # row set is reproduced exactly by dropping rows with no observation
     # p dates back (NULL lag).
-    w = Window.partitionBy("asset").orderBy("_didx").rangeBetween(-period, -period)
+    w = Window.partitionBy("asset").orderBy(DAY_IDX).rangeBetween(-period, -period)
     joined = ranked.withColumn("_prev_rank", F.last("_rank").over(w)).where(
         F.col("_prev_rank").isNotNull()
     )
@@ -1098,7 +1084,7 @@ def rank_autocorr_profile(
     |lags| join exchanges over the same checkpointed frame).
     Output: (period, mean_autocorr, n_dates).
     """
-    didx = _factor_dates_idx(factor_data)
+    didx = trading_calendar(factor_data)
     ranked = (
         factor_data.select(
             "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
@@ -1108,14 +1094,14 @@ def rank_autocorr_profile(
     )
     prev = ranked.select(
         F.col("asset").alias("_a"),
-        F.col("_didx"),
+        F.col(DAY_IDX),
         F.col("_rank").alias("_prev_rank"),
         F.explode(F.array(*[F.lit(int(p)) for p in lags])).alias("_p"),
-    ).select("_a", (F.col("_didx") + F.col("_p")).alias("_t"), "_p", "_prev_rank")
+    ).select("_a", (F.col(DAY_IDX) + F.col("_p")).alias("_t"), "_p", "_prev_rank")
     per_date = (
         ranked.join(
             prev,
-            (F.col("asset") == F.col("_a")) & (F.col("_didx") == F.col("_t")),
+            (F.col("asset") == F.col("_a")) & (F.col(DAY_IDX) == F.col("_t")),
         )
         .groupBy("_p", "date")
         .agg(_corr_safe("_rank", "_prev_rank").alias("_ac"))
@@ -1211,7 +1197,7 @@ def common_start_returns(
     Output: (asset, event_date, offset, cum_ret), or
     (event_date, offset, cum_ret) when mean_by_date.
     """
-    from alphalens_spark.calendar_ import trading_calendar, with_day_idx
+    from alphalens_spark.calendar_ import with_day_idx
 
     cal = calendar if calendar is not None else trading_calendar(prices)
     px = with_day_idx(prices, cal)
@@ -1322,7 +1308,7 @@ def average_cumulative_return_by_quantile(
 
     Output: (factor_quantile, offset, mean_ret, std_ret, count_ret).
     """
-    from alphalens_spark.calendar_ import trading_calendar, with_day_idx
+    from alphalens_spark.calendar_ import with_day_idx
 
     cal = calendar if calendar is not None else trading_calendar(prices)
     px = with_day_idx(prices, cal)
@@ -1495,20 +1481,20 @@ def weight_turnover(
     (date, turnover).
     """
     w = factor_weights(factor_data, demeaned, False, equal_weight)
-    didx = _factor_dates_idx(factor_data)
+    didx = trading_calendar(factor_data)
     wts = w.select("date", "asset", "weights").join(F.broadcast(didx), "date")
     cur = wts.select(
-        "asset", F.col("_didx").alias("_i"), F.col("weights").alias("_w")
+        "asset", F.col(DAY_IDX).alias("_i"), F.col("weights").alias("_w")
     )
     prv = wts.select(
         "asset",
-        (F.col("_didx") + 1).alias("_i"),
+        (F.col(DAY_IDX) + 1).alias("_i"),
         F.col("weights").alias("_wp"),
     )
     grid = cur.join(prv, ["asset", "_i"], "full_outer")
     # the last date's weights also shift to index max+1 (a phantom
     # liquidation date) — keep only real dates via the didx dim
-    real = didx.select(F.col("_didx").alias("_i"), "date")
+    real = didx.select(F.col(DAY_IDX).alias("_i"), "date")
     step = F.abs(
         F.coalesce(F.col("_w"), F.lit(0.0))
         - F.coalesce(F.col("_wp"), F.lit(0.0))

@@ -383,9 +383,9 @@ def unigram_cross_entropy(
     smoothing is the deterministic analogue: gibberish and
     rare-token-soup documents score high, templated text scores low).
 
-    One corpus scan: the (doc, token) tf aggregation is eagerly
-    checkpointed (a construction-time job — the rare_term_overlap_topk
-    precedent) and everything else derives from it. Corpus counts
+    One corpus scan: the (doc, token) tf aggregation is persisted
+    (lazily — the first action on the result fills it, and it is never
+    unpersisted) and everything else derives from it. Corpus counts
     attach via an unordered count window over the token partition
     (c_w = Σ tf over the token's rows — the tfidf_top_terms df lesson:
     the groupBy + join-back form referenced the exploded-token subtree

@@ -12,7 +12,7 @@ per-event-time operators.
 from alphalens_spark.streaming.ops import (  # noqa: F401
     stream_event_counts,
     stream_factor_stats,
-    stream_heavy_hitters,
     stream_running_quantile_counts,
     stream_sessionize,
+    stream_store,
 )

@@ -13,9 +13,8 @@ Two kinds of operator live here.
   a stream has ever delivered. Each store family has
     - a ``*_store_update(batch_df, store_path, ...)`` step, which writes
       ``merge(store ∪ summary(batch))`` back to the store;
-    - a ``stream_*`` starter, which runs that step under ``foreachBatch``
-      and returns the started query (``stream_factor_data_maintenance``
-      and ``stream_dedup_minhash`` return the unstarted writer instead);
+    - no starter of its own: :func:`stream_store` runs any update on
+      every micro-batch of a stream and returns the started query;
     - for most families a ``merge_*_stores`` compaction, which writes
       ``merge(∪ generations)``: the same merge rule, applied across N
       independently-maintained stores;
@@ -141,17 +140,26 @@ def _hll_merge(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
 _BLOOM_MERGE = _agg_by(["word"], F.bit_or, ["bits"])
 
 
-def _start(
+def stream_store(
     stream_df: DataFrame,
-    checkpoint: str,
-    available_now: bool,
-    step: Callable[[DataFrame], None],
+    checkpoint_location: str,
+    update: Callable[..., None],
+    *args,
+    available_now: bool = False,
+    **kwargs,
 ):
-    """Run ``step`` on every micro-batch of ``stream_df`` and return the
-    started query — the shared tail of every ``stream_*`` store starter."""
+    """Run ``update(batch_df, *args, **kwargs)`` on every micro-batch of
+    ``stream_df`` and return the started query — the one starter of
+    every store, e.g.
+    ``stream_store(events, ck, hh_store_update, store_path, k=5)``.
+
+    ``available_now=True`` only for sources that honor
+    Trigger.AvailableNow (file/kafka); Python DataSource streams degrade
+    it to a single batch — drain those with the default trigger +
+    ``query.processAllAvailable()`` instead."""
     w = stream_df.writeStream.foreachBatch(
-        lambda batch_df, _bid: step(batch_df)
-    ).option("checkpointLocation", checkpoint)
+        lambda batch_df, _bid: update(batch_df, *args, **kwargs)
+    ).option("checkpointLocation", checkpoint_location)
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
@@ -306,22 +314,22 @@ def stream_running_quantile_counts(
     )
 
 
-def stream_factor_data_maintenance(
-    panel_stream: DataFrame,
+def factor_data_store_update(
+    batch_df: DataFrame,
     store_path: str,
     raw_path: str,
-    checkpoint_path: str,
     periods=(1, 5),
     quantiles: int = 5,
-):
-    """Streaming maintenance of the canonical factor_data store.
+) -> None:
+    """One incremental maintenance step of the canonical factor_data store.
 
     factor_data is not expressible as a pure streaming aggregation: the
     forward-looking lead means the output row for date t only finalizes
     at t+max(periods) (SURVEY §2.9, reference utils.py:286-293). The
     Spark-idiomatic resolution is micro-batch incremental view
-    maintenance via ``foreachBatch``: each batch of newly-arrived panel
-    rows is appended to a date-partitioned raw (bronze) table, then
+    maintenance (run it under :func:`stream_store`): each batch of
+    newly-arrived panel rows is appended to a date-partitioned raw
+    (bronze) table at ``raw_path``, then
     ``incremental.incremental_update`` recomputes exactly the
     newly-completable dates into the cleaned store. Work per batch scales
     with the pending tail (≤ max(periods) trading dates), not history —
@@ -337,34 +345,24 @@ def stream_factor_data_maintenance(
     every day_idx after it and invalidate already-stored rows. Historical
     backfills therefore go through a windowed batch rebuild
     (incremental_update on a truncated store), not this stream.
-
-    Returns the configured ``DataStreamWriter`` (AvailableNow trigger);
-    caller calls ``.start()``.
     """
     from alphalens_spark.incremental import DATE_KEY, incremental_update
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        (
-            batch_df.withColumn(DATE_KEY, F.date_format("date", "yyyy-MM-dd"))
-            .write.mode("append")
-            .partitionBy(DATE_KEY)
-            .parquet(raw_path)
-        )
-        panel = (
-            spark.read.parquet(raw_path)
-            .drop(DATE_KEY)
-            .dropDuplicates(["date", "asset"])
-        )
-        incremental_update(spark, panel, store_path, periods, quantiles)
-
-    return (
-        panel_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    if batch_df.isEmpty():
+        return
+    spark = batch_df.sparkSession
+    (
+        batch_df.withColumn(DATE_KEY, F.date_format("date", "yyyy-MM-dd"))
+        .write.mode("append")
+        .partitionBy(DATE_KEY)
+        .parquet(raw_path)
     )
+    panel = (
+        spark.read.parquet(raw_path)
+        .drop(DATE_KEY)
+        .dropDuplicates(["date", "asset"])
+    )
+    incremental_update(spark, panel, store_path, periods, quantiles)
 
 
 def stream_dedup_exact(
@@ -475,8 +473,16 @@ def minhash_store_update(
 ) -> None:
     """One incremental near-dup maintenance step: suppress arriving docs
     that are near-duplicates of anything already ACCEPTED, then admit the
-    survivors. The per-batch unit of :func:`stream_dedup_minhash`;
-    callable directly for backfills.
+    survivors to ``out_path`` — the LSH upgrade of
+    :func:`stream_dedup_exact`: under :func:`stream_store` an arriving
+    doc is admitted only if no previously-admitted doc (any batch, ever)
+    is MinHash-similar above ``threshold``; callable directly for
+    backfills. The state is a persisted signature store because
+    near-dup state — band tables probed by equi-join — is exactly a
+    growing relation, which the engine's keyed state stores don't model
+    but a parquet store does. Accept-first-arrival semantics: earlier
+    micro-batches win; within a batch the min id per duplicate cluster
+    wins.
 
     1. within-batch: LSH pairs → connected components → keep the min-id
        doc per duplicate cluster (deterministic keeper);
@@ -574,46 +580,6 @@ def minhash_store_update(
     docs.unpersist()
 
 
-def stream_dedup_minhash(
-    doc_stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_hash: str = "xxhash64",
-):
-    """Streaming NEAR-duplicate suppression — the LSH upgrade of
-    :func:`stream_dedup_exact`: an arriving doc is admitted only if no
-    previously-admitted doc (any batch, ever) is MinHash-similar above
-    ``threshold``. Built as foreachBatch incremental view maintenance
-    against a persisted signature store (same pattern as
-    stream_factor_data_maintenance) because near-dup state — band tables
-    probed by equi-join — is exactly a growing relation, which the
-    engine's keyed state stores don't model but a parquet store does.
-
-    Accept-first-arrival semantics: earlier micro-batches win; within a
-    batch the min id per duplicate cluster wins. Returns the configured
-    AvailableNow ``DataStreamWriter``; caller calls ``.start()``.
-    """
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        minhash_store_update(
-            batch_df, store_path, out_path, num_hashes, bands,
-            shingle_k, threshold, id_col, text_col, shingle_hash,
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
-
-
 def cm_store_update(
     batch_df: DataFrame,
     store_path: str,
@@ -709,6 +675,8 @@ def hll_store_update(
     estimates off the store with :func:`hll_store_estimate`; compact
     generations with :func:`merge_hll_stores`. ``p`` is the store's
     contract — registers hashed under one precision cannot be re-binned.
+    The streaming answer to "how many distinct X per group, ever" when
+    per-group bottom-k hashes (the KMV store) is already too much state.
     """
     from alphalens_spark.scale.profile import hll_registers
 
@@ -798,25 +766,6 @@ def km_store_survival(
     return km_from_counts(spark.read.parquet(store_path), group_cols)
 
 
-def stream_km_maintenance(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    group_cols: list[str],
-    duration_col: str = "duration",
-    event_col: str = "event",
-    available_now: bool = False,
-):
-    """Maintain the survival-counter store from a stream of finished
-    subjects via foreachBatch — bounded state, exact equality with the
-    batch KM curve of everything ever seen (counter addition)."""
-
-    def _step(batch_df: DataFrame) -> None:
-        km_store_update(batch_df, store_path, group_cols, duration_col, event_col)
-
-    return _start(stream_df, checkpoint, available_now, _step)
-
-
 def hist_store_update(
     batch_df: DataFrame,
     store_path: str,
@@ -831,7 +780,9 @@ def hist_store_update(
     front (lo/hi/bins are the store's contract — batch
     histogram_quantiles can derive the range from data; a stream cannot
     revisit history to re-bin), values clamp into the edge bins. State
-    ≤ bins rows forever; incremental == one-shot by construction.
+    ≤ bins rows forever; incremental == one-shot by construction. Read
+    quantiles any time with :func:`hist_store_quantiles`, without
+    stopping the stream.
     """
     if batch_df.isEmpty():
         return
@@ -882,26 +833,6 @@ def hist_store_quantiles(
     return first.select("prob", F.round(est, 6).alias("est_quantile"))
 
 
-def stream_histogram(
-    value_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    value_col: str,
-    lo: float,
-    hi: float,
-    bins: int = 256,
-    available_now: bool = False,
-):
-    """Maintain the fixed-grid histogram store from a value stream via
-    foreachBatch over :func:`hist_store_update`; read quantiles any time
-    with :func:`hist_store_quantiles` without stopping the stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        hist_store_update(batch_df, store_path, value_col, lo, hi, bins)
-
-    return _start(value_stream, checkpoint, available_now, _step)
-
-
 def hh_store_update(
     batch_df: DataFrame,
     store_path: str,
@@ -925,7 +856,9 @@ def hh_store_update(
     O(depth·width + k·slack) forever. The pruning is the one
     approximation beyond CM noise: an item can only be lost while its
     running estimate is below the current (k·slack)-th candidate —
-    growing ``slack`` buys the usual space-for-recall trade.
+    growing ``slack`` buys the usual space-for-recall trade. Read the
+    answer any time with :func:`hh_store_topk`, without stopping the
+    stream.
     """
     from alphalens_spark.scale.profile import cm_estimate
 
@@ -974,27 +907,6 @@ def hh_store_topk(
         .orderBy(F.col("est_count").desc(), F.col("item"))
         .limit(k)
     )
-
-
-def stream_heavy_hitters(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    item_col: str = "item",
-    k: int = 10,
-    depth: int = 4,
-    width: int = 1024,
-    slack: int = 8,
-    available_now: bool = False,
-):
-    """Maintain streaming top-k heavy hitters via foreachBatch over
-    :func:`hh_store_update`; read the answer any time with
-    :func:`hh_store_topk` without stopping the stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        hh_store_update(batch_df, store_path, item_col, k, depth, width, slack)
-
-    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def merge_kmv_stores(
@@ -1058,6 +970,9 @@ def bloom_store_update(
     joins.bloom_filtered_join, without ever re-reading the tracked set.
     ``n_bits``/``depth`` are the store's contract (a filter cannot be
     re-hashed from its bits) — keep them fixed across the store's life.
+    Under :func:`stream_store` it answers 'have we EVER seen this key'
+    at O(n_bits/8) state: no false negatives, with a false-positive rate
+    set by n_bits/depth vs the tracked cardinality.
     """
     from alphalens_spark.joins import bloom_words
 
@@ -1068,27 +983,6 @@ def bloom_store_update(
         store_path,
         _BLOOM_MERGE,
     )
-
-
-def stream_bloom(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    n_bits: int = 1 << 16,
-    depth: int = 4,
-    available_now: bool = False,
-):
-    """Maintain the Bloom membership store from a key stream via
-    foreachBatch over :func:`bloom_store_update` — 'have we EVER seen
-    this key' at O(n_bits/8) state, queryable without stopping the
-    stream (no false negatives; false-positive rate set by n_bits/depth
-    vs the tracked cardinality)."""
-
-    def _step(batch_df: DataFrame) -> None:
-        bloom_store_update(batch_df, store_path, key_cols, n_bits, depth)
-
-    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def bloom_store_prefilter(
@@ -1173,59 +1067,25 @@ def merge_ivfpq_stores(
     )
 
 
-def stream_sketch_maintenance(
-    stream_df: DataFrame,
+def sketch_store_update(
+    batch_df: DataFrame,
     cm_path: str,
     kmv_path: str,
-    checkpoint: str,
     item_col: str = "item",
     group_col: str = "g",
     depth: int = 4,
     width: int = 1024,
     k: int = 64,
-    available_now: bool = False,
-):
-    """Maintain BOTH mergeable sketches (count-min counters + per-group
-    KMV bottom-k) from one stream via foreachBatch — the streaming
-    analytics sidecar: bounded state, exact equality with the batch
-    sketch of everything ever seen, queryable at any time without
-    stopping the stream.
-
-    ``available_now=True`` only for sources that honor
-    Trigger.AvailableNow (file/kafka); Python DataSource streams degrade
-    it to a single batch — drain those with the default trigger +
-    ``query.processAllAvailable()`` instead."""
-
-    def _step(batch_df: DataFrame) -> None:
-        batch_df = batch_df.persist()
-        cm_store_update(batch_df, cm_path, item_col, depth, width)
-        kmv_store_update(batch_df, kmv_path, [group_col], item_col, k)
-        batch_df.unpersist()
-
-    return _start(stream_df, checkpoint, available_now, _step)
-
-
-def stream_hll_maintenance(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    group_col: str = "g",
-    value_col: str = "item",
-    p: int = 6,
-    available_now: bool = False,
-):
-    """Maintain a per-group HyperLogLog register store from a stream via
-    foreachBatch — fixed 2^p-integer state per group, exact equality
-    with the batch sketch of everything ever seen (max algebra), and
-    replay-idempotent: a redelivered micro-batch is absorbed by the
-    per-register max. The streaming answer to "how many distinct X per
-    group, ever" when per-group bottom-k hashes (the KMV store) is
-    already too much state."""
-
-    def _step(batch_df: DataFrame) -> None:
-        hll_store_update(batch_df, store_path, [group_col], value_col, p)
-
-    return _start(stream_df, checkpoint, available_now, _step)
+) -> None:
+    """Maintain BOTH mergeable sketches (count-min counters at
+    ``cm_path`` + per-group KMV bottom-k at ``kmv_path``) from one
+    micro-batch, read once — the streaming analytics sidecar: bounded
+    state, exact equality with the batch sketch of everything ever seen,
+    queryable at any time without stopping the stream."""
+    batch_df = batch_df.persist()
+    cm_store_update(batch_df, cm_path, item_col, depth, width)
+    kmv_store_update(batch_df, kmv_path, [group_col], item_col, k)
+    batch_df.unpersist()
 
 
 def stream_decayed_activity(
@@ -1322,7 +1182,9 @@ def expectations_store_update(
     addition, so the store always equals the one-shot evaluation of the
     full history (the CM-store discipline applied to quality gates: a
     stream answers "has anything EVER violated rule X" without
-    reprocessing history). State is ≤ |rules| rows forever."""
+    reprocessing history). State is ≤ |rules| rows forever. Read the
+    verdict any time with ``spark.read.parquet(store_path)`` (pass =
+    n_violations == 0)."""
     from alphalens_spark.scale.profile import validate_expectations
 
     if batch_df.isEmpty():
@@ -1334,23 +1196,6 @@ def expectations_store_update(
         store_path,
         _agg_by(["rule"], F.sum, ["n_rows", "n_violations"]),
     )
-
-
-def stream_validate_expectations(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    rules: dict[str, str],
-    available_now: bool = False,
-):
-    """Maintain streaming data-quality counters via foreachBatch over
-    :func:`expectations_store_update`; read the verdict any time with
-    ``spark.read.parquet(store_path)`` (pass = n_violations == 0)."""
-
-    def _step(batch_df: DataFrame) -> None:
-        expectations_store_update(batch_df, store_path, rules)
-
-    return _start(stream_df, checkpoint, available_now, _step)
 
 
 def scd2_store_update(
@@ -1372,10 +1217,12 @@ def scd2_store_update(
     interval instead of opening a duplicate, and a changed state closes
     it at the new snapshot's time. Closed history rows are immutable by
     construction (SCD2's defining property), so the merge never revisits
-    them.
+    them. The store always equals the batch
+    :func:`alphalens_spark.events.scd2_from_snapshots` of every snapshot
+    seen (tested).
 
     REQUIREMENT: snapshots must arrive time-monotonic per key (the same
-    watermark contract as stream_factor_data_maintenance) — a late
+    watermark contract as :func:`factor_data_store_update`) — a late
     snapshot BEFORE a closed interval would have to rewrite history,
     which is a batch rebuild (events.scd2_from_snapshots), not a stream.
     """
@@ -1403,27 +1250,6 @@ def scd2_store_update(
         )
         merged = untouched.unionByName(closed).unionByName(recomputed)
     _write_store(merged, store_path)
-
-
-def stream_scd2(
-    snapshot_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    attr_cols: list[str],
-    ts_col: str = "day",
-    available_now: bool = False,
-):
-    """Maintain an SCD2 dimension from a snapshot stream via foreachBatch
-    over :func:`scd2_store_update`; the store at ``store_path`` always
-    equals the batch :func:`alphalens_spark.events.scd2_from_snapshots`
-    of every snapshot seen (tested), queryable without stopping the
-    stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        scd2_store_update(batch_df, store_path, key_cols, attr_cols, ts_col)
-
-    return _start(snapshot_stream, checkpoint, available_now, _step)
 
 
 def holt_store_update(
@@ -1508,31 +1334,6 @@ def holt_store_update(
     _write_store(
         untouched.unionByName(replay_only).unionByName(folded), store_path
     )
-
-
-def stream_holt(
-    value_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    value_col: str,
-    order_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-    available_now: bool = False,
-):
-    """Maintain per-key Holt smoothing state from a value stream via
-    foreachBatch over :func:`holt_store_update`; the store always equals
-    the final state of the batch
-    :func:`alphalens_spark.performance.holt_linear` over every row seen
-    (tested bit-exact), queryable without stopping the stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        holt_store_update(
-            batch_df, store_path, key_cols, value_col, order_col, alpha, beta
-        )
-
-    return _start(value_stream, checkpoint, available_now, _step)
 
 
 def cusum_store_update(
@@ -1692,39 +1493,6 @@ def cusum_store_update(
     )
 
 
-def stream_cusum(
-    value_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    value_col: str,
-    order_col: str,
-    baseline: int = 7,
-    drift_frac: float = 0.05,
-    threshold_frac: float = 0.5,
-    available_now: bool = False,
-):
-    """Maintain per-key CUSUM drift-monitor state from a value stream via
-    foreachBatch over :func:`cusum_store_update`; once a key's baseline
-    completes, the store equals the final row of the batch
-    :func:`alphalens_spark.events.cusum_changepoints` over every row
-    seen (tested exactly — the recursion is all-integer)."""
-
-    def _step(batch_df: DataFrame) -> None:
-        cusum_store_update(
-            batch_df,
-            store_path,
-            key_cols,
-            value_col,
-            order_col,
-            baseline,
-            drift_frac,
-            threshold_frac,
-        )
-
-    return _start(value_stream, checkpoint, available_now, _step)
-
-
 def cdc_store_update(
     batch_df: DataFrame,
     store_path: str,
@@ -1736,9 +1504,10 @@ def cdc_store_update(
     store — the streaming twin of :func:`alphalens_spark.scale.cdc.apply_cdc`.
 
     The store at ``store_path`` is the CURRENT snapshot (keys + payload,
-    no op/seq). Each micro-batch reduces to its latest change per key and
-    merges: untouched keys pass through, winning upserts replace/insert,
-    winning deletes drop. Applying batches in feed order leaves the store
+    no op/seq), queryable with ``spark.read.parquet(store_path)``. Each
+    micro-batch reduces to its latest change per key and merges:
+    untouched keys pass through, winning upserts replace/insert, winning
+    deletes drop. Applying batches in feed order leaves the store
     equal to the one-shot ``apply_cdc(base, whole_feed)`` (tested).
 
     REQUIREMENT: per-key ``seq`` must be monotone ACROSS batches (the
@@ -1761,25 +1530,6 @@ def cdc_store_update(
     _write_store(merged, store_path)
 
 
-def stream_apply_cdc(
-    changes_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    op_col: str = "op",
-    seq_col: str = "seq",
-    available_now: bool = False,
-):
-    """Maintain a current-snapshot store from a CDC change stream via
-    foreachBatch over :func:`cdc_store_update`; the store is queryable
-    with ``spark.read.parquet(store_path)`` without stopping the stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        cdc_store_update(batch_df, store_path, key_cols, op_col, seq_col)
-
-    return _start(changes_stream, checkpoint, available_now, _step)
-
-
 def cooccurrence_store_update(
     batch_df: DataFrame,
     store_path: str,
@@ -1794,11 +1544,13 @@ def cooccurrence_store_update(
     :func:`alphalens_spark.scale.affinity.cooccurrence_pairs` of the
     full history PROVIDED each basket arrives within one batch (basket
     fragments split across batches under-count their cross-batch pairs;
-    batch on a basket-complete boundary — e.g. foreachBatch over a
+    batch on a basket-complete boundary — e.g. stream_store over a
     sessionized or order-complete feed).
 
     Store size is bounded by the distinct-pair universe, not history
-    length; merge cost is O(|batch pairs| + |store|) per batch.
+    length; merge cost is O(|batch pairs| + |store|) per batch. The
+    store feeds :func:`alphalens_spark.scale.affinity.association_rules`
+    -style readouts with ``spark.read.parquet(store_path)``.
     """
     from alphalens_spark.scale.affinity import cooccurrence_pairs
 
@@ -1812,28 +1564,6 @@ def cooccurrence_store_update(
         _agg_by(["item_a", "item_b"], F.sum, ["n_baskets"]),
         one_file=False,
     )
-
-
-def stream_cooccurrence(
-    baskets_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    basket_col: str,
-    item_col: str,
-    max_basket: int | None = None,
-    available_now: bool = False,
-):
-    """Maintain the pair co-occurrence store from a basket stream via
-    foreachBatch over :func:`cooccurrence_store_update`; the store
-    feeds :func:`alphalens_spark.scale.affinity.association_rules`-style
-    readouts with ``spark.read.parquet(store_path)``."""
-
-    def _step(batch_df: DataFrame) -> None:
-        cooccurrence_store_update(
-            batch_df, store_path, basket_col, item_col, max_basket
-        )
-
-    return _start(baskets_stream, checkpoint, available_now, _step)
 
 
 def stream_ohlc(
@@ -1892,6 +1622,7 @@ def sample_store_update(
     The store stays ≤ k rows per group forever. Each item's id must be
     unique across the stream's lifetime (re-sent ids dedupe by id, so
     replays are harmless but true duplicates under one id collapse).
+    Read the current sample any time with ``spark.read.parquet(store_path)``.
     """
     from alphalens_spark.scale.curation import weighted_priority_sample
 
@@ -1905,28 +1636,6 @@ def sample_store_update(
         store_path,
         lambda df: _reservoir_top_k(df, k, gcols, id_col),
     )
-
-
-def stream_weighted_sample(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    weight_col: str,
-    k: int = 100,
-    group_cols: list[str] | None = None,
-    id_col: str = "doc_id",
-    available_now: bool = False,
-):
-    """Maintain the k-item weighted reservoir from a document stream via
-    foreachBatch over :func:`sample_store_update`; read the current
-    sample any time with ``spark.read.parquet(store_path)``."""
-
-    def _step(batch_df: DataFrame) -> None:
-        sample_store_update(
-            batch_df, store_path, weight_col, k, group_cols, id_col
-        )
-
-    return _start(docs_stream, checkpoint, available_now, _step)
 
 
 def ivfpq_store_update(
@@ -1950,8 +1659,9 @@ def ivfpq_store_update(
     (build_ivfpq), then stream adds at encode cost — the standard
     IVF-ADC deployment (retrain only when the data distribution
     drifts; compare cell-occupancy skew via skew_report to decide).
-    Store stays (id, cell, codes) — ~32x compressed; searches read it
-    with ivfpq_topk(index=...).
+    Store stays (id, cell, codes) — ~32x compressed; searches read the
+    live index with ``spark.read.parquet(store_path)`` →
+    ``ivfpq_topk(index=...)``.
     """
     from alphalens_spark.scale.similarity import encode_pq
 
@@ -1963,29 +1673,6 @@ def ivfpq_store_update(
         lambda df: _ivfpq_dedup(df, id_col),
         one_file=False,
     )
-
-
-def stream_index_maintenance(
-    emb_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    centroids,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = False,
-):
-    """Maintain the IVF-PQ index store from an embedding stream via
-    foreachBatch over :func:`ivfpq_store_update`; searches read the
-    live index with ``spark.read.parquet(store_path)`` →
-    ``ivfpq_topk(index=...)`` without stopping the stream."""
-
-    def _step(batch_df: DataFrame) -> None:
-        ivfpq_store_update(
-            batch_df, store_path, centroids, codebooks, id_col, vec_col
-        )
-
-    return _start(emb_stream, checkpoint, available_now, _step)
 
 
 def ab_store_update(
@@ -2006,7 +1693,8 @@ def ab_store_update(
     population, not event volume.
 
     ``assignment`` is the same deterministic Column contract as
-    :func:`alphalens_spark.events.ab_test_ztest`.
+    :func:`alphalens_spark.events.ab_test_ztest`. Read the z-test any
+    time with :func:`ab_store_ztest`.
     """
     if batch_df.isEmpty():
         return
@@ -2032,30 +1720,6 @@ def ab_store_ztest(spark: SparkSession, store_path: str) -> DataFrame:
 
     per_user = spark.read.parquet(store_path).where(F.col("exposed") == 1)
     return _ab_readout(per_user, "conv")
-
-
-def stream_ab(
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    assignment,
-    success_type: str = "purchase",
-    exposure_type: str = "view",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    available_now: bool = False,
-):
-    """Maintain the per-(user, variant) experiment flag store from an
-    event stream via foreachBatch over :func:`ab_store_update`; read the
-    z-test any time with :func:`ab_store_ztest`."""
-
-    def _step(batch_df: DataFrame) -> None:
-        ab_store_update(
-            batch_df, store_path, assignment, success_type, exposure_type,
-            user_col, type_col,
-        )
-
-    return _start(events_stream, checkpoint, available_now, _step)
 
 
 def dsir_store_update(
@@ -2122,25 +1786,6 @@ def dsir_store_weights(
     )
     ct = dsir_bucket_counts(target, n_buckets, text_col, id_col)
     return _dsir_score(rawdb, cr, ct, n_buckets, smoothing, id_col)
-
-
-def stream_dsir(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    n_buckets: int = 256,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    available_now: bool = False,
-):
-    """Maintain the DSIR raw-distribution store from a document stream
-    via foreachBatch over :func:`dsir_store_update`; score any slice
-    against the live store with :func:`dsir_store_weights`."""
-
-    def _step(batch_df: DataFrame) -> None:
-        dsir_store_update(batch_df, store_path, n_buckets, text_col, id_col)
-
-    return _start(docs_stream, checkpoint, available_now, _step)
 
 
 def stream_user_stats_tws(

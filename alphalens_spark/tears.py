@@ -19,7 +19,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from alphalens_spark import performance as perf
-from alphalens_spark.utils import get_forward_returns_columns
+from alphalens_spark.utils import (
+    get_forward_returns_columns,
+    timedelta_strings_to_integers,
+)
 
 
 def _period_cols(factor_data: DataFrame) -> list[str]:
@@ -89,10 +92,7 @@ def create_turnover_tear_sheet(
     """Turnover analysis (ref tears.py:409-485): per-quantile turnover and
     factor rank autocorrelation for every horizon."""
     if periods is None:
-        periods = [
-            int("".join(ch for ch in c if ch.isdigit()))
-            for c in _period_cols(factor_data)
-        ]
+        periods = timedelta_strings_to_integers(_period_cols(factor_data))
     turnover = perf.quantile_turnover(factor_data, periods=periods)
     autocorr = None
     for p in periods:

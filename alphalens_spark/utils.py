@@ -736,7 +736,7 @@ def rate_of_return(df: DataFrame, period_cols: Sequence[str], base_period: int =
     out_cols = []
     for f in df.schema.fields:
         if f.name in period_cols:
-            k = int("".join(ch for ch in f.name if ch.isdigit()))
+            (k,) = timedelta_strings_to_integers([f.name])
             conv = F.pow(F.lit(1.0) + F.col(f.name), F.lit(base_period / k)) - F.lit(1.0)
             out_cols.append(conv.alias(f.name))
         else:
@@ -751,7 +751,7 @@ def std_conversion(df: DataFrame, period_cols: Sequence[str], base_period: int =
     out_cols = []
     for f in df.schema.fields:
         if f.name in period_cols:
-            k = int("".join(ch for ch in f.name if ch.isdigit()))
+            (k,) = timedelta_strings_to_integers([f.name])
             out_cols.append((F.col(f.name) / F.sqrt(F.lit(k / base_period))).alias(f.name))
         else:
             out_cols.append(F.col(f.name))
@@ -789,8 +789,21 @@ def get_forward_returns_columns(columns: Sequence[str]) -> list[str]:
 
 def timedelta_strings_to_integers(labels: Sequence[str]) -> list[int]:
     """'1D'/'5D'-style labels → trading-period integers
-    (ref utils.py:954-968)."""
-    return [int("".join(ch for ch in s if ch.isdigit())) for s in labels]
+    (ref utils.py:954-968). A label must hold exactly one number: a
+    multi-component label such as '1D21h' or '2h30m' (see
+    :func:`infer_period_labels`) has no single period count, so it
+    raises ``ValueError`` naming the label instead of reading as 121."""
+    import re
+
+    out = []
+    for s in labels:
+        nums = re.findall(r"\d+", s)
+        if len(nums) != 1:
+            raise ValueError(
+                f"period label {s!r} does not hold exactly one number"
+            )
+        out.append(int(nums[0]))
+    return out
 
 
 def print_table(table, name: str | None = None, fmt: str | None = None,
@@ -839,12 +852,14 @@ def detect_non_unique_bin_edges(
     'Bin edges must be unique' ValueError and its long help message
     (utils.py:49-81 rethrow/non_unique_bin_edges_error). Returns the
     offending (date[, group]) keys; callers wanting the reference's
-    eager-raise behavior count this and raise. Our quantize assigns
-    shared labels instead (documented delta in quantize_factor)."""
+    eager-raise behavior count this and raise. The edges are the ones
+    ``quantize_factor`` (method='edges') bins with, so a key is returned
+    exactly when ``quantize_factor(no_raise=True)`` NULLs its rows."""
     keys = [date_col] + ([group_col] if by_group else [])
-    fracs = F.array(*[F.lit(i / quantiles) for i in range(quantiles + 1)])
-    edges = factor_data.groupBy(*keys).agg(
-        F.percentile(F.col(factor_col), fracs).alias("_edges")
+    # an all-NULL cross-section has no edges (and nothing to bin)
+    values = factor_data.where(F.col(factor_col).isNotNull())
+    edges = _pandas_quantile_edges(
+        values, keys, _linspace_fracs(quantiles), factor_col
     )
     has_dup = F.size(F.array_distinct("_edges")) < F.size("_edges")
     return edges.where(has_dup).select(*keys)

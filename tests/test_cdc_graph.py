@@ -410,7 +410,7 @@ def test_cm_hasher_mismatch_guard(spark):
 
 
 def test_stream_apply_cdc_equals_batch(spark, tmp_path):
-    from alphalens_spark.streaming.ops import stream_apply_cdc
+    from alphalens_spark.streaming.ops import cdc_store_update, stream_store
 
     src = str(tmp_path / "changes")
     batch1 = [
@@ -434,8 +434,9 @@ def test_stream_apply_cdc_equals_batch(spark, tmp_path):
         .parquet(src)
     )
     store = str(tmp_path / "snap")
-    q = stream_apply_cdc(
-        stream, store, str(tmp_path / "ck"), ["k"], available_now=True
+    q = stream_store(
+        stream, str(tmp_path / "ck"), cdc_store_update, store, ["k"],
+        available_now=True,
     )
     q.awaitTermination(120)
 

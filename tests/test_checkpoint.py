@@ -50,6 +50,29 @@ def test_checkpoint_helper_is_the_only_lineage_cut():
     assert len(sites) == 2  # the helper's reliable and local branches
 
 
+def test_stream_store_is_the_only_foreach_batch():
+    """``.foreachBatch(`` is called once in the package, inside
+    ``streaming.ops.stream_store``: a store is an update function, and
+    that one starter runs any of them."""
+    ops_path = PKG / "streaming" / "ops.py"
+    starter = next(
+        n for n in ast.parse(ops_path.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "stream_store"
+    )
+    sites = [
+        (path, node.lineno)
+        for path in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "foreachBatch"
+    ]
+    assert len(sites) == 1, sites
+    path, line = sites[0]
+    assert path == ops_path
+    assert starter.lineno <= line <= starter.end_lineno
+
+
 @contextmanager
 def _checkpoint_dir(spark, path):
     """Reliable mode for the block: set the session's checkpoint dir, then

@@ -106,7 +106,7 @@ def test_stream_cusum_equals_batch(spark, tmp_path):
     (all-integer recursion) — including a baseline split across the
     batch boundary, a replayed order, a mid-stream new key, and a key
     that never completes its baseline (stays pending)."""
-    from alphalens_spark.streaming.ops import stream_cusum
+    from alphalens_spark.streaming.ops import cusum_store_update, stream_store
 
     rng = random.Random(5)
     src = str(tmp_path / "vals")
@@ -137,9 +137,9 @@ def test_stream_cusum_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_cusum(
-        stream, store, str(tmp_path / "ck"), ["kk"], "v", "t",
-        baseline=4, drift_frac=0.05, threshold_frac=0.5,
+    q = stream_store(
+        stream, str(tmp_path / "ck"), cusum_store_update, store,
+        ["kk"], "v", "t", baseline=4, drift_frac=0.05, threshold_frac=0.5,
         available_now=True,
     )
     q.awaitTermination(120)

@@ -422,7 +422,7 @@ def test_bloom_store_generation_merge_and_no_false_negatives(spark, tmp_path):
 def test_stream_sketch_maintenance_equals_batch(spark, tmp_path):
     from alphalens_spark.scale.profile import cm_sketch
     from alphalens_spark.sources import SyntheticEventsDataSource
-    from alphalens_spark.streaming.ops import stream_sketch_maintenance
+    from alphalens_spark.streaming.ops import sketch_store_update, stream_store
 
     spark.dataSource.register(SyntheticEventsDataSource)
     # batch truth over the same deterministic generator
@@ -442,8 +442,9 @@ def test_stream_sketch_maintenance_equals_batch(spark, tmp_path):
         .select(F.col("event_type").alias("item"), F.col("user_id").cast("string").alias("g"))
     )
     cm_p, kmv_p = str(tmp_path / "cm"), str(tmp_path / "kmv")
-    q = stream_sketch_maintenance(
-        stream, cm_p, kmv_p, str(tmp_path / "ckpt"), width=64, k=8
+    q = stream_store(
+        stream, str(tmp_path / "ckpt"), sketch_store_update, cm_p, kmv_p,
+        width=64, k=8,
     )
     q.processAllAvailable()
     q.stop()

@@ -273,7 +273,11 @@ def test_brute_force_query_guard(spark):
 
 def test_stream_heavy_hitters_equals_batch(spark, tmp_path):
     from alphalens_spark.scale.profile import heavy_hitters
-    from alphalens_spark.streaming.ops import hh_store_topk, stream_heavy_hitters
+    from alphalens_spark.streaming.ops import (
+        hh_store_topk,
+        hh_store_update,
+        stream_store,
+    )
 
     # skewed item stream across two files → two micro-batches
     src = str(tmp_path / "items")
@@ -290,9 +294,9 @@ def test_stream_heavy_hitters_equals_batch(spark, tmp_path):
         .parquet(src)
     )
     store = str(tmp_path / "hh")
-    q = stream_heavy_hitters(
-        stream, store, str(tmp_path / "ck"), k=5, width=256, slack=8,
-        available_now=True,
+    q = stream_store(
+        stream, str(tmp_path / "ck"), hh_store_update, store,
+        k=5, width=256, slack=8, available_now=True,
     )
     q.awaitTermination(120)
 
@@ -497,7 +501,10 @@ def test_netpbm_header_comments_and_errors():
 
 def test_stream_expectations_store_equals_oneshot(spark, tmp_path):
     from alphalens_spark.scale.profile import validate_expectations
-    from alphalens_spark.streaming.ops import stream_validate_expectations
+    from alphalens_spark.streaming.ops import (
+        expectations_store_update,
+        stream_store,
+    )
 
     rules = {"v_positive": "v > 0", "v_bounded": "v <= 100"}
     src = str(tmp_path / "vals")
@@ -513,8 +520,9 @@ def test_stream_expectations_store_equals_oneshot(spark, tmp_path):
         .parquet(src)
     )
     store = str(tmp_path / "exp")
-    q = stream_validate_expectations(
-        stream, store, str(tmp_path / "ck"), rules, available_now=True
+    q = stream_store(
+        stream, str(tmp_path / "ck"), expectations_store_update, store,
+        rules, available_now=True,
     )
     q.awaitTermination(120)
     got = {
@@ -531,7 +539,7 @@ def test_stream_expectations_store_equals_oneshot(spark, tmp_path):
 
 def test_stream_scd2_equals_batch(spark, tmp_path):
     from alphalens_spark.events import scd2_from_snapshots
-    from alphalens_spark.streaming.ops import stream_scd2
+    from alphalens_spark.streaming.ops import scd2_store_update, stream_store
 
     src = str(tmp_path / "snap")
     batch1 = [
@@ -554,9 +562,9 @@ def test_stream_scd2_equals_batch(spark, tmp_path):
         .parquet(src)
     )
     store = str(tmp_path / "scd2")
-    q = stream_scd2(
-        stream, store, str(tmp_path / "ck"), ["user_id"], ["state"],
-        ts_col="day", available_now=True,
+    q = stream_store(
+        stream, str(tmp_path / "ck"), scd2_store_update, store,
+        ["user_id"], ["state"], ts_col="day", available_now=True,
     )
     q.awaitTermination(120)
 
@@ -584,7 +592,7 @@ def test_stream_holt_equals_batch(spark, tmp_path):
     import numpy as np
 
     from alphalens_spark import performance as perf
-    from alphalens_spark.streaming.ops import stream_holt
+    from alphalens_spark.streaming.ops import holt_store_update, stream_store
 
     rng = np.random.RandomState(3)
     src = str(tmp_path / "vals")
@@ -607,9 +615,9 @@ def test_stream_holt_equals_batch(spark, tmp_path):
         .parquet(src)
     )
     store = str(tmp_path / "holt_store")
-    q = stream_holt(
-        stream, store, str(tmp_path / "ck"), ["k"], "v", "t",
-        alpha=0.5, beta=0.3, available_now=True,
+    q = stream_store(
+        stream, str(tmp_path / "ck"), holt_store_update, store,
+        ["k"], "v", "t", alpha=0.5, beta=0.3, available_now=True,
     )
     q.awaitTermination(120)
 

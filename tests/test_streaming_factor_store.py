@@ -22,7 +22,7 @@ def _collect_sorted(df):
 def test_stream_maintenance_matches_batch(spark, tmp_path):
     from alphalens_spark import datasets
     from alphalens_spark.incremental import read_store
-    from alphalens_spark.streaming.ops import stream_factor_data_maintenance
+    from alphalens_spark.streaming.ops import factor_data_store_update, stream_store
 
     panel = datasets.price_factor_panel(spark, SF_DIR).persist()
     dates = [r["date"] for r in panel.select("date").distinct().orderBy("date").collect()]
@@ -30,19 +30,21 @@ def test_stream_maintenance_matches_batch(spark, tmp_path):
 
     src = str(tmp_path / "arrivals")
     # two arrival waves, one file each (arrivals must be date-monotonic
-    # across micro-batches — see stream_factor_data_maintenance docstring)
+    # across micro-batches — see factor_data_store_update docstring)
     panel.where(F.col("date") <= cutoff).coalesce(1).write.mode("append").parquet(src)
     panel.where(F.col("date") > cutoff).coalesce(1).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(panel.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    q = stream_factor_data_maintenance(
+    q = stream_store(
         stream,
+        str(tmp_path / "ckpt"),
+        factor_data_store_update,
         store_path=str(tmp_path / "store"),
         raw_path=str(tmp_path / "raw"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-    ).start()
+        available_now=True,
+    )
     q.awaitTermination(180)
 
     got = _collect_sorted(read_store(spark, str(tmp_path / "store")))
@@ -91,19 +93,21 @@ def test_minhash_store_update_suppresses_across_batches(spark, tmp_path):
 
 
 def test_stream_dedup_minhash_availablenow(spark, tmp_path):
-    from alphalens_spark.streaming.ops import stream_dedup_minhash
+    from alphalens_spark.streaming.ops import minhash_store_update, stream_store
 
     src = str(tmp_path / "src")
     docs = [(i, f"document number {i} with shared boilerplate text " * 3) for i in range(6)]
     spark.createDataFrame(docs, "doc_id long, text string").write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src + "/*.parquet")
-    q = stream_dedup_minhash(
+    q = stream_store(
         stream,
+        str(tmp_path / "ckpt"),
+        minhash_store_update,
         str(tmp_path / "store2"),
         str(tmp_path / "out2"),
-        str(tmp_path / "ckpt"),
         threshold=0.9,
-    ).start()
+        available_now=True,
+    )
     q.awaitTermination(120)
     kept = spark.read.parquet(str(tmp_path / "out2"))
     # high threshold: the numeric token differs per doc → all admitted

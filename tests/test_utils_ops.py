@@ -254,6 +254,10 @@ def test_timedelta_strings_to_integers():
     from alphalens_spark.utils import timedelta_strings_to_integers
 
     assert timedelta_strings_to_integers(["1D", "5D", "10D"]) == [1, 5, 10]
+    # multi-component labels (infer_period_labels emits '1D21h') have no
+    # single period count: concatenating their digits read '1D21h' as 121
+    with pytest.raises(ValueError, match="1D21h"):
+        timedelta_strings_to_integers(["1D21h"])
 
 
 def test_detect_non_unique_bin_edges(spark):
@@ -265,6 +269,16 @@ def test_detect_non_unique_bin_edges(spark):
     df = spark.createDataFrame(rows, "date timestamp, asset string, factor double")
     bad = [r["date"] for r in detect_non_unique_bin_edges(df, 4).collect()]
     assert bad == [D(0)]
+
+    # pd.qcut(q=3) labels this cross-section [0, 1, 2, 2] (numpy's 2/3
+    # edge lands 1 ulp below 1.0), so quantize_factor keeps it; exact
+    # i/3 edges would repeat 1.0 and flag it
+    rows3 = [(D(0), a, 1.0) for a in "ABCD"]
+    rows3 += [(D(2), a, v) for a, v in zip("ABCD", [1e-17, 0.3, 1.0, 1.0])]
+    rows3 += [(D(3), a, None) for a in "AB"]  # all-NULL: nothing to bin
+    df3 = spark.createDataFrame(rows3, "date timestamp, asset string, factor double")
+    bad3 = [r["date"] for r in detect_non_unique_bin_edges(df3, 3).collect()]
+    assert bad3 == [D(0)]
 
 
 def test_add_trading_periods(spark):
