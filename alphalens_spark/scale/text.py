@@ -567,22 +567,23 @@ def bigram_cross_entropy(
     same docs) and add-k smoothed unigrams. Jelinek-Mercer interpolation,
     the standard backoff when the bigram table is sparse.
 
-    Scale shape: one bigram explode feeds the checkpointed per-doc tf,
+    Scale shape: one bigram explode feeds the persisted per-doc tf,
     and the corpus bigram / context-head counts attach to it via
     unordered integer-sum windows over the (prev, cur) and prev
     partitions (no join-back, no re-scan); the unigram table is a
-    checkpointed vocabulary-sized relation joined on its key; the
-    (total, vocab) scalar row joins broadcast. Calling this runs the
-    two checkpoint jobs at plan-construction time (the
-    rare_term_overlap_topk precedent).
+    persisted vocabulary-sized relation joined on its key; the
+    (total, vocab) scalar row joins broadcast. Both persists are lazy:
+    calling this runs no job, and the first action fills them. They
+    stay cached after the result is collected (nothing unpersists
+    them), so a repeat call on the same docs reads the cache.
     """
     from pyspark.sql import Window
 
     ts = _tokens(text_col)
     base = docs.select(F.col(id_col), ts.alias("ts"))
 
-    # unigram corpus (token → count) + scalar totals. Checkpoint the
-    # vocabulary-sized count table eagerly: it feeds THREE consumers
+    # unigram corpus (token → count) + scalar totals. Persist the
+    # vocabulary-sized count table: it feeds THREE consumers
     # (totals, the interpolation join, the first-token join) and each
     # re-planned the full token explode without it (the pre-round plan
     # scanned documents 8 times across this function).
@@ -612,7 +613,7 @@ def bigram_cross_entropy(
     bi = base.select(id_col, F.explode(bi_arr).alias("bg")).select(
         id_col, F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur")
     )
-    # checkpoint the (doc, bigram) tf once; the corpus bigram count and
+    # persist the (doc, bigram) tf once; the corpus bigram count and
     # the context-head count attach via unordered sum windows over the
     # (prev, cur) and prev partitions — sums of exact integers, so cb/ch
     # are bit-identical to the groupBy + join-back form they replace,

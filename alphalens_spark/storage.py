@@ -25,6 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from alphalens_spark.session import checkpoint
 
 
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet data at ``path``, or None when nothing is there yet —
+    the one place a store's "first write" is decided. Existence is asked
+    of the path's Hadoop FileSystem, so a missing store costs no failed
+    scan, and a store that exists but cannot be read (or does not fit
+    its update) fails loudly instead of being mistaken for an empty one."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return spark.read.parquet(path) if fs.exists(p) else None
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

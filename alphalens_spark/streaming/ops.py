@@ -21,7 +21,7 @@ Two kinds of operator live here.
     - a readout (``*_store_estimate``, ``*_store_quantiles``, ...) or a
       plain ``spark.read.parquet(store_path)``.
 
-  Every store is read by :func:`_read_store` and written by
+  Every store is read by :func:`storage.read_parquet_if_exists` and written by
   :func:`_write_store`; each merge rule is one function shared by the
   update and its compaction, so incremental == one-shot holds by
   construction.
@@ -36,18 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.session import checkpoint
-
-
-def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
-    """The persisted store at ``path``, or None before its first write —
-    the one place that decides "first batch". Existence is asked of the
-    path's Hadoop FileSystem, so a missing store costs no failed scan,
-    and a store that exists but does not fit the batch fails loudly
-    downstream instead of being mistaken for an empty one."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return spark.read.parquet(path) if fs.exists(p) else None
+from alphalens_spark.storage import read_parquet_if_exists
 
 
 def _write_store(df: DataFrame, path: str, one_file: bool = True) -> None:
@@ -70,7 +59,7 @@ def _fold_store(
 ) -> None:
     """Write ``merge(store ∪ part)`` to the store at ``path``; on the
     first batch ``part`` is written as is."""
-    old = _read_store(part.sparkSession, path)
+    old = read_parquet_if_exists(part.sparkSession, path)
     merged = part if old is None else merge(old.unionByName(part))
     _write_store(merged, path, one_file)
 
@@ -529,8 +518,8 @@ def minhash_store_update(
     new_bands = _band_rows(sigs, bands, num_hashes, id_col)
 
     # 2. probe accepted history
-    store_bands = _read_store(spark, f"{store_path}/bands")
-    store_sigs = _read_store(spark, f"{store_path}/sigs")
+    store_bands = read_parquet_if_exists(spark, f"{store_path}/bands")
+    store_sigs = read_parquet_if_exists(spark, f"{store_path}/sigs")
     sigs_out = sigs
     if store_bands is not None and store_sigs is not None:
         cand = (
@@ -871,7 +860,7 @@ def hh_store_update(
     new_items = batch_df.select(
         F.col(item_col).cast("string").alias("item")
     ).distinct()
-    old = _read_store(spark, cand_path)
+    old = read_parquet_if_exists(spark, cand_path)
     cand = (
         new_items
         if old is None
@@ -1232,7 +1221,7 @@ def scd2_store_update(
         return
     keys = list(key_cols)
     snap = batch_df.select(*keys, *attr_cols, ts_col)
-    store = _read_store(batch_df.sparkSession, store_path)
+    store = read_parquet_if_exists(batch_df.sparkSession, store_path)
     if store is None:
         merged = scd2_from_snapshots(snap, keys, list(attr_cols), ts_col)
     else:
@@ -1284,7 +1273,7 @@ def holt_store_update(
         F.col(order_col).alias("_o"),
         F.col(value_col).cast("double").alias("_v"),
     ).where(F.col("_v").isNotNull())
-    store = _read_store(batch_df.sparkSession, store_path)
+    store = read_parquet_if_exists(batch_df.sparkSession, store_path)
     if store is None:  # first batch: empty store
         store = (
             snap.select(*keys)
@@ -1392,7 +1381,7 @@ def cusum_store_update(
     ).where(F.col("_v").isNotNull())
     o_type = snap.schema["_o"].dataType.simpleString()
     pend_type = f"array<struct<o:{o_type},v:bigint>>"
-    store = _read_store(batch_df.sparkSession, store_path)
+    store = read_parquet_if_exists(batch_df.sparkSession, store_path)
     if store is None:  # first batch: empty store
         store = (
             snap.select(*keys)
@@ -1520,7 +1509,7 @@ def cdc_store_update(
     if batch_df.isEmpty():
         return
     keys = list(key_cols)
-    store = _read_store(batch_df.sparkSession, store_path)
+    store = read_parquet_if_exists(batch_df.sparkSession, store_path)
     if store is None:  # first batch: empty base
         payload = [c for c in batch_df.columns if c not in (*keys, op_col, seq_col)]
         latest = latest_changes(batch_df, keys, seq_col)

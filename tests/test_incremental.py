@@ -5,6 +5,7 @@ update must be a no-op (idempotent dynamic partition overwrite)."""
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -113,3 +114,22 @@ def test_incremental_event_rollup_equals_full_recompute(spark, tmp_path):
     # idempotent replay of the final state
     rep2 = incremental_event_rollup(spark, ev, store)
     assert stored() == full("2099-01-01")
+
+
+def test_unreadable_store_raises_not_treated_as_missing(spark, tmp_path):
+    """Only a missing store path means "no store yet". A directory that
+    exists but holds no readable parquet must fail the update, not be
+    taken for a first run that recomputes from scratch."""
+    from alphalens_spark.incremental import incremental_event_rollup, store_last_date
+
+    assert store_last_date(spark, str(tmp_path / "missing")) is None
+    bad = tmp_path / "bad_store"
+    bad.mkdir()
+    (bad / "notes.txt").write_text("not parquet\n")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        store_last_date(spark, str(bad))
+    events = spark.createDataFrame(
+        [("2024-01-01 10:00:00", "click", 1.0)], "ts string, event_type string, value double"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        incremental_event_rollup(spark, events, str(bad))

@@ -169,6 +169,26 @@ def test_average_cumulative_return_by_quantile(spark):
     assert math.isclose(out[1], 1.0)     # p3/p2 − 1
 
 
+def test_event_window_missing_date_not_skipped(spark):
+    # asset A has no price on D3 (B keeps D3 on the calendar): A's
+    # offset +1 from its D2 event is that absent slot → NULL, left out
+    # of count_ret, NOT the D2→D4 return an order-by-existing-rows
+    # lead would give (mirrors test_forward_returns_missing_dates_not_skipped)
+    prices = spark.createDataFrame(
+        [(D(i), "A", float(2**i)) for i in range(6) if i != 3]
+        + [(D(i), "B", 1.0) for i in range(6)],
+        "date timestamp, asset string, price double",
+    )
+    fd = _fd(spark, [(D(2), "A", 0.0, 0.0, 1)])
+    out = {r["offset"]: (r["mean_ret"], r["count_ret"]) for r in
+           perf.average_cumulative_return_by_quantile(
+               fd, prices, periods_before=1, periods_after=2, demeaned=False
+           ).collect()}
+    assert out[1] == (None, 0)
+    assert math.isclose(out[-1][0], -0.5) and out[-1][1] == 1   # p1/p2 − 1
+    assert math.isclose(out[2][0], 3.0) and out[2][1] == 1      # p4/p2 − 1
+
+
 def test_positions_interval_join(spark):
     weights = spark.createDataFrame(
         [(D(0), "A", 1.0), (D(1), "A", 1.0)],

@@ -8,13 +8,6 @@ parquet scan, and no redundant shuffles in the single-shuffle operators.
 A regression here can keep every value-test green while turning a linear
 plan quadratic — exactly the failure .explain() catches and collect()
 cannot.
-
-The one BroadcastNestedLoopJoin we DO allow (and assert nowhere appears
-in these operator plans) is the dense-grid build in
-compute_forward_returns: ``assets.crossJoin(broadcast(calendar))`` — a
-cross join whose build side is the kB-scale calendar dim streams linearly
-over the asset list, which is the optimal physical plan for materializing
-the panel the reference holds as its wide frame.
 """
 
 from __future__ import annotations
@@ -132,12 +125,13 @@ def test_quantize_ntile_is_single_shuffle(spark):
 
 
 def test_forward_returns_single_window_shuffle(prices_df):
-    """Forward returns = lead windows over one per-asset ordering: ONE
-    big-data exchange (on asset) and no sort-merge join — the calendar
-    build's tiny distinct/single-partition exchanges are the only others.
+    """Forward returns = at_offset frames over one per-asset ordering:
+    ONE big-data exchange (on asset) for every horizon and no sort-merge
+    join — the calendar build's tiny single-partition exchange is the
+    only other.
     Guards against regressing to the dense-grid + (date,asset) SMJ plan,
     which cost 3 full-table shuffles."""
-    out = utils.compute_forward_returns(prices_df, periods=(1, 5))
+    out = utils.compute_forward_returns(prices_df, periods=(1, 5, 10))
     plan = _plan(out)
     assert plan.count("Exchange hashpartitioning(asset") == 1, plan
     assert "SortMergeJoin" not in plan

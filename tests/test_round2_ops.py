@@ -347,13 +347,10 @@ def test_store_schema_mismatch_raises_and_keeps_history(spark, tmp_path):
     not be mistaken for a first batch and overwritten with the batch."""
     from pyspark.errors import AnalysisException
 
-    from alphalens_spark.streaming.ops import (
-        _read_store,
-        cm_store_update,
-        hist_store_update,
-    )
+    from alphalens_spark.storage import read_parquet_if_exists
+    from alphalens_spark.streaming.ops import cm_store_update, hist_store_update
 
-    assert _read_store(spark, str(tmp_path / "missing")) is None
+    assert read_parquet_if_exists(spark, str(tmp_path / "missing")) is None
     store = str(tmp_path / "hist")
     values = spark.createDataFrame([Row(v=float(i)) for i in range(100)])
     hist_store_update(values, store, "v", 0.0, 100.0, bins=10)

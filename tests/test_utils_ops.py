@@ -163,14 +163,23 @@ def test_quantize_duplicate_edges_raise(spark):
 
 def test_quantize_duplicate_edges_no_raise_drops_partition(spark):
     # ref utils.py:157-160: the WHOLE offending cross-section NaNs out;
-    # clean dates keep their pd.qcut labels ([1,2,3,4,5] q=4 → 1,1,2,3,4)
+    # clean dates keep their pd.qcut labels ([1,2,3,4,5] q=4 → 1,1,2,3,4).
+    # An all-NULL date has nothing to bin: NULL labels, no error, with
+    # or without no_raise.
     rows = [(D(0), chr(ord("A") + j), v) for j, v in enumerate([1.0, 1.0, 1.0, 1.0, 2.0])]
     rows += [(D(1), chr(ord("A") + j), v) for j, v in enumerate([1.0, 2.0, 3.0, 4.0, 5.0])]
+    rows += [(D(2), "A", None), (D(2), "B", None)]
     df = spark.createDataFrame(rows, "date timestamp, asset string, factor double")
     out = {(r["date"], r["asset"]): r["factor_quantile"]
            for r in quantize_factor(df, quantiles=4, no_raise=True).collect()}
     assert all(out[(D(0), a)] is None for a in "ABCDE")
     assert [out[(D(1), a)] for a in "ABCDE"] == [1, 1, 2, 3, 4]
+    assert out[(D(2), "A")] is None and out[(D(2), "B")] is None
+    clean = df.where(F.col("date") > D(0))
+    out = {(r["date"], r["asset"]): r["factor_quantile"]
+           for r in quantize_factor(clean, quantiles=4).collect()}
+    assert [out[(D(1), a)] for a in "ABCDE"] == [1, 1, 2, 3, 4]
+    assert out[(D(2), "A")] is None and out[(D(2), "B")] is None
 
 
 def test_quantize_zero_aware_tie_kills_whole_partition(spark):
