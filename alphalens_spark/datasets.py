@@ -184,27 +184,14 @@ PERIOD_COLS = ["1D", "5D"]  # engine-internal labels for +1/+5 trading periods
 OUT_COLS = {"1D": "fwd_1p", "5D": "fwd_5p"}  # oracle-facing aliases
 
 
-def factor_data(spark: SparkSession, sf_dir: str, max_loss: float | None = None) -> DataFrame:
+def factor_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical cleaned+quantized factor_data from the derived panel.
 
-    Lazy end-to-end (max_loss=None skips the reference's loss-accounting
-    counts, which are driver actions).
+    Lazy end-to-end: no job runs until the caller acts. There is no loss
+    report here; run :func:`alphalens_spark.utils.get_clean_factor_and_forward_returns`
+    with ``max_loss`` set for one.
     """
-    from alphalens_spark.utils import get_clean_factor_and_forward_returns
-
-    panel = price_factor_panel(spark, sf_dir)
-    if max_loss is not None:
-        # reference-faithful path with loss accounting (driver actions)
-        return get_clean_factor_and_forward_returns(
-            factor=panel.select("date", "asset", "factor"),
-            prices=panel.select("date", "asset", "price"),
-            quantiles=5,
-            periods=PERIODS,
-            filter_zscore=None,
-            max_loss=max_loss,
-            quantize_method="ntile",
-        )
-    return _factor_data_from_panel(panel)
+    return _factor_data_from_panel(price_factor_panel(spark, sf_dir))
 
 
 def _factor_data_from_panel(
@@ -212,8 +199,9 @@ def _factor_data_from_panel(
 ) -> DataFrame:
     """Fused fast path over an already-built (date, asset, price, factor)
     panel: factor rides through the forward-return grid (carry_cols) —
-    one window shuffle, no factor⋈returns join; identical output to the
-    general loss-accounting path."""
+    one window shuffle, no factor⋈returns join; the same rows as
+    ``get_clean_factor_and_forward_returns`` over the panel with
+    ``filter_zscore=None`` and ``quantize_method="ntile"``."""
     from alphalens_spark.utils import (
         compute_forward_returns,
         period_label,

@@ -276,23 +276,7 @@ def q_quantize_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_quantile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-quantile factor stats table (ref plotting.py:182-189)."""
-    from pyspark.sql import Window
-
-    fd = _fd(spark, sf_dir)
-    out = fd.groupBy("factor_quantile").agg(
-        F.min("factor").alias("min_factor"),
-        F.max("factor").alias("max_factor"),
-        F.avg("factor").alias("mean_factor"),
-        F.stddev_samp("factor").alias("std_factor"),
-        F.count("factor").alias("count_factor"),
-    )
-    # pct-of-total via broadcast 1-row agg join (a global window here
-    # would move the 5-row frame to one partition and warn)
-    tot = out.agg(F.sum("count_factor").alias("_tot"))
-    out = out.crossJoin(F.broadcast(tot)).withColumn(
-        "count_pct", F.col("count_factor") / F.col("_tot") * 100.0
-    ).drop("_tot")
-    return _finalize(out)
+    return _finalize(perf.quantile_statistics(_fd(spark, sf_dir)))
 
 
 def q_mean_return_by_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,11 +517,7 @@ def q_ic_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_turnover_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean turnover per (quantile, period) — ref plotting.py:150-163."""
-    t = _turnover(spark, sf_dir)
-    out = t.groupBy("factor_quantile", "period").agg(
-        F.avg("turnover").alias("mean_turnover")
-    )
-    return _finalize(out)
+    return _finalize(perf.turnover_summary(_turnover(spark, sf_dir)))
 
 
 def q_forward_returns_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12021,287 +12001,11 @@ ORACLES["full_tear_sheet"] = _full_tear_sheet_oracle()
 # +0.0 added (round() only ever appears over double expressions here).
 ORACLES = {k: v.replace("round(", "0.0 + round(") for k, v in ORACLES.items()}
 
+# Every module-level ``q_<name>`` function is the query ``<name>``, in
+# definition order (the tie-break of the certification sort below).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "forward_returns": q_forward_returns,
-    "quantize_factor": q_quantize_factor,
-    "quantile_stats": q_quantile_stats,
-    "mean_return_by_quantile": q_mean_return_by_quantile,
-    "factor_ic": q_factor_ic,
-    "mean_ic_monthly": q_mean_ic_monthly,
-    "ic_summary": q_ic_summary,
-    "factor_returns": q_factor_returns,
-    "factor_alpha_beta": q_factor_alpha_beta,
-    "mean_return_spread": q_mean_return_spread,
-    "quantile_turnover": q_quantile_turnover,
-    "rank_autocorr": q_rank_autocorr,
-    "cumulative_benchmark_log_return": q_cumulative_benchmark_log_return,
-    "event_study_car": q_event_study_car,
-    "mean_return_by_quantile_by_group": q_mean_return_by_quantile_by_group,
-    "ic_by_group": q_ic_by_group,
-    "turnover_summary": q_turnover_summary,
-    "forward_returns_zscore": q_forward_returns_zscore,
-    "quantize_bins": q_quantize_bins,
-    "quantize_bins_seq": q_quantize_bins_seq,
-    "quantize_by_group": q_quantize_by_group,
-    "quantize_fraction_seq": q_quantize_fraction_seq,
-    "positions": q_positions,
-    "forward_returns_noncumulative": q_forward_returns_noncumulative,
-    "quantize_zero_aware": q_quantize_zero_aware,
-    "cumulative_return_by_quantile_log": q_cumulative_return_by_quantile_log,
-    "returns_table_bps": q_returns_table_bps,
-    "infer_holidays": q_infer_holidays,
-    "event_counts_daily": q_event_counts_daily,
-    "event_props_extract": q_event_props_extract,
-    "event_sessionize": q_event_sessionize,
-    "event_type_user_stats": q_event_type_user_stats,
-    "stream_interval_join": q_stream_interval_join,
-    "event_funnel": q_event_funnel,
-    "cohort_retention": q_cohort_retention,
-    "rolling_active_users": q_rolling_active_users,
-    "rolling_active_kmv": q_rolling_active_kmv,
-    "event_rollup": q_event_rollup,
-    "event_pivot_daily": q_event_pivot_daily,
-    "asof_purchase_view": q_asof_purchase_view,
-    "asof_next_click_1h": q_asof_next_click_1h,
-    "ic_group_adjusted": q_ic_group_adjusted,
-    "dedup_exact": q_dedup_exact,
-    "doc_token_stats": q_doc_token_stats,
-    "lang_stopword_id": q_lang_stopword_id,
-    "quality_score": q_quality_score,
-    "ngram_jaccard": q_ngram_jaccard,
-    "embedding_centroids": q_embedding_centroids,
-    "embedding_topk": q_embedding_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_near_dup_exact": q_embedding_near_dup_exact,
-    "doc_bpe_token_count": q_doc_bpe_token_count,
-    # md5-hash variants with generated full SQL oracles (the xxhash64
-    # defaults stay the fast path in bench.py)
-    "minhash_lsh_dups": q_minhash_lsh_dups,
-    "simhash": q_simhash,
-    "simhash_dups": q_simhash_dups,
-    "doc_fingerprint": q_doc_fingerprint,
-    # full oracles too (round 2): seeded plane literals embedded in SQL /
-    # the deterministic coarse quantizer re-derived in unrolled CTEs
-    "embedding_ivf_topk": q_embedding_ivf_topk,
-    "embedding_ivfpq_topk": q_embedding_ivfpq_topk,
-    "redact_pii": q_redact_pii,
-    "token_budget_sample": q_token_budget_sample,
-    "pretraining_funnel": q_pretraining_funnel,
-    "decontaminate": q_decontaminate,
-    "factor_weights": q_factor_weights,
-    "backshift_returns": q_backshift_returns,
-    "ewma_factor": q_ewma_factor,
-    "quantile_returns_one_period": q_quantile_returns_one_period,
-    "mean_ic_by_group_monthly": q_mean_ic_by_group_monthly,
-    "time_varying_groups": q_time_varying_groups,
-    "common_start_returns_raw": q_common_start_returns_raw,
-    "dedup_clusters": q_dedup_clusters,
-    "pyfolio_positions": q_pyfolio_positions,
-    "pyfolio_returns": q_pyfolio_returns,
-    "pyfolio_daily_returns": q_pyfolio_daily_returns,
-    "groupby_labels_remap": q_groupby_labels_remap,
-    "factor_returns_equal_weight": q_factor_returns_equal_weight,
-    "intraday_ingestion": q_intraday_ingestion,
-    "stream_sessionize": q_stream_sessionize,
-    "stream_dedup_minhash": q_stream_dedup_minhash,
-    # round 3: corpus-curation operators (Gopher/C4/SemDeDup lineage)
-    "gopher_quality": q_gopher_quality,
-    "dedupe_words_within_doc": q_dedupe_words_within_doc,
-    "remove_boilerplate": q_remove_boilerplate,
-    "pack_sequences": q_pack_sequences,
-    "stratified_sample": q_stratified_sample,
-    "per_source_cap": q_per_source_cap,
-    "semantic_dedup": q_semantic_dedup,
-    "dup_span_stats": q_dup_span_stats,
-    "bm25_scores": q_bm25_scores,
-    "mixture_weights": q_mixture_weights,
-    "unigram_cross_entropy": q_unigram_cross_entropy,
-    "quality_classifier": q_quality_classifier,
-    "perplexity_buckets": q_perplexity_buckets,
-    "bigram_cross_entropy": q_bigram_cross_entropy,
-    "zorder_key": q_zorder_key,
-    "top_terms_per_source": q_top_terms_per_source,
-    "multimodal_features": q_multimodal_features,
-    "profile_lineitem": q_profile_lineitem,
-    "split_dataset": q_split_dataset,
-    "chunk_documents": q_chunk_documents,
-    "kmv_distinct": q_kmv_distinct,
-    "hll_distinct": q_hll_distinct,
-    "stream_hll_state": q_stream_hll_state,
-    "random_projection": q_random_projection,
-    "decayed_activity": q_decayed_activity,
-    "histogram_quantiles": q_histogram_quantiles,
-    "cm_frequency": q_cm_frequency,
-    "heavy_hitters_terms": q_heavy_hitters_terms,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "hard_negatives": q_hard_negatives,
-    "robust_zscore": q_robust_zscore,
-    "corpus_report": q_corpus_report,
-    "dsir_weights": q_dsir_weights,
-    "epoch_shuffle": q_epoch_shuffle,
-    "wordpiece_segments": q_wordpiece_segments,
-    "unigram_lm_vocab": q_unigram_lm_vocab,
-    "langid_ngram": q_langid_ngram,
-    "cdc_chunk_dups": q_cdc_chunk_dups,
-    "dedup_keep_list": q_dedup_keep_list,
-    "netpbm_decode_stats": q_netpbm_decode_stats,
-    "png_decode_stats": q_png_decode_stats,
-    "bmp_decode_stats": q_bmp_decode_stats,
-    "jpeg_decode_stats": q_jpeg_decode_stats,
-    "scd2_user_state": q_scd2_user_state,
-    "attribution_last_touch": q_attribution_last_touch,
-    "validate_expectations": q_validate_expectations,
-    "skew_report": q_skew_report,
-    "user_activity_features": q_user_activity_features,
-    "kmv_segment_overlap": q_kmv_segment_overlap,
-    "target_encode": q_target_encode,
-    "common_paths": q_common_paths,
-    "diversity_sample": q_diversity_sample,
-    "normalize_text": q_normalize_text,
-    "knn_label_predict": q_knn_label_predict,
-    "split_leakage_safe": q_split_leakage_safe,
-    "weighted_sample": q_weighted_sample,
-    "ngram_containment": q_ngram_containment,
-    "rolling_anomaly": q_rolling_anomaly,
-    "jsonl_source_agg": q_jsonl_source_agg,
-    "orc_roundtrip_agg": q_orc_roundtrip_agg,
-    "dedupe_units_corpus": q_dedupe_units_corpus,
-    "event_cube": q_event_cube,
-    "curation_report": q_curation_report,
-    "fuzzy_token_pairs": q_fuzzy_token_pairs,
-    "hilbert_key": q_hilbert_key,
-    "event_sessionize_native": q_event_sessionize_native,
-    "interval_join_sessions": q_interval_join_sessions,
-    "concurrent_sessions": q_concurrent_sessions,
-    "winsorize_prices": q_winsorize_prices,
-    "snapshot_diff": q_snapshot_diff,
-    "apply_cdc": q_apply_cdc,
-    "allpairs_jaccard": q_allpairs_jaccard,
-    "transition_pagerank": q_transition_pagerank,
-    "transition_pagerank_dist": q_transition_pagerank_dist,
-    "bpe_merges_dist": q_bpe_merges_dist,
-    "unigram_lm_vocab_dist": q_unigram_lm_vocab_dist,
-    "vocab_encode": q_vocab_encode,
-    "bloom_filtered_orders": q_bloom_filtered_orders,
-    "mmr_rerank": q_mmr_rerank,
-    "purged_time_splits": q_purged_time_splits,
-    "record_linkage": q_record_linkage,
-    "copurchase_triangles": q_copurchase_triangles,
-    "basket_rules": q_basket_rules,
-    "attribution_multitouch": q_attribution_multitouch,
-    "rfm_segments": q_rfm_segments,
-    "copurchase_kcore": q_copurchase_kcore,
-    "copurchase_bfs": q_copurchase_bfs,
-    "copurchase_sssp": q_copurchase_sssp,
-    "copurchase_communities": q_copurchase_communities,
-    "purchase_hits": q_purchase_hits,
-    "copurchase_ppr": q_copurchase_ppr,
-    "survival_km": q_survival_km,
-    "stream_km_state": q_stream_km_state,
-    "search_hybrid_rrf": q_search_hybrid_rrf,
-    "rake_keywords": q_rake_keywords,
-    "readability": q_readability,
-    "k_anonymity_sweep": q_k_anonymity_sweep,
-    "embedding_drift": q_embedding_drift,
-    "reliability_stopword_en": q_reliability_stopword_en,
-    "auc_stopword_en": q_auc_stopword_en,
-    "ap_stopword_en": q_ap_stopword_en,
-    "welch_price_test": q_welch_price_test,
-    "dp_order_counts": q_dp_order_counts,
-    "fd_violations_docs": q_fd_violations_docs,
-    "quantile_drawdown": q_quantile_drawdown,
-    "event_ohlc": q_event_ohlc,
-    "bigram_collocations": q_bigram_collocations,
-    "copurchase_similarity": q_copurchase_similarity,
-    "pricing_summary": q_pricing_summary,
-    "shipping_priority": q_shipping_priority,
-    "local_supplier_volume": q_local_supplier_volume,
-    "large_volume_customers": q_large_volume_customers,
-    "suppliers_kept_waiting": q_suppliers_kept_waiting,
-    "sql_revenue_trend": q_sql_revenue_trend,
-    # round 6: the remaining TPC-H shapes expressible on this corpus
-    # (Q4/Q7/Q10/Q13/Q14/Q15/Q16/Q17/Q19/Q22 — Q2/Q8/Q9/Q11/Q12/Q20 need
-    # partsupp/shipmode/mfgr columns this corpus doesn't carry)
-    "order_priority_check": q_order_priority_check,
-    "volume_shipping_pairs": q_volume_shipping_pairs,
-    "returned_item_report": q_returned_item_report,
-    "customer_order_distribution": q_customer_order_distribution,
-    "promo_revenue": q_promo_revenue,
-    "top_supplier_revenue": q_top_supplier_revenue,
-    "parts_supplier_counts": q_parts_supplier_counts,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "discounted_brand_revenue": q_discounted_brand_revenue,
-    "idle_rich_customers": q_idle_rich_customers,
-    "ann_recall_eval": q_ann_recall_eval,
-    "holt_factor": q_holt_factor,
-    # remaining TPC-H shapes, second batch: Q6 direct; Q2/Q8/Q12 adapted
-    # to this corpus's columns (observed unit price for ps_supplycost,
-    # (returnflag, linestatus) for shipmode). Third batch (round 8):
-    # Q9/Q11 via the same observed-price convention (min unit price per
-    # (part, supplier) for ps_supplycost; ordered-quantity sums for
-    # ps_availqty). Still column-blocked: Q20 (needs true availqty
-    # semantics its observed stand-in would make circular).
-    "forecast_revenue_change": q_forecast_revenue_change,
-    "cheapest_supplier_per_part": q_cheapest_supplier_per_part,
-    "nation_market_share": q_nation_market_share,
-    "shipclass_priority_counts": q_shipclass_priority_counts,
-    "product_type_profit": q_product_type_profit,
-    "important_stock": q_important_stock,
-    # the composed tear-sheet batch (every constituent already
-    # individually certified; this certifies the fan-out as one result)
-    "full_tear_sheet": q_full_tear_sheet,
-    # cross-generation store compaction (merge N store generations → 1)
-    "stream_kmv_compacted": q_stream_kmv_compacted,
-    # streaming store #15: Bloom membership (bit-OR merge algebra)
-    "stream_bloom_state": q_stream_bloom_state,
-    # month-partitioned warehouse sink + partition-pruned read, value-certified
-    "partitioned_factor_store": q_partitioned_factor_store,
-    "seasonal_daily_revenue": q_seasonal_daily_revenue,
-    "gapfill_supplier_revenue": q_gapfill_supplier_revenue,
-    "factor_ic_kendall": q_factor_ic_kendall,
-    "ic_bootstrap": q_ic_bootstrap,
-    "cusum_event_value": q_cusum_event_value,
-    "mann_kendall_trend": q_mann_kendall_trend,
-    "conformal_forecast_eval": q_conformal_forecast_eval,
-    "theil_sen_trend": q_theil_sen_trend,
-    "k_anonymity_customers": q_k_anonymity_customers,
-    "benford_orders": q_benford_orders,
-    "revenue_concentration": q_revenue_concentration,
-    "stream_cusum_state": q_stream_cusum_state,
-    "psi_drift_orders": q_psi_drift_orders,
-    "ks_price_drift": q_ks_price_drift,
-    "stream_scd2_state": q_stream_scd2_state,
-    "stream_holt_state": q_stream_holt_state,
-    "stream_hist_state": q_stream_hist_state,
-    "stream_kmv_state": q_stream_kmv_state,
-    "stream_expectations_state": q_stream_expectations_state,
-    "stream_cooccurrence_state": q_stream_cooccurrence_state,
-    "stream_dsir_state": q_stream_dsir_state,
-    "stream_ab_state": q_stream_ab_state,
-    "stream_ivfpq_state": q_stream_ivfpq_state,
-    "stream_heavy_hitters_state": q_stream_heavy_hitters_state,
-    "stream_cdc_state": q_stream_cdc_state,
-    "stream_reservoir_state": q_stream_reservoir_state,
-    "dedup_recall_eval": q_dedup_recall_eval,
-    "simhash_recall_eval": q_simhash_recall_eval,
-    "cm_error_eval": q_cm_error_eval,
-    "balance_rank_features": q_balance_rank_features,
-    "entity_clusters": q_entity_clusters,
-    "supplier_price_ols": q_supplier_price_ols,
-    "cross_source_dups": q_cross_source_dups,
-    "rolling_mean_ic": q_rolling_mean_ic,
-    "search_bm25_topk": q_search_bm25_topk,
-    "bpe_merges": q_bpe_merges,
-    "bpe_vocab_segments": q_bpe_vocab_segments,
-    "ab_test_ztest": q_ab_test_ztest,
-    "seasonal_naive_eval": q_seasonal_naive_eval,
-    "event_funnel_windowed": q_event_funnel_windowed,
-    "wav_decode_stats": q_wav_decode_stats,
-    "net_factor_returns": q_net_factor_returns,
-    "column_entropy": q_column_entropy,
-    "rank_autocorr_profile": q_rank_autocorr_profile,
-    "stream_ohlc_daily": q_stream_ohlc_daily,
-    "quantile_migration": q_quantile_migration,
+    name[2:]: fn for name, fn in list(globals().items())
+    if name.startswith("q_") and callable(fn)
 }
 
 # ---------------------------------------------------------------------------

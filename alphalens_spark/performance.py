@@ -479,6 +479,28 @@ def ic_summary(ic: DataFrame, period_cols: Sequence[str]) -> DataFrame:
     return ic.agg(*aggs)
 
 
+def quantile_statistics(factor_data: DataFrame) -> DataFrame:
+    """Per-quantile factor statistics (ref plotting.py:182-189): min, max,
+    mean, std, count and count % of all rows.
+
+    Output: (factor_quantile, min_factor, max_factor, mean_factor,
+    std_factor, count_factor, count_pct).
+    """
+    out = factor_data.groupBy("factor_quantile").agg(
+        F.min("factor").alias("min_factor"),
+        F.max("factor").alias("max_factor"),
+        F.avg("factor").alias("mean_factor"),
+        F.stddev_samp("factor").alias("std_factor"),
+        F.count("factor").alias("count_factor"),
+    )
+    # pct-of-total via broadcast 1-row agg join (a global window would
+    # move the Q-row frame to one partition and warn)
+    tot = out.agg(F.sum("count_factor").alias("_tot"))
+    return out.crossJoin(F.broadcast(tot)).withColumn(
+        "count_pct", F.col("count_factor") / F.col("_tot") * 100.0
+    ).drop("_tot")
+
+
 def student_t_sf(t: float, df: float) -> float:
     """Student-t survival function P(T > t), driver-side scalar math.
 
@@ -843,6 +865,17 @@ def quantile_turnover(
             .alias("turnover")
         )
         .select("factor_quantile", "period", "date", "turnover")
+    )
+
+
+def turnover_summary(quantile_turnover: DataFrame) -> DataFrame:
+    """Mean turnover per (factor_quantile, period) over the dates of a
+    :func:`quantile_turnover` frame (ref plotting.py:150-163).
+
+    Output: (factor_quantile, period, mean_turnover).
+    """
+    return quantile_turnover.groupBy("factor_quantile", "period").agg(
+        F.avg("turnover").alias("mean_turnover")
     )
 
 

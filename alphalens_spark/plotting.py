@@ -145,8 +145,7 @@ def plot_turnover_table(
     """Turnover means per (quantile, period) + mean rank autocorr per
     period (ref plotting.py:150-163)."""
     to = (
-        quantile_turnover.groupBy("factor_quantile", "period")
-        .agg(F.avg("turnover").alias("mean_turnover"))
+        perf.turnover_summary(quantile_turnover)
         .toPandas()
         .pivot(index="factor_quantile", columns="period", values="mean_turnover")
     )
@@ -168,19 +167,10 @@ def plot_quantile_statistics_table(
     factor_data: DataFrame, show: bool = False
 ) -> pd.DataFrame:
     """Per-quantile factor stats incl. count %% (ref plotting.py:182-189)."""
-    out = factor_data.groupBy("factor_quantile").agg(
-        F.min("factor").alias("min"),
-        F.max("factor").alias("max"),
-        F.avg("factor").alias("mean"),
-        F.stddev_samp("factor").alias("std"),
-        F.count("factor").alias("count"),
-    )
-    # pct-of-total via broadcast 1-row agg join (a global window would
-    # move the Q-row frame to one partition and warn)
-    tot = out.agg(F.sum("count").alias("_tot"))
-    out = out.crossJoin(F.broadcast(tot)).withColumn(
-        "count %", F.col("count") / F.col("_tot") * 100.0
-    ).drop("_tot")
+    out = perf.quantile_statistics(factor_data).withColumnsRenamed({
+        "min_factor": "min", "max_factor": "max", "mean_factor": "mean",
+        "std_factor": "std", "count_factor": "count", "count_pct": "count %",
+    })
     pdf = out.toPandas().set_index("factor_quantile").sort_index()
     if show:
         from alphalens_spark.utils import print_table

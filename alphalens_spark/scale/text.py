@@ -383,9 +383,10 @@ def unigram_cross_entropy(
     smoothing is the deterministic analogue: gibberish and
     rare-token-soup documents score high, templated text scores low).
 
-    One corpus scan: the (doc, token) tf aggregation is persisted
-    (lazily — the first action on the result fills it, and it is never
-    unpersisted) and everything else derives from it. Corpus counts
+    One corpus scan: the (doc, token) tf aggregation is materialized
+    once (:func:`~alphalens_spark.session.checkpoint`, so calling this
+    runs that job and leaves no cache behind) and everything else
+    derives from it. Corpus counts
     attach via an unordered count window over the token partition
     (c_w = Σ tf over the token's rows — the tfidf_top_terms df lesson:
     the groupBy + join-back form referenced the exploded-token subtree
@@ -398,11 +399,8 @@ def unigram_cross_entropy(
     from pyspark.sql import Window
 
     toks = docs.select(F.col(id_col), F.explode(_tokens(text_col)).alias("t"))
-    tf = (
-        toks.groupBy(id_col, "t")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()  # read by cw window, totals, scoring — one action fills it once
-    )
+    # read by the cw window, totals and scoring
+    tf = checkpoint(toks.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf")))
     totals = tf.agg(
         F.sum("tf").alias("total"), F.count_distinct(F.col("t")).alias("vocab")
     )
@@ -520,9 +518,9 @@ def perplexity_buckets(
     # tercile aggregate and the bucket projection read it — unpinned,
     # the whole CE pipeline + source join re-planned under EACH (the
     # pre-round plan scanned documents 8 times; now 2: tokens + source)
-    scored = ce.join(
-        docs.select(F.col(id_col), F.col(source_col)), id_col
-    ).persist()
+    scored = checkpoint(
+        ce.join(docs.select(F.col(id_col), F.col(source_col)), id_col)
+    )
     thr = scored.groupBy(source_col).agg(
         F.round(
             F.percentile("cross_entropy", F.lit(1.0) / 3), 6
@@ -567,32 +565,26 @@ def bigram_cross_entropy(
     same docs) and add-k smoothed unigrams. Jelinek-Mercer interpolation,
     the standard backoff when the bigram table is sparse.
 
-    Scale shape: one bigram explode feeds the persisted per-doc tf,
+    Scale shape: one bigram explode feeds the checkpointed per-doc tf,
     and the corpus bigram / context-head counts attach to it via
     unordered integer-sum windows over the (prev, cur) and prev
     partitions (no join-back, no re-scan); the unigram table is a
-    persisted vocabulary-sized relation joined on its key; the
-    (total, vocab) scalar row joins broadcast. Both persists are lazy:
-    calling this runs no job, and the first action fills them. They
-    stay cached after the result is collected (nothing unpersists
-    them), so a repeat call on the same docs reads the cache.
+    checkpointed vocabulary-sized relation joined on its key; the
+    (total, vocab) scalar row joins broadcast. Both checkpoints run
+    when this is called and leave no cache behind.
     """
     from pyspark.sql import Window
 
     ts = _tokens(text_col)
     base = docs.select(F.col(id_col), ts.alias("ts"))
 
-    # unigram corpus (token → count) + scalar totals. Persist the
+    # unigram corpus (token → count) + scalar totals. Materialize the
     # vocabulary-sized count table: it feeds THREE consumers
     # (totals, the interpolation join, the first-token join) and each
     # re-planned the full token explode without it (the pre-round plan
     # scanned documents 8 times across this function).
     toks = base.select(id_col, F.explode("ts").alias("t"))
-    uni = (
-        toks.groupBy("t")
-        .agg(F.count(F.lit(1)).alias("cw"))
-        .persist()
-    )
+    uni = checkpoint(toks.groupBy("t").agg(F.count(F.lit(1)).alias("cw")))
     totals = uni.agg(F.sum("cw").alias("total"), F.count(F.lit(1)).alias("vocab"))
     k = F.lit(float(smoothing))
     p_uni = (F.col("cw") + k) / (F.col("total") + k * F.col("vocab"))
@@ -613,15 +605,13 @@ def bigram_cross_entropy(
     bi = base.select(id_col, F.explode(bi_arr).alias("bg")).select(
         id_col, F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur")
     )
-    # persist the (doc, bigram) tf once; the corpus bigram count and
+    # materialize the (doc, bigram) tf once; the corpus bigram count and
     # the context-head count attach via unordered sum windows over the
     # (prev, cur) and prev partitions — sums of exact integers, so cb/ch
     # are bit-identical to the groupBy + join-back form they replace,
     # which referenced the tf_bi subtree three times (tfidf df lesson)
-    tf_bi = (
-        bi.groupBy(id_col, "prev", "cur")
-        .agg(F.count(F.lit(1)).alias("tfb"))
-        .persist()
+    tf_bi = checkpoint(
+        bi.groupBy(id_col, "prev", "cur").agg(F.count(F.lit(1)).alias("tfb"))
     )
     lam_c = F.lit(float(lam))
     p_mix = lam_c * F.col("cb") / F.col("ch") + (F.lit(1.0) - lam_c) * p_uni

@@ -100,9 +100,7 @@ def create_turnover_tear_sheet(
         autocorr = ac if autocorr is None else autocorr.unionByName(ac)
     out = {
         "quantile_turnover": turnover,
-        "turnover_summary": turnover.groupBy("factor_quantile", "period").agg(
-            perf.F.avg("turnover").alias("mean_turnover")
-        ),
+        "turnover_summary": perf.turnover_summary(turnover),
         "rank_autocorrelation": autocorr,
     }
     return {k: v.toPandas() for k, v in out.items()} if collect else out
@@ -127,30 +125,15 @@ def create_full_tear_sheet(
 def create_summary_tear_sheet(factor_data: DataFrame, collect: bool = True) -> dict:
     """Cheaper subset (ref tears.py:61-175): quantile stats, aggregate
     quantile returns, IC summary, turnover summary."""
-    from pyspark.sql import Window
-
     cols = _period_cols(factor_data)
-    qstats = factor_data.groupBy("factor_quantile").agg(
-        perf.F.min("factor").alias("min_factor"),
-        perf.F.max("factor").alias("max_factor"),
-        perf.F.avg("factor").alias("mean_factor"),
-        perf.F.stddev_samp("factor").alias("std_factor"),
-        perf.F.count("factor").alias("count_factor"),
-    )
-    # pct-of-total via broadcast 1-row agg join (a global window would
-    # move the Q-row frame to one partition and warn)
-    qtot = qstats.agg(perf.F.sum("count_factor").alias("_tot"))
-    qstats = qstats.crossJoin(perf.F.broadcast(qtot)).withColumn(
-        "count_pct", perf.F.col("count_factor") / perf.F.col("_tot") * 100.0
-    ).drop("_tot")
     ic = perf.factor_information_coefficient(factor_data, cols)
     out = {
-        "quantile_stats": qstats,
+        "quantile_stats": perf.quantile_statistics(factor_data),
         "mean_return_by_quantile": perf.mean_return_by_quantile(factor_data, cols),
         "ic_summary": perf.ic_summary(ic, cols),
-        "turnover_summary": perf.quantile_turnover(factor_data, periods=(1,))
-        .groupBy("factor_quantile", "period")
-        .agg(perf.F.avg("turnover").alias("mean_turnover")),
+        "turnover_summary": perf.turnover_summary(
+            perf.quantile_turnover(factor_data, periods=(1,))
+        ),
     }
     return {k: v.toPandas() for k, v in out.items()} if collect else out
 

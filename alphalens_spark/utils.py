@@ -18,10 +18,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.calendar_ import DAY_IDX, at_offset, trading_calendar
+from alphalens_spark.session import checkpoint
 
 
 class MaxLossExceededError(Exception):
@@ -578,19 +579,35 @@ def get_clean_factor(
          by default tied cross-sections whose qcut edges collapse are
          silently dropped (counted as binning loss); ``max_loss=0``
          surfaces the suppressed ValueError instead. Same here.
-      5. loss accounting: three counts → the dropped-rows report printed
+      5. loss accounting: the finite factor, the joined frame and the
+         quantized frame are each materialized once through
+         :func:`~alphalens_spark.session.checkpoint`, with their row
+         count observed on that same job (``initial``, ``after_fwd``,
+         ``final``). From those counts the dropped-rows report is printed
          either way (utils.py:651-654), then MaxLossExceededError beyond
-         ``max_loss`` or the "not exceeded: OK" line (utils.py:655-661).
-         Counts are Spark actions; pass max_loss=None to keep the
-         pipeline fully lazy (no job until the caller acts — implies the
-         no_raise drop mode, since the eager tie check is itself a job).
+         ``max_loss`` or the "not exceeded: OK" line (utils.py:655-661);
+         the returned frame is already materialized. Pass max_loss=None
+         to keep the pipeline fully lazy (no job until the caller acts —
+         implies the no_raise drop mode, since the eager tie check is
+         itself a job).
     """
+    account = max_loss is not None
+
+    def observed(df: DataFrame) -> tuple[DataFrame, int]:
+        # the count is observed at the top of the checkpointed frame:
+        # under a join it can be pruned (an empty side) or run twice
+        # (quantize's edge self-join)
+        obs = Observation()
+        df = checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+        return df, obs.get["n"]
+
     fac = factor.where(
         F.col("factor").isNotNull() & ~F.isnan("factor") & ~F.col("factor").isin(
             float("inf"), float("-inf")
         )
     )
-    initial = fac.count() if max_loss is not None else None
+    if account:
+        fac, initial = observed(fac)
 
     merged = forward_returns.join(fac, on=["date", "asset"], how="inner")
 
@@ -620,7 +637,8 @@ def get_clean_factor(
             )
 
     merged = merged.na.drop(subset=list(period_cols))
-    after_fwd = merged.count() if max_loss is not None else None
+    if account:
+        merged, after_fwd = observed(merged)
 
     quantized = quantize_factor(
         merged,
@@ -628,25 +646,26 @@ def get_clean_factor(
         bins=bins,
         by_group=binning_by_group,
         zero_aware=zero_aware,
-        no_raise=not (max_loss is not None and max_loss == 0),
+        no_raise=not (account and max_loss == 0),
         method=quantize_method,
     ).where(F.col("factor_quantile").isNotNull())
-    if max_loss is not None:
-        final = quantized.count()
-        fwd_loss = 1.0 - after_fwd / initial if initial else 0.0
-        bin_loss = (after_fwd - final) / initial if initial else 0.0
-        total = fwd_loss + bin_loss
-        print(
-            "Dropped %.1f%% entries from factor data: %.1f%% in forward "
-            "returns computation and %.1f%% in binning phase "
-            "(set max_loss=0 to see potentially suppressed Exceptions)."
-            % (total * 100, fwd_loss * 100, bin_loss * 100)
+    if not account:
+        return quantized
+    quantized, final = observed(quantized)
+    fwd_loss = 1.0 - after_fwd / initial if initial else 0.0
+    bin_loss = (after_fwd - final) / initial if initial else 0.0
+    total = fwd_loss + bin_loss
+    print(
+        "Dropped %.1f%% entries from factor data: %.1f%% in forward "
+        "returns computation and %.1f%% in binning phase "
+        "(set max_loss=0 to see potentially suppressed Exceptions)."
+        % (total * 100, fwd_loss * 100, bin_loss * 100)
+    )
+    if total > max_loss:
+        raise MaxLossExceededError(
+            f"max_loss ({max_loss:.1%}) exceeded {total:.1%}, consider increasing it."
         )
-        if total > max_loss:
-            raise MaxLossExceededError(
-                f"max_loss ({max_loss:.1%}) exceeded {total:.1%}, consider increasing it."
-            )
-        print("max_loss is %.1f%%, not exceeded: OK!" % (max_loss * 100))
+    print("max_loss is %.1f%%, not exceeded: OK!" % (max_loss * 100))
     return quantized
 
 
@@ -671,7 +690,10 @@ def get_clean_factor_and_forward_returns(
     One lazy logical plan: forward returns (``at_offset`` frames on the
     broadcast calendar's day_idx) → optional z-filter → inner join with
     factor → group attach → quantize. Cache the result — every downstream metric
-    in :mod:`alphalens_spark.performance` consumes it (SURVEY §3.1).
+    in :mod:`alphalens_spark.performance` consumes it (SURVEY §3.1). With
+    ``max_loss`` set, the loss report reads its counts off the checkpoints
+    that build the result, so the frame returned is already materialized;
+    ``max_loss=None`` returns the plan unexecuted.
 
     ``label_freq="infer"`` reproduces the reference's wall-clock column
     labels (utils.py:301-321): '1h'/'3h'/'1D' on intraday calendars, from

@@ -15,6 +15,26 @@ def spark():
     yield s
 
 
+def count_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted under a job
+    group; the caller's job-group properties are put back afterwards."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup("job_ceiling", "job_ceiling")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
+        out = fn()
+        # the tracker is fed by the listener bus: drain it before reading
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return out, len(after - before)
+
+
 def rows_to_dict(rows, key_fields, val_field):
     out = {}
     for r in rows:

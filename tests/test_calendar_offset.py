@@ -10,6 +10,7 @@ builds without a job or a ``day_idx`` join."""
 
 import ast
 import datetime as dt
+import gc
 import pathlib
 import re
 from contextlib import contextmanager
@@ -76,7 +77,11 @@ def test_metric_modules_have_no_second_calendar_lookup():
 @contextmanager
 def _py4j_calls():
     """Count Py4J round trips inside the block (the same
-    ``send_command`` wrapper the benchmark's tracer installs)."""
+    ``send_command`` wrapper the benchmark's tracer installs). Garbage
+    left by earlier code is collected first: a collection that fires
+    inside the block sends one memory-release command per freed Java
+    proxy, which is not plan construction."""
+    gc.collect()
     count = [0]
     original = ClientServerConnection.send_command
 

@@ -9,6 +9,7 @@ import pathlib
 from contextlib import contextmanager
 
 import pytest
+from conftest import count_jobs
 from py4j.protocol import Py4JJavaError
 
 from alphalens_spark import graph, session
@@ -181,21 +182,7 @@ def _graph_op(spark, name):
 
 def _jobs(spark, fn):
     """Rows of ``fn()`` and the number of Spark jobs computing them ran."""
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")
-    prev = {k: sc.getLocalProperty(k) for k in keys}
-    sc.setJobGroup("job_ceiling", "job_ceiling")
-    try:
-        before = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
-        rows = sorted(map(tuple, fn().collect()))
-        # the tracker is fed by the listener bus: drain it before reading
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        after = set(sc.statusTracker().getJobIdsForGroup("job_ceiling"))
-    finally:
-        for k, v in prev.items():
-            sc.setLocalProperty(k, v)
-    return rows, len(after - before)
+    return count_jobs(spark, lambda: sorted(map(tuple, fn().collect())))
 
 
 @pytest.mark.parametrize("name", sorted(JOB_CEILINGS))

@@ -2,6 +2,8 @@
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from alphalens_spark.scale import dedup, similarity, text
@@ -441,6 +443,29 @@ def test_perplexity_buckets_terciles_per_source(spark):
         # exact interpolated terciles → each bucket within one doc of n/3
         for part in (h, m, t):
             assert abs(part - tot / 3) <= 1.5, (s, h, m, t)
+
+
+@pytest.mark.parametrize(
+    "name", ["unigram_cross_entropy", "bigram_cross_entropy", "perplexity_buckets"]
+)
+def test_cross_entropy_leaves_no_cache_entry(spark, name):
+    """The language-model scorers materialize their shared counts through
+    the library's checkpoint, not a persist that nothing unpersists: a
+    leaked CacheManager entry lives as long as the session, and a repeat
+    call on the same docs would read it instead of computing."""
+    from alphalens_spark.entry_queries import clear_session_caches
+
+    docs = spark.createDataFrame(
+        [(i, f"s{i % 2}", " ".join(f"w{(i * j) % 7}" for j in range(1, 6 + i % 4)))
+         for i in range(20)],
+        "doc_id long, source string, text string",
+    )
+    clear_session_caches()
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    assert len(getattr(text, name)(docs).collect()) == 20
+    assert cm.isEmpty()
 
 
 def test_np_assignment_bit_identical_to_expression_form(spark):

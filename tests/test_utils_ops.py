@@ -11,6 +11,7 @@ import datetime as dt
 import math
 
 import pytest
+from conftest import count_jobs
 
 from pyspark.sql import functions as F
 
@@ -207,10 +208,12 @@ def test_get_clean_factor_tie_loss_accounting_and_report(spark, capsys):
     fwd = fac.select("date", "asset", (F.col("factor") * 0.01).alias("1D"))
     out = get_clean_factor(fac, fwd, ["1D"], quantiles=4, max_loss=0.6)
     assert out.count() == 5  # only the clean date survives
-    captured = capsys.readouterr().out
-    assert "Dropped 50.0% entries" in captured
-    assert "50.0% in binning phase" in captured
-    assert "not exceeded: OK!" in captured
+    assert capsys.readouterr().out.splitlines() == [
+        "Dropped 50.0% entries from factor data: 0.0% in forward returns "
+        "computation and 50.0% in binning phase (set max_loss=0 to see "
+        "potentially suppressed Exceptions).",
+        "max_loss is 60.0%, not exceeded: OK!",
+    ]
     with pytest.raises(ValueError, match="Bin edges must be unique"):
         get_clean_factor(fac, fwd, ["1D"], quantiles=4, max_loss=0.0)
 
@@ -475,6 +478,65 @@ def test_max_loss_exceeded(spark):
             filter_zscore=None,
             max_loss=0.1,
         )
+
+
+def _panel(spark, n_days=20, n_assets=8):
+    """Prices, an untied factor and static groups over one small panel."""
+    prices = _prices_df(
+        spark, n_days, {f"A{j}": 1.0 + 0.05 * (j + 1) for j in range(n_assets)}
+    )
+    factor = prices.select(
+        "date", "asset",
+        ((F.dayofyear("date") * 7 + F.substring("asset", 2, 1).cast("int") * 3)
+         % 11 + F.substring("asset", 2, 1).cast("int") / 10.0).alias("factor"),
+    )
+    groups = spark.createDataFrame(
+        [(f"A{j}", f"g{j % 2}") for j in range(n_assets)], "asset string, group string"
+    )
+    return prices, factor, groups
+
+
+def test_clean_factor_materializes_once(spark, capsys):
+    """With max_loss set, the loss report reads its three counts off the
+    checkpoints that build factor_data instead of running count jobs of
+    its own, so one clean + persist + count runs at most 15 jobs."""
+    prices, factor, groups = _panel(spark)
+
+    def clean():
+        fd = get_clean_factor_and_forward_returns(
+            factor, prices, groupby=groups, quantiles=2, periods=(1, 5)
+        ).persist()
+        n = fd.count()
+        fd.unpersist()
+        return n
+
+    want = clean()
+    n, jobs = count_jobs(spark, clean)
+    assert n == want == 15 * 8
+    assert jobs <= 15, jobs
+    assert capsys.readouterr().out.splitlines()[-2:] == [
+        "Dropped 25.0% entries from factor data: 25.0% in forward returns "
+        "computation and 0.0% in binning phase (set max_loss=0 to see "
+        "potentially suppressed Exceptions).",
+        "max_loss is 35.0%, not exceeded: OK!",
+    ]
+
+
+def test_clean_factor_empty_factor_reports_no_loss(spark, capsys):
+    """An empty factor prunes to an empty relation under the join; the
+    counts are observed at the top of each checkpointed frame, so they
+    still arrive (0 rows), the report reads 0.0% and nothing raises."""
+    prices, factor, groups = _panel(spark)
+    fd = get_clean_factor_and_forward_returns(
+        factor.limit(0), prices, groupby=groups, quantiles=2, periods=(1, 5)
+    )
+    assert fd.count() == 0
+    assert capsys.readouterr().out.splitlines() == [
+        "Dropped 0.0% entries from factor data: 0.0% in forward returns "
+        "computation and 0.0% in binning phase (set max_loss=0 to see "
+        "potentially suppressed Exceptions).",
+        "max_loss is 35.0%, not exceeded: OK!",
+    ]
 
 
 def test_groupby_labels_remap(spark):
