@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 DAY_IDX = "day_idx"
 
 
@@ -115,11 +117,9 @@ def infer_holidays(cal_dates: DataFrame, date_col: str = "date") -> DataFrame:
     between min and max observed date, keep weekdays whose day-of-week is
     ever observed, anti-join the observed dates. Returns (holiday date).
     """
-    # persist: the date-dimension frame feeds the observed day-of-weeks,
-    # the min/max bounds AND the final anti-join — unpersisted, each
-    # consumer re-planned the full fact scan + distinct (three fact
-    # scans for a |dates|-row frame; guide §5)
-    days = cal_dates.select(F.to_date(date_col).alias("d")).distinct().persist()
+    # checkpoint: the day-of-weeks, the min/max bounds and the anti-join
+    # each re-planned the fact scan + distinct uncut (guide §5)
+    days = checkpoint(cal_dates.select(F.to_date(date_col).alias("d")).distinct())
     observed_dows = days.select(F.dayofweek("d").alias("dow")).distinct()
     bounds = days.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
     full = bounds.select(

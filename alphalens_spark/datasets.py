@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import cache
+
 
 def normalize_ts(df: DataFrame) -> DataFrame:
     """Normalize a nano-precision ``ts`` column read as long (see
@@ -217,26 +219,24 @@ def _factor_data_from_panel(
     )
 
 
-def ingest(spark: SparkSession, sf_dir: str, persist: bool = True):
+def ingest(spark: SparkSession, sf_dir: str):
     """One-scan ingestion of BOTH canonical inputs.
 
     ``factor_data(...)`` and ``prices(...)`` each plan their own lineitem
     scan + (week × supplier) aggregation; a tear sheet needs both, so the
     natural usage re-read and re-aggregated the fact table twice. Here the
-    aggregated panel is built ONCE, persisted (it is the post-aggregation
+    aggregated panel is built ONCE, cached (it is the post-aggregation
     frame — dates × assets rows, orders of magnitude smaller than the
     fact table, the thing you'd cache on a real cluster), and both frames
     derive from it: prices is a narrow projection of the cached panel,
     factor_data is one window shuffle on top.
 
-    Returns ``(factor_data, prices, panel)`` — the panel handle so the
-    caller can ``unpersist()`` the shared cache when done; the caller
-    also owns persisting factor_data for metric-fanout reuse (bench
-    does).
+    Returns ``(factor_data, prices, panel)``. The caller owns the panel's
+    cache (policy (c) of :mod:`alphalens_spark.session`) and frees it
+    with ``panel.unpersist()`` when done; the caller also owns caching
+    factor_data for metric-fanout reuse (bench does).
     """
-    panel = price_factor_panel(spark, sf_dir)
-    if persist:
-        panel = panel.persist()
+    panel = cache(price_factor_panel(spark, sf_dir))
     return (
         _factor_data_from_panel(panel),
         panel.select("date", "asset", "price"),

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from alphalens_spark import datasets, performance as perf
 from alphalens_spark.datasets import ORACLE_PANEL_SQL
-from alphalens_spark.session import checkpoint
+from alphalens_spark.session import cache, checkpoint, persisted
 
 PERIOD_COLS = ["1D", "5D"]
 ALIAS = {"1D": "1p", "5D": "5p"}
@@ -78,15 +78,14 @@ _SESSION_FRAMES: dict[tuple[str, int, str], DataFrame] = {}
 def _session_frame(
     name: str, spark: SparkSession, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """``build()`` persisted on first use, then reused for this session and
-    SF. persist, NOT checkpoint: a checkpoint would plan derived
-    queries faster (flat LogicalRDD), but it would collapse every
-    shared-frame-derived row in the PLANS.md audit to a bare checkpoint
-    scan; the driver-contract queries keep the full lineage visible for
-    plan gates and the plan-audit artifact."""
+    """``build()`` cached on first use, then reused for this session and
+    SF; the registry owns the cache until :func:`clear_session_caches`.
+    A cache, NOT a checkpoint: a checkpoint would plan derived queries
+    faster (flat LogicalRDD), but would collapse every shared-frame row
+    of the PLANS.md audit to a bare checkpoint scan."""
     key = (name, id(spark), sf_dir)
     if key not in _SESSION_FRAMES:
-        _SESSION_FRAMES[key] = build().persist()
+        _SESSION_FRAMES[key] = cache(build())
     return _SESSION_FRAMES[key]
 
 
@@ -1251,12 +1250,9 @@ def q_backshift_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alphalens_spark.calendar_ import trading_calendar
     from alphalens_spark.utils import backshift_returns_series, compute_forward_returns
 
-    # persist the aggregated panel: the calendar distinct, the
-    # forward-return grid and the backshift re-key each re-planned the
-    # lineitem scan + (week x supplier) aggregation without it (four
-    # fact scans; guide §5 — the panel is the post-aggregation frame,
-    # the thing a real cluster would cache)
-    pr = datasets.prices(spark, sf_dir).persist()
+    # checkpoint: the calendar distinct, the forward-return grid and the
+    # backshift re-key each re-planned the lineitem aggregation uncut
+    pr = checkpoint(datasets.prices(spark, sf_dir))
     cal = trading_calendar(pr)
     fwd = compute_forward_returns(pr, datasets.PERIODS, calendar=cal)
     out = backshift_returns_series(fwd, 2, cal, PERIOD_COLS)
@@ -1521,18 +1517,17 @@ def q_intraday_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = datasets.load_table(spark, sf_dir, "events")
-    # persist: the hourly panel feeds BOTH the factor and the prices
-    # inputs (and the date-axis intersection inside the ingestion) —
-    # unpersisted, each consumer re-planned the events scan + groupBy
-    # (three fact scans; guide §5 — the same "ingest once, derive twice"
-    # treatment the core daily ingestion got in round 4)
-    panel = ev.groupBy(
-        F.date_trunc("hour", "ts").alias("date"),
-        (F.col("user_id") % 50).alias("asset"),
-    ).agg(
-        (F.lit(100.0) + F.avg("value")).alias("price"),
-        F.count(F.lit(1)).cast("double").alias("factor"),
-    ).persist()
+    # checkpoint: the hourly panel feeds the factor, the prices and the
+    # date-axis intersection; uncut, each re-planned the events groupBy
+    panel = checkpoint(
+        ev.groupBy(
+            F.date_trunc("hour", "ts").alias("date"),
+            (F.col("user_id") % 50).alias("asset"),
+        ).agg(
+            (F.lit(100.0) + F.avg("value")).alias("price"),
+            F.count(F.lit(1)).cast("double").alias("factor"),
+        )
+    )
     fd = get_clean_factor_and_forward_returns(
         panel.select("date", "asset", "factor"),
         panel.select("date", "asset", "price"),
@@ -6856,11 +6851,10 @@ def q_stream_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.col("user_id"), F.date_trunc("day", "ts").alias("day"))
         .agg(F.max(F.struct(F.col("ts"), F.col("event_type"))).alias("_last"))
         .select("user_id", "day", F.col("_last.event_type").alias("state"))
-        # one computation feeds the midpoint collect AND both split
-        # writes (round-8 review: the groupBy otherwise ran 3×)
-        .persist()
     )
-    try:
+    # one computation feeds the midpoint collect AND both split writes
+    # (round-8 review: the groupBy otherwise ran 3×)
+    with persisted(snap):
         lo, hi = snap.agg(F.min("day"), F.max("day")).first()
         mid = lo + (hi - lo) / 2
         store = _stream_roundtrip(
@@ -6871,8 +6865,6 @@ def q_stream_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 snap.where(F.col("day") > F.lit(mid)),
             ],
         )
-    finally:
-        snap.unpersist()
     return spark.read.parquet(store).select(
         "user_id", "state", "valid_from", "valid_to"
     )
@@ -6936,8 +6928,7 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("seq"),
     )
     # one computation feeds the median collect AND both split writes
-    changes = changes.persist()
-    try:
+    with persisted(changes):
         mid_seq = changes.agg(
             F.percentile_approx("seq", 0.5, 2147483647)
         ).first()[0]
@@ -6950,8 +6941,6 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 changes.where(F.col("seq") > F.lit(int(mid_seq))),
             ],
         )
-    finally:
-        changes.unpersist()
     return _finalize(
         spark.read.parquet(store).select(
             "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -10359,17 +10348,15 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie returns every tied supplier on both engines."""
     li = datasets.load_table(spark, sf_dir, "lineitem")
     su = datasets.load_table(spark, sf_dir, "supplier")
-    # persist: the |suppliers|-row rollup feeds BOTH the 1-row max and
-    # the equality filter — unpersisted, each consumer re-planned the
-    # full fact scan + groupBy (two lineitem scans; guide §5)
-    rev = (
+    # checkpoint: the rollup feeds the 1-row max and the equality
+    # filter; uncut, each re-planned the lineitem scan + groupBy
+    rev = checkpoint(
         li.where(
             (F.col("l_shipdate") >= F.lit("1997-07-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
         .agg(F.sum(_rev_e4()).alias("total_revenue_e4"))
-        .persist()
     )
     mx = rev.agg(F.max("total_revenue_e4").alias("_mx"))
     return (

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from alphalens_spark.performance import _explode_series, _ordered_series
+from alphalens_spark.session import checkpoint
 
 
 def sessionize(
@@ -121,15 +122,14 @@ def cohort_retention(
     active-period set in the same user-keyed exchange, so the former
     second scan + distinct shuffle + cohort join disappear (guide §2.4;
     the per-user set is bounded by the number of periods, the same bound
-    the distinct shuffled). The user-dimension frame is persisted — it
-    feeds both the cohort sizes and the exploded actives (guide §5).
+    the distinct shuffled). The user-dimension frame is checkpointed:
+    the cohort sizes and the exploded actives both read it (guide §5).
     Output: (cohort_week, weeks_since, n_active, n_cohort, retention)."""
     per = F.date_trunc(grain, ts_col).cast("date")
     days = {"week": 7, "day": 1}[grain]
-    peru = (
+    peru = checkpoint(
         events.groupBy(user_col)
         .agg(F.min(per).alias("cohort_week"), F.collect_set(per).alias("_weeks"))
-        .persist()
     )
     sizes = peru.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("n_cohort"))
     ret = (

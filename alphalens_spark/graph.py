@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from alphalens_spark.session import checkpoint
+from alphalens_spark.session import checkpoint, persisted
 
 # Distributed PageRank cuts the rank lineage every third iteration, not
 # every one: each eager checkpoint is a scheduled job (fixed latency
@@ -658,7 +658,8 @@ def label_propagation(
     parity).
 
     Scale shape (the HITS broadcast discipline, round-8): the static
-    2|E| neighbor list is hash-partitioned ONCE and persisted; when
+    2|E| neighbor list is hash-partitioned ONCE and cached for the
+    call (:func:`~alphalens_spark.session.persisted`); when
     the estimated (node, label) frame fits ``broadcast_max_bytes`` (see
     :func:`_fits_broadcast`) it is partitioned by the
     GROUPING key ``node`` and each round is one ZERO-shuffle stage —
@@ -670,7 +671,8 @@ def label_propagation(
     each round shuffle-joins only the |V|-sized label frame plus two
     linear groupBys — never the edge list. Labels are cut with
     :func:`~alphalens_spark.session.checkpoint` every second round so
-    lineage stays flat — the pagerank/k_core iteration pattern.
+    lineage stays flat, and the result is checkpointed before the
+    caches are freed.
     """
     canon = edges.select(
         F.least(F.col(src_col), F.col(dst_col)).alias("u"),
@@ -687,36 +689,15 @@ def label_propagation(
         # summation orders, and an ulp here flips the adopted LABEL —
         # the rank_normalize / _avg_rank tie-grid rule applied to masses
         e = canon.groupBy("u", "v").agg(F.round(F.sum("w"), 6).alias("w"))
+    # both edge directions, read by the node set and the neighbor list:
+    # one job fills both caches, so the edge canonicalization runs once
+    # (round-9 A/B: q_copurchase_communities 1.42 -> 1.17 s at sf0.1)
     both = e.select(
         F.col("u").alias("node"), F.col("v").alias("nbr"), "w"
     ).unionByName(
         e.select(F.col("v").alias("node"), F.col("u").alias("nbr"), "w")
-    ).persist()  # transient: freed right after nbrs materializes below
-    nodes = both.select("node").distinct().persist()
-    # bounded-scalar count off the materialized node set (the
-    # hits/pagerank n_nodes contract) — also eagerly materializes it,
-    # and fills the transient `both` cache so the nbrs repartition
-    # below reads it instead of re-running the edge canonicalization
-    # (dedup shuffle included) a second time (round-9 paired A/B:
-    # q_copurchase_communities 1.42 -> 1.17 s at sf0.1)
-    n_nodes = nodes.count()
-    lab = nodes.select("node", F.col("node").alias("label"))
-    broadcast_labels = _fits_broadcast(n_nodes, lab, broadcast_max_bytes)
-    # hash-partition the (big, static) neighbor list ONCE and persist:
-    # an InMemoryRelation PRESERVES outputPartitioning into every
-    # consumer plan, which a checkpoint's LogicalRDD does not (verified
-    # on this Spark: repartition(k), checkpointed, then groupBy(k) still
-    # exchanges; the cached form does not). Broadcast mode
-    # partitions by the GROUPING key so both per-round aggregations run
-    # exchange-free on top of the broadcast-hash label join; shuffle
-    # mode partitions by the JOIN key so only the |V|-sized label frame
-    # moves per round, never the 2|E| neighbor rows.
-    nbrs = both.repartition(
-        F.col("node") if broadcast_labels else F.col("nbr")
-    ).persist()
-    nbrs.count()
-    both.unpersist()
-    bc = F.broadcast if broadcast_labels else (lambda df: df)
+    )
+    nodes = both.select("node").distinct()
     # self-loop-only vertices: present in the input edge list but absent
     # from nbrs (self-loops are dropped before propagation); they keep
     # their own id as label, matching GraphFrames LPA's every-vertex
@@ -730,37 +711,49 @@ def label_propagation(
         .distinct()
         .join(nodes, "node", "left_anti")
     )
-    for it in range(n_iter):
-        mass = (
-            nbrs.join(
-                bc(lab.select(F.col("node").alias("nbr"), "label")), "nbr"
-            )
-            .groupBy("node", "label")
-            # 6-dp mass snap (no-op long for the unweighted path): ties
-            # must break on the label, never on summation-order ulps
-            .agg(F.round(F.sum("w"), 6).alias("m"))
+    # the node count is the bounded scalar the broadcast choice needs
+    # (the hits/pagerank n_nodes contract), observed on the fill job
+    with persisted(both, nodes) as (_, n_nodes):
+        lab = nodes.select("node", F.col("node").alias("label"))
+        broadcast_labels = _fits_broadcast(n_nodes, lab, broadcast_max_bytes)
+        # hash-partition the (big, static) neighbor list ONCE and cache
+        # it. Broadcast mode partitions by the GROUPING key so both
+        # per-round aggregations run exchange-free on top of the
+        # broadcast-hash label join; shuffle mode partitions by the JOIN
+        # key so only the |V|-sized label frame moves per round.
+        nbrs = both.repartition(
+            F.col("node") if broadcast_labels else F.col("nbr")
         )
-        # argmax by (mass desc, label asc) as ONE min-struct aggregate:
-        # min((-m, label)).label — deterministic tiebreak, no window
-        lab = (
-            mass.groupBy("node")
-            .agg(
-                F.min(F.struct((-F.col("m")).alias("nm"), F.col("label")))
-                .alias("s")
+        bc = F.broadcast if broadcast_labels else (lambda df: df)
+        with persisted(nbrs):
+            for it in range(n_iter):
+                mass = (
+                    nbrs.join(
+                        bc(lab.select(F.col("node").alias("nbr"), "label")),
+                        "nbr",
+                    )
+                    .groupBy("node", "label")
+                    # 6-dp mass snap (no-op long when unweighted): ties
+                    # break on the label, never on summation-order ulps
+                    .agg(F.round(F.sum("w"), 6).alias("m"))
+                )
+                # argmax by (mass desc, label asc) as ONE min-struct
+                # aggregate — deterministic tiebreak, no window
+                best = F.min(F.struct((-F.col("m")).alias("nm"), F.col("label")))
+                lab = mass.groupBy("node").agg(best.alias("s")).select(
+                    "node", F.col("s.label").alias("label")
+                )
+                # checkpoint every SECOND round (eager per-round cuts
+                # cost ~0.35 s of the 4-round sf0.1 bench entry in job
+                # barriers). The final round is cut with the isolated
+                # vertices: the result must not read the freed caches
+                if it != n_iter - 1 and it % 2 == 1:
+                    lab = checkpoint(lab)
+            return checkpoint(
+                lab.unionByName(
+                    isolated.select("node", F.col("node").alias("label"))
+                )
             )
-            .select("node", F.col("s.label").alias("label"))
-        )
-        # checkpoint every SECOND round (measured: eager per-round
-        # checkpoints cost ~0.35 s of the 4-round sf0.1 bench entry in
-        # pure job-barrier latency; two un-checkpointed rounds are only
-        # 2 joins + 4 aggs of lineage, well inside planner comfort).
-        # The final round stays un-checkpointed (pagerank rule): same
-        # total work, and the returned frame keeps a real join/agg plan
-        if it != n_iter - 1 and it % 2 == 1:
-            lab = checkpoint(lab)
-    return lab.unionByName(
-        isolated.select("node", F.col("node").alias("label"))
-    )
 
 
 def label_propagation_sql(
@@ -846,11 +839,9 @@ def bfs_distances(
     nodes.
     """
     # ONE build exchange (the repartition; hash(v) ⊆ (u, v) satisfies the
-    # distinct's clustering), then persist: the InMemoryRelation keeps
-    # the v-partitioning visible to every round (a checkpoint loses
-    # it), so when AQE broadcasts the small frontier the expand join
-    # preserves hash(v) and the layer distinct below runs exchange-free
-    # — a zero-shuffle expansion round.
+    # distinct's clustering), cached for the call so every round sees
+    # hash(v): with the small frontier broadcast, the layer distinct runs
+    # exchange-free. The result (checkpointed blocks) reads no cache.
     e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -861,59 +852,60 @@ def bfs_distances(
         )
         .repartition(F.col("v"))
         .distinct()
-        .persist()
     )
-    e.count()
-    visited = (
-        # non-null node contract, mirrored in bfs_sql's v0: NULL seeds
-        # are unreachable by definition (edge endpoints are non-null —
-        # the u != v filter drops NULL-endpoint rows) and would poison
-        # the SQL twin's visited-set subquery (round-8 ADVICE finding)
-        sources.select(F.col("node"), F.lit(0).cast("int").alias("dist"))
-        .where(F.col("node").isNotNull())
-        .distinct()
-        .transform(checkpoint)
-    )
-    frontier = visited.select("node")
-    d = 0
-    while d < max_depth:
-        step = min(2, max_depth - d)
-        fr, vis, layers = frontier, visited, []
-        for i in range(1, step + 1):
-            nbrs = (
-                fr.join(e, fr["node"] == e["u"])
-                .select(F.col("v").alias("node"))
-                .distinct()
-            )
-            layer = nbrs.join(vis, "node", "left_anti").withColumn(
-                "dist", F.lit(d + i).cast("int")
-            )
-            layers.append(layer)
-            # lineage-only union: the second expansion must exclude the
-            # first's nodes too; materialization happens once per block
-            vis = vis.unionByName(layer)
-            fr = layer.select("node")
-        new = layers[0]
-        for extra in layers[1:]:
-            new = new.unionByName(extra)
-        obs = Observation()
-        new = checkpoint(
-            new.observe(
-                obs, F.count(F.lit(1)).alias("n"), F.max("dist").alias("md")
-            )
+    with persisted(e):
+        visited = (
+            # non-null node contract, mirrored in bfs_sql's v0: NULL seeds
+            # are unreachable by definition (edge endpoints are non-null —
+            # the u != v filter drops NULL-endpoint rows) and would poison
+            # the SQL twin's visited-set subquery (round-8 ADVICE finding)
+            sources.select(F.col("node"), F.lit(0).cast("int").alias("dist"))
+            .where(F.col("node").isNotNull())
+            .distinct()
+            .transform(checkpoint)
         )
-        stats = obs.get
-        if stats["n"] == 0:
-            break
-        # visited is a flat union of already-checkpointed blocks, so
-        # its lineage never deepens past one union per block — a second
-        # checkpoint here is a pure job barrier
-        visited = visited.unionByName(new)
-        if stats["md"] < d + step:
-            break  # the deepest layer is empty — no frontier remains
-        frontier = new.where(F.col("dist") == d + step).select("node")
-        d += step
-    return visited
+        frontier = visited.select("node")
+        d = 0
+        while d < max_depth:
+            step = min(2, max_depth - d)
+            fr, vis, layers = frontier, visited, []
+            for i in range(1, step + 1):
+                nbrs = (
+                    fr.join(e, fr["node"] == e["u"])
+                    .select(F.col("v").alias("node"))
+                    .distinct()
+                )
+                layer = nbrs.join(vis, "node", "left_anti").withColumn(
+                    "dist", F.lit(d + i).cast("int")
+                )
+                layers.append(layer)
+                # lineage-only union: the second expansion must exclude the
+                # first's nodes too; materialization happens once per block
+                vis = vis.unionByName(layer)
+                fr = layer.select("node")
+            new = layers[0]
+            for extra in layers[1:]:
+                new = new.unionByName(extra)
+            obs = Observation()
+            new = checkpoint(
+                new.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.max("dist").alias("md"),
+                )
+            )
+            stats = obs.get
+            if stats["n"] == 0:
+                break
+            # visited is a flat union of already-checkpointed blocks, so
+            # its lineage never deepens past one union per block — a second
+            # checkpoint here is a pure job barrier
+            visited = visited.unionByName(new)
+            if stats["md"] < d + step:
+                break  # the deepest layer is empty — no frontier remains
+            frontier = new.where(F.col("dist") == d + step).select("node")
+            d += step
+        return visited
 
 
 def bfs_sql(edges_cte: str, sources_cte: str, n_rounds: int = 8) -> str:
@@ -1104,9 +1096,10 @@ def hits(
     hub 0, no in-edges authority 0.
 
     Scale shape (the pagerank discipline, round-8 hardened): the edge
-    list is persisted TWICE, hash-partitioned by src and by dst (a
-    persisted frame keeps its outputPartitioning, a checkpointed one
-    does not — the LPA lesson), so the static 2|E| rows are shuffled
+    list is cached TWICE for the call, hash-partitioned by src and by
+    dst (:func:`~alphalens_spark.session.persisted`: a cached frame
+    keeps its outputPartitioning, a checkpointed one does not under
+    AQE — the LPA lesson), so the static 2|E| rows are shuffled
     exactly twice up front and never again; every half-step then joins
     the |V|-sized score frame and aggregates on the endpoint its edge
     copy is already partitioned by. When the estimated (node, score)
@@ -1118,92 +1111,79 @@ def hits(
     instead (still no edge shuffle). Lineage is cut with
     :func:`~alphalens_spark.session.checkpoint` after every iteration
     (h only — the iteration's a is re-derived lazily from the
-    checkpointed h where needed), and the
-    final iteration stays un-checkpointed so the returned frame keeps
-    a real plan. Output: (node, hub, authority), one row per distinct
-    endpoint.
+    checkpointed h where needed); the result is checkpointed before the
+    caches are freed. Output: (node, hub, authority), one row per
+    distinct endpoint.
     """
     if n_iter < 1:
         raise ValueError("hits requires n_iter >= 1")
     # one exchange for distinct+src-partitioning (HashPartitioning(src)
     # satisfies the (src, dst) clustering dropDuplicates needs), one
     # more for the dst-partitioned copy of the in-memory rows
-    # persist (NOT checkpoint) the two static edge copies: an
-    # InMemoryRelation preserves outputPartitioning into every consumer
-    # plan, which a checkpoint's LogicalRDD does not (verified on this
-    # Spark) — the zero-shuffle half-steps below depend on it
     e_src = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .repartition(F.col("src"))
         .dropDuplicates(["src", "dst"])
-        .persist()
     )
-    e_dst = e_src.repartition(F.col("dst")).persist()
-    # ONE eager action fills BOTH edge caches: e_dst's plan reads e_src,
-    # and within a single job a shared cached RDD is computed exactly
-    # once — a separate e_src.count() was a redundant job barrier
-    # (round-9 paired A/B: q_purchase_hits 2.25 -> 2.05 s at sf0.1)
-    e_dst.count()
+    e_dst = e_src.repartition(F.col("dst"))
     nodes = (
         e_src.select(F.col("src").alias("node"))
         .union(e_src.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    h = nodes.select("node", F.lit(1.0).alias("h"))
-    broadcast_scores = _fits_broadcast(nodes.count(), h, broadcast_max_bytes)
-    bc = F.broadcast if broadcast_scores else (lambda df: df)
-    # a-step joins scores on src and groups by dst; h-step the reverse.
-    # Broadcast mode uses the copy partitioned by the GROUPING key so
-    # the aggregation needs no exchange; shuffle mode uses the copy
-    # partitioned by the JOIN key so only the score frame moves.
-    e_for_a = e_dst if broadcast_scores else e_src
-    e_for_h = e_src if broadcast_scores else e_dst
-    a = None
-    for it in range(n_iter):
-        a = (
-            e_for_a.join(bc(h.withColumnRenamed("node", "src")), "src")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
-            .withColumnRenamed("dst", "node")
-        )
-        h = (
-            e_for_h.join(bc(a.withColumnRenamed("node", "dst")), "dst")
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
-            .withColumnRenamed("src", "node")
-        )
-        if (it + 1) % renorm_every == 0 and it != n_iter - 1:
-            sh = h.agg(F.sum("h").alias("_s"))  # 1 row, overflow guard
-            h = h.crossJoin(F.broadcast(sh)).select(
-                "node", (F.col("h") / F.col("_s")).alias("h")
+    # ONE fill job for all three caches (e_dst and nodes read e_src's;
+    # round-9 A/B of one fill for both edge copies: q_purchase_hits
+    # 2.25 -> 2.05 s at sf0.1), which also observes the node count
+    with persisted(e_src, e_dst, nodes) as (_, _, n_nodes):
+        h = nodes.select("node", F.lit(1.0).alias("h"))
+        broadcast_scores = _fits_broadcast(n_nodes, h, broadcast_max_bytes)
+        bc = F.broadcast if broadcast_scores else (lambda df: df)
+        # a-step joins scores on src and groups by dst; h-step the
+        # reverse. Broadcast mode uses the copy partitioned by the
+        # GROUPING key so the aggregation needs no exchange; shuffle mode
+        # uses the copy partitioned by the JOIN key so only the score
+        # frame moves.
+        e_for_a = e_dst if broadcast_scores else e_src
+        e_for_h = e_src if broadcast_scores else e_dst
+        a = None
+        for it in range(n_iter):
+            a = (
+                e_for_a.join(bc(h.withColumnRenamed("node", "src")), "src")
+                .groupBy("dst")
+                .agg(F.sum("h").alias("a"))
+                .withColumnRenamed("dst", "node")
             )
-        if (it + 1) % _HITS_CHECKPOINT_EVERY == 0 and it != n_iter - 1:
-            h = checkpoint(h)
-    sh = h.agg(F.sum("h").alias("_sh"))  # 1 row
-    sa = a.agg(F.sum("a").alias("_sa"))  # 1 row
-    return (
-        nodes.join(bc(h), "node", "left")
-        .join(bc(a), "node", "left")
-        .crossJoin(F.broadcast(sh))
-        .crossJoin(F.broadcast(sa))
-        .select(
-            "node",
-            (
-                F.round(
-                    F.coalesce(F.col("h") / F.col("_sh"), F.lit(0.0)), 6
+            h = (
+                e_for_h.join(bc(a.withColumnRenamed("node", "dst")), "dst")
+                .groupBy("src")
+                .agg(F.sum("a").alias("h"))
+                .withColumnRenamed("src", "node")
+            )
+            if (it + 1) % renorm_every == 0 and it != n_iter - 1:
+                sh = h.agg(F.sum("h").alias("_s"))  # 1 row, overflow guard
+                h = h.crossJoin(F.broadcast(sh)).select(
+                    "node", (F.col("h") / F.col("_s")).alias("h")
                 )
-                + F.lit(0.0)
-            ).alias("hub"),
-            (
-                F.round(
-                    F.coalesce(F.col("a") / F.col("_sa"), F.lit(0.0)), 6
-                )
-                + F.lit(0.0)
-            ).alias("authority"),
+            if (it + 1) % _HITS_CHECKPOINT_EVERY == 0 and it != n_iter - 1:
+                h = checkpoint(h)
+        sh = h.agg(F.sum("h").alias("_sh"))  # 1 row
+        sa = a.agg(F.sum("a").alias("_sa"))  # 1 row
+
+        def l1(c: str, total: str):
+            s = F.round(F.coalesce(F.col(c) / F.col(total), F.lit(0.0)), 6)
+            return s + F.lit(0.0)
+
+        # cut before the caches are freed: the result reads them
+        return checkpoint(
+            nodes.join(bc(h), "node", "left")
+            .join(bc(a), "node", "left")
+            .crossJoin(F.broadcast(sh))
+            .crossJoin(F.broadcast(sa))
+            .select(
+                "node", l1("h", "_sh").alias("hub"), l1("a", "_sa").alias("authority")
+            )
         )
-    )
 
 
 def hits_sql(

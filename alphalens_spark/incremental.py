@@ -43,6 +43,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import persisted
 from alphalens_spark.storage import read_parquet_if_exists
 
 DATE_KEY = "date_key"
@@ -89,18 +90,17 @@ def incremental_update(
         src = panel.where(F.date_format("date", "yyyy-MM-dd") > F.lit(last))
 
     fd = _factor_data_from_panel(src, periods, quantiles)
-    out = fd.withColumn(DATE_KEY, F.date_format("date", "yyyy-MM-dd")).persist()
-    rows = out.count()
-    dates = out.select(DATE_KEY).distinct().count()
-    if rows > 0:
-        (
-            out.repartition(DATE_KEY)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(DATE_KEY)
-            .parquet(store_path)
-        )
-    out.unpersist()
+    out = fd.withColumn(DATE_KEY, F.date_format("date", "yyyy-MM-dd"))
+    with persisted(out) as (rows,):
+        dates = out.select(DATE_KEY).distinct().count()
+        if rows > 0:
+            (
+                out.repartition(DATE_KEY)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(DATE_KEY)
+                .parquet(store_path)
+            )
     return {"since": last, "rows_written": rows, "dates_written": dates}
 
 
@@ -184,16 +184,15 @@ def incremental_event_rollup(
         .withColumn(
             "bucket_key", F.date_format("bucket_start", "yyyy-MM-dd HH:mm:ss")
         )
-        .persist()
     )
-    buckets = agg.select("bucket_key").distinct().count()
-    if buckets > 0:
-        (
-            agg.repartition("bucket_key")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_key")
-            .parquet(store_path)
-        )
-    agg.unpersist()
+    with persisted(agg):
+        buckets = agg.select("bucket_key").distinct().count()
+        if buckets > 0:
+            (
+                agg.repartition("bucket_key")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket_key")
+                .parquet(store_path)
+            )
     return {"since": last, "buckets_written": buckets}

@@ -303,14 +303,10 @@ def remove_boilerplate(
     Output: (id, clean_text, n_units, n_kept).
     """
     units, sep = _unitize(text_col, unit)
-    # persist the unitized frame: the exploded view feeds the docfreq
-    # count AND the anti-filter, and the final join needs every doc id
-    # with its unit count — unpersisted, each consumer re-planned the
-    # unitize over the raw corpus (four fact scans; guide §5). n_units
-    # is just size(_units) on the cached row — the separate
-    # explode+groupBy it replaces recomputed the corpus for a number
-    # the array already knows (guide §2.4).
-    base = docs.select(F.col(id_col), units.alias("_units")).persist()
+    # checkpoint the unitized frame: the docfreq count, the anti-filter
+    # and the final join each re-planned the unitize uncut (guide §5).
+    # n_units is size(_units) on the row, not another explode+groupBy.
+    base = checkpoint(docs.select(F.col(id_col), units.alias("_units")))
     ex = base.select(id_col, F.posexplode("_units").alias("pos", "u"))
     per_unit = (
         ex.select("u", id_col)
@@ -444,14 +440,14 @@ def mixture_weights(
     loader applies per group).
     """
     toks = F.size(_tokens(text_col))
-    # persist: the group-dimension totals feed BOTH the 1-row normalizer
-    # aggregate and the output projection — unpersisted, each consumer
-    # re-planned the full corpus scan + groupBy (two fact scans for a
-    # |groups|-row frame; guide §5)
-    g = docs.groupBy(by).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(toks).alias("n_tokens"),
-    ).persist()
+    # checkpoint: the normalizer and the output projection each
+    # re-planned the corpus scan + groupBy uncut (guide §5)
+    g = checkpoint(
+        docs.groupBy(by).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(toks).alias("n_tokens"),
+        )
+    )
     tot = g.agg(
         F.sum("n_tokens").alias("_tot"),
         F.sum(F.pow(F.col("n_tokens").cast("double"), F.lit(alpha))).alias("_tot_a"),
@@ -780,11 +776,8 @@ def dedupe_units_across_corpus(
     copy. Output: (id, clean_text, n_units, n_kept).
     """
     units, sep = _unitize(text_col, unit)
-    # persisted unitized frame + size(_units) for n_units — the same
-    # one-scan restructure as remove_boilerplate (the exploded view
-    # feeds the winner aggregation and the semi-join probe; the final
-    # spine and unit counts read the cached array row)
-    base = docs.select(F.col(id_col), units.alias("_units")).persist()
+    # the same checkpointed unitized frame as remove_boilerplate
+    base = checkpoint(docs.select(F.col(id_col), units.alias("_units")))
     ex = base.select(id_col, F.posexplode("_units").alias("pos", "u"))
     # lexicographic (doc, pos) min in one agg: min over a struct
     win = ex.groupBy("u").agg(F.min(F.struct(id_col, "pos")).alias("_w"))

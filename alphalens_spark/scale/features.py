@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 
 def target_encode(
     df: DataFrame,
@@ -36,14 +38,11 @@ def target_encode(
     """
     keys = list(key_cols)
     lab = F.col(label_col).cast("double")
-    # persist: the |keys|-row stats frame feeds BOTH the global prior
-    # and the encode join — unpersisted, each consumer re-planned the
-    # full fact scan + groupBy; and the prior itself is a sum over the
-    # per-key partials, not a third scan of the fact table (guide §5,
-    # §2.4 "aggregate before you shuffle")
-    stats = df.groupBy(*keys).agg(
-        F.sum(lab).alias("_ksum"), F.count(lab).alias("_kn")
-    ).persist()
+    # checkpoint: the |keys|-row stats feed the global prior (a sum over
+    # the per-key partials, not another fact scan) and the encode join
+    stats = checkpoint(
+        df.groupBy(*keys).agg(F.sum(lab).alias("_ksum"), F.count(lab).alias("_kn"))
+    )
     prior = stats.agg(
         (F.sum("_ksum") / F.sum("_kn")).alias("_prior")
     )
@@ -91,10 +90,8 @@ def rfm_scores(
         F.round(F.sum(F.col(amount_col)), 6).alias("monetary"),
     )
     anchor = orders.agg(F.max(F.col(date_col)).alias("_anchor"))
-    # persist: the customer-dimension metric frame feeds both the
-    # threshold aggregate and the scoring projection — unpersisted, each
-    # consumer re-planned the customer groupBy + anchor scan (four fact
-    # scans for one segmentation; guide §5)
+    # base feeds the thresholds and the scoring; the plan reuses the
+    # groupBy's and the anchor's exchanges, so nothing is materialized
     base = (
         agg.crossJoin(F.broadcast(anchor))
         .select(
@@ -103,7 +100,6 @@ def rfm_scores(
             "frequency",
             "monetary",
         )
-        .persist()
     )
     qs = [k / n_bins for k in range(1, n_bins)]
     qarr = "array(" + ", ".join(f"{q}D" for q in qs) + ")"
@@ -178,15 +174,11 @@ def purged_time_splits(
     """
     if n_folds < 2:
         raise ValueError("n_folds must be >= 2")
-    # persist the date axis and the fold map: dd feeds its own count and
-    # the fold projection, folded feeds the bounds aggregate and the
-    # K-way explode — unpersisted, every reference re-planned the
-    # collect_set over the fact table (four scans for a date-dimension
-    # result; guide §5). Both frames are date-dimension sized.
+    # dd and folded are each read twice; the plan reuses the
+    # collect_set's exchange, so the fact table is scanned once
     dd = (
         df.agg(F.array_sort(F.collect_set(date_col)).alias("_ds"))
         .select(F.posexplode("_ds").alias("idx", "date"))
-        .persist()
     )
     n = dd.agg(F.count(F.lit(1)).alias("_n"))
     folded = dd.crossJoin(F.broadcast(n)).select(
@@ -195,7 +187,7 @@ def purged_time_splits(
         F.least(
             F.floor(F.col("idx") * n_folds / F.col("_n")), F.lit(n_folds - 1)
         ).cast("int").alias("_fold_of"),
-    ).persist()
+    )
     bounds = folded.groupBy("_fold_of").agg(
         F.min("idx").alias("_lo"), F.max("idx").alias("_hi")
     ).withColumnRenamed("_fold_of", "fold")

@@ -371,13 +371,10 @@ def robust_zscore(
     (robust_z, is_outlier).
     """
     v = F.col(value_col).cast("double")
-    # persist the group-dimension median: it feeds the MAD pass and the
-    # combined stats relation, and unpersisted each reference re-planned
-    # the grouped percentile over the fact table
+    # the MAD pass and the stats relation share the median's exchange
     med = (
         df.groupBy(*group_cols)
         .agg(F.percentile(v, F.lit(0.5)).alias("_med"))
-        .persist()
     )
     mad = df.join(F.broadcast(med), group_cols).groupBy(*group_cols).agg(
         F.percentile(F.abs(v - F.col("_med")), F.lit(0.5)).alias("_mad")
@@ -459,13 +456,10 @@ def kmv_set_estimates(
         h = md5_long(F.col(value_col).cast("string"), 15)
         return df.select(h.alias("_h")).distinct().orderBy("_h").limit(k)
 
-    # each ≤k-row sketch feeds THREE consumers (the union sketch, the
-    # membership tags, its own stats row); unpersisted, every reference
-    # re-planned the full scan + distinct + bottom-k over the raw
-    # population — six fact scans for one 1-row answer (guide §5:
-    # persist when reused and recomputation is the expensive part)
-    ka = mins(df_a).withColumn("_in_a", F.lit(1)).persist()
-    kb = mins(df_b).withColumn("_in_b", F.lit(1)).persist()
+    # each sketch feeds the union, the tags and its stats row; the plan
+    # reuses each side's distinct exchange, so each side is scanned once
+    ka = mins(df_a).withColumn("_in_a", F.lit(1))
+    kb = mins(df_b).withColumn("_in_b", F.lit(1))
     u = (
         ka.select("_h")
         .unionByName(kb.select("_h"))

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from alphalens_spark.session import checkpoint
+
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
     return F.aggregate(
@@ -1308,10 +1310,9 @@ def embedding_drift(
         # for empty/NULL vectors, so the per-label row count rides the
         # same (label, pos) aggregation as the centroid — every input
         # row lands in exactly one of pos == 0 / pos IS NULL — instead
-        # of a second scan per side (guide §2.4). The |labels|·(dim+1)
-        # group frame is persisted: it feeds both the centroid join and
-        # the count rollup (guide §5).
-        g = (
+        # of a second scan per side (guide §2.4); checkpointed, as the
+        # centroid join and the count rollup both read it (guide §5).
+        g = checkpoint(
             df.select(
                 F.col(label_col).alias("label"),
                 F.posexplode_outer(F.col(vec_col)).alias("pos", "_v"),
@@ -1321,7 +1322,6 @@ def embedding_drift(
                 F.avg(F.col("_v").cast("double")).alias(tag),
                 F.count(F.lit(1)).alias("_c"),
             )
-            .persist()
         )
         n = g.groupBy("label").agg(
             F.sum(

@@ -730,15 +730,11 @@ def build_vocab(
     if min_df > 1:
         counts = counts.where(F.col("df") >= min_df)
 
-    # persist: the keyed frame feeds both the offsets aggregate and the
-    # in-partition ranking — unpersisted, each consumer re-planned the
-    # whole explode + count pipeline (two corpus scans), and a
-    # re-executed range shuffle would re-evaluate spark_partition_id()
-    # (the ks_from_counts / epoch_shuffle pin rule)
-    ranked = (
+    # checkpoint: the offsets and the ranking must see the same
+    # spark_partition_id(), which a re-run range shuffle could change
+    ranked = checkpoint(
         counts.repartitionByRange(F.col("count").desc(), F.col("term").asc())
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
     # per-partition sizes -> cumulative offsets: bounded by the partition
     # count (the one legal unpartitioned window here)
@@ -845,10 +841,9 @@ def bigram_pmi(
     cross of the vocabulary.
     """
     ts = _tokens(text_col)
-    # persist: the tokenized corpus feeds the bigram explode, the
-    # unigram explode AND the bigram-total aggregate — unpersisted, each
-    # consumer re-planned the full corpus scan + tokenize (guide §5)
-    base = docs.select(ts.alias("_ts")).persist()
+    # checkpoint: the bigram, unigram and total passes each re-planned
+    # the corpus scan + tokenize uncut (guide §5)
+    base = checkpoint(docs.select(ts.alias("_ts")))
     grams = F.when(
         F.size("_ts") >= 2,
         F.transform(
@@ -866,13 +861,11 @@ def bigram_pmi(
         .agg(F.count(F.lit(1)).alias("n_pair"))
         .where(F.col("n_pair") >= min_count)
     )
-    # persist: the vocabulary-sized marginals feed the w1 join, the w2
-    # join and the unigram total — three consumers, one tiny frame
+    # the w1 join, w2 join and total share the marginals' exchange
     uni = (
         base.select(F.explode("_ts").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cw"))
-        .persist()
     )
     totals = uni.agg(F.sum("cw").alias("_nu"))
     # bigram total = Σ per-doc (len−1); count it exactly from the pair

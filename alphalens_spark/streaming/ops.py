@@ -35,7 +35,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alphalens_spark.session import checkpoint
+from alphalens_spark.session import checkpoint, persisted
 from alphalens_spark.storage import read_parquet_if_exists
 
 
@@ -494,79 +494,79 @@ def minhash_store_update(
         minhash_signatures,
     )
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
-    docs = batch_df.persist()
-
-    # 1. within-batch keep-first (min id per near-dup cluster)
-    pairs = minhash_lsh_duplicates(
-        docs, text_col, id_col, num_hashes, bands, shingle_k, threshold,
-        shingle_hash=shingle_hash,
-    )
-    comps = connected_components(pairs)  # (node, comp=min reachable id)
-    losers = comps.where(F.col("node") != F.col("comp")).select(
-        F.col("node").alias(id_col)
-    )
-    survivors = docs.join(F.broadcast(losers), id_col, "left_anti")
-
-    sigs = minhash_signatures(
-        survivors, text_col, id_col, num_hashes, shingle_k,
-        shingle_hash=shingle_hash,
-    ).persist()
-    sigs.count()
-    new_bands = _band_rows(sigs, bands, num_hashes, id_col)
-
-    # 2. probe accepted history
-    store_bands = read_parquet_if_exists(spark, f"{store_path}/bands")
-    store_sigs = read_parquet_if_exists(spark, f"{store_path}/sigs")
-    sigs_out = sigs
-    if store_bands is not None and store_sigs is not None:
-        cand = (
-            new_bands.join(
-                store_bands.select(
-                    F.col("id").alias("_old"), "band_id", "band_hash"
-                ),
-                ["band_id", "band_hash"],
-            )
-            .select("id", "_old")
-            .dropDuplicates(["id", "_old"])
+    # the batch feeds the LSH pass and the survivor projection; the row
+    # count observed on its fill job is the empty-batch check
+    with persisted(batch_df) as (n_docs,):
+        if not n_docs:
+            return
+        # 1. within-batch keep-first (min id per near-dup cluster)
+        pairs = minhash_lsh_duplicates(
+            batch_df, text_col, id_col, num_hashes, bands, shingle_k, threshold,
+            shingle_hash=shingle_hash,
         )
-        agree = F.size(
-            F.filter(
-                F.zip_with("minhash", "_old_sig", lambda x, y: x == y),
-                lambda m: m,
-            )
+        comps = connected_components(pairs)  # (node, comp=min reachable id)
+        losers = comps.where(F.col("node") != F.col("comp")).select(
+            F.col("node").alias(id_col)
         )
-        dup_vs_store = (
-            sigs.join(F.broadcast(cand), sigs[id_col] == cand["id"])
-            .join(
-                store_sigs.select(
-                    F.col(id_col).alias("_old"),
-                    F.col("minhash").alias("_old_sig"),
-                ),
-                "_old",
-            )
-            .where(agree.cast("double") / num_hashes >= threshold)
-            .select(F.col("id").alias(id_col))
-            .distinct()
+        survivors = batch_df.join(F.broadcast(losers), id_col, "left_anti")
+        sigs = minhash_signatures(
+            survivors, text_col, id_col, num_hashes, shingle_k,
+            shingle_hash=shingle_hash,
         )
-        survivors = survivors.join(F.broadcast(dup_vs_store), id_col, "left_anti")
-        sigs_out = sigs.join(F.broadcast(dup_vs_store), id_col, "left_anti")
+        with persisted(sigs):
+            new_bands = _band_rows(sigs, bands, num_hashes, id_col)
 
-    # 3. admit survivors (persist sigs_out's plan result once: it feeds
-    # three writes)
-    sigs_out = sigs_out.persist()
-    survivors.join(sigs_out.select(id_col), id_col, "left_semi").write.mode(
-        "append"
-    ).parquet(out_path)
-    sigs_out.write.mode("append").parquet(f"{store_path}/sigs")
-    _band_rows(sigs_out, bands, num_hashes, id_col).write.mode("append").parquet(
-        f"{store_path}/bands"
-    )
-    sigs_out.unpersist()
-    sigs.unpersist()
-    docs.unpersist()
+            # 2. probe accepted history
+            store_bands = read_parquet_if_exists(spark, f"{store_path}/bands")
+            store_sigs = read_parquet_if_exists(spark, f"{store_path}/sigs")
+            sigs_out = sigs
+            if store_bands is not None and store_sigs is not None:
+                cand = (
+                    new_bands.join(
+                        store_bands.select(
+                            F.col("id").alias("_old"), "band_id", "band_hash"
+                        ),
+                        ["band_id", "band_hash"],
+                    )
+                    .select("id", "_old")
+                    .dropDuplicates(["id", "_old"])
+                )
+                agree = F.size(
+                    F.filter(
+                        F.zip_with("minhash", "_old_sig", lambda x, y: x == y),
+                        lambda m: m,
+                    )
+                )
+                dup_vs_store = (
+                    sigs.join(F.broadcast(cand), sigs[id_col] == cand["id"])
+                    .join(
+                        store_sigs.select(
+                            F.col(id_col).alias("_old"),
+                            F.col("minhash").alias("_old_sig"),
+                        ),
+                        "_old",
+                    )
+                    .where(agree.cast("double") / num_hashes >= threshold)
+                    .select(F.col("id").alias(id_col))
+                    .distinct()
+                )
+                survivors = survivors.join(
+                    F.broadcast(dup_vs_store), id_col, "left_anti"
+                )
+                # cut once: the store probe feeds the three writes below
+                sigs_out = checkpoint(
+                    sigs.join(F.broadcast(dup_vs_store), id_col, "left_anti")
+                )
+
+            # 3. admit survivors
+            survivors.join(sigs_out.select(id_col), id_col, "left_semi").write.mode(
+                "append"
+            ).parquet(out_path)
+            sigs_out.write.mode("append").parquet(f"{store_path}/sigs")
+            _band_rows(sigs_out, bands, num_hashes, id_col).write.mode(
+                "append"
+            ).parquet(f"{store_path}/bands")
 
 
 def cm_store_update(
@@ -1071,10 +1071,9 @@ def sketch_store_update(
     micro-batch, read once — the streaming analytics sidecar: bounded
     state, exact equality with the batch sketch of everything ever seen,
     queryable at any time without stopping the stream."""
-    batch_df = batch_df.persist()
-    cm_store_update(batch_df, cm_path, item_col, depth, width)
-    kmv_store_update(batch_df, kmv_path, [group_col], item_col, k)
-    batch_df.unpersist()
+    with persisted(batch_df):
+        cm_store_update(batch_df, cm_path, item_col, depth, width)
+        kmv_store_update(batch_df, kmv_path, [group_col], item_col, k)
 
 
 def stream_decayed_activity(

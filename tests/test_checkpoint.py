@@ -11,6 +11,7 @@ from contextlib import contextmanager
 import pytest
 from conftest import count_jobs
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 from alphalens_spark import graph, session
 from alphalens_spark.scale import dedup
@@ -49,6 +50,72 @@ def test_checkpoint_helper_is_the_only_lineage_cut():
     ]
     assert [s for s in sites if s not in in_helper] == []
     assert len(sites) == 2  # the helper's reliable and local branches
+
+
+def test_session_is_the_only_cache():
+    """No module calls ``.persist(`` or ``.cache(`` itself: session.py
+    holds the library's one materialization policy, and its ``cache``
+    helper is the one persist behind both the caller-owned caches and
+    the cached-for-a-block frames of ``persisted``."""
+    tree = ast.parse((PKG / "session.py").read_text())
+    helper = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "cache"
+    )
+    sites = [
+        f"{path.relative_to(PKG.parent)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache")
+    ]
+    assert len(sites) == 1, sites
+    assert sites[0] in [
+        f"alphalens_spark/session.py:{line}"
+        for line in range(helper.lineno, helper.end_lineno + 1)
+    ]
+
+
+def _exchanges(df):
+    """Shuffles the final plan of ``df.groupBy("k").count()`` runs; the
+    plan a cached frame was built with prints under its InMemoryRelation
+    and is skipped."""
+    out = df.groupBy("k").count()
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    n, cached = 0, None
+    for line in plan.split("== Initial Plan ==")[0].splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if "InMemoryRelation" in line else None
+        n += "Exchange hashpartitioning" in line and "Reused" not in line
+    return n
+
+
+def test_checkpoint_drops_hash_partitioning_a_cache_keeps(spark):
+    """The fact policy (b) rests on: under AQE (the session default) a
+    checkpointed frame reports UnknownPartitioning, so grouping it again
+    by its own key shuffles; a cached, filled frame keeps its hash
+    partitioning and does not. Run at 8 shuffle partitions, the setting
+    of the probe that found it."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        g = (
+            spark.range(1000)
+            .select((F.col("id") % 37).alias("k"))
+            .groupBy("k")
+            .count()
+        )
+        assert _exchanges(session.checkpoint(g)) == 1
+        with session.persisted(g) as (n,):
+            assert n == 37  # observed on the one fill job
+            assert _exchanges(g) == 0
+        assert not g.storageLevel.useMemory  # freed on exit
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_stream_store_is_the_only_foreach_batch():

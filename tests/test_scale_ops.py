@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from alphalens_spark import graph
 from alphalens_spark.scale import dedup, similarity, text
 
 
@@ -445,26 +446,89 @@ def test_perplexity_buckets_terciles_per_source(spark):
             assert abs(part - tot / 3) <= 1.5, (s, h, m, t)
 
 
-@pytest.mark.parametrize(
-    "name", ["unigram_cross_entropy", "bigram_cross_entropy", "perplexity_buckets"]
-)
-def test_cross_entropy_leaves_no_cache_entry(spark, name):
-    """The language-model scorers materialize their shared counts through
-    the library's checkpoint, not a persist that nothing unpersists: a
-    leaked CacheManager entry lives as long as the session, and a repeat
-    call on the same docs would read it instead of computing."""
-    from alphalens_spark.entry_queries import clear_session_caches
+LM_SCORERS = ("unigram_cross_entropy", "bigram_cross_entropy", "perplexity_buckets")
+SF = "/root/testdata/sf0.001"
+EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (7, 7)]
 
-    docs = spark.createDataFrame(
+
+def _lm_docs(spark):
+    return spark.createDataFrame(
         [(i, f"s{i % 2}", " ".join(f"w{(i * j) % 7}" for j in range(1, 6 + i % 4)))
          for i in range(20)],
         "doc_id long, source string, text string",
     )
+
+
+def _edges(spark):
+    return spark.createDataFrame(EDGES, "src long, dst long")
+
+
+def _registry(name):
+    from alphalens_spark.entry_queries import QUERIES
+
+    return lambda spark: QUERIES[name](spark, SF)
+
+
+# one call per operator that materializes a frame it reads more than
+# once; the registry entries read their tables straight from the SF dir
+# (no shared session frame), so any cache entry left is the operator's
+CACHE_FREE_CALLS = {
+    **{name: (lambda n: lambda spark: getattr(text, n)(_lm_docs(spark)))(name)
+       for name in LM_SCORERS},
+    "label_propagation": lambda spark: graph.label_propagation(_edges(spark)),
+    "bfs_distances": lambda spark: graph.bfs_distances(
+        _edges(spark), spark.createDataFrame([(1,)], "node long")
+    ),
+    "hits": lambda spark: graph.hits(_edges(spark), n_iter=3),
+    **{name: _registry(name) for name in (
+        "infer_holidays", "cohort_retention", "semantic_dedup",
+        "allpairs_jaccard", "target_encode", "rfm_segments",
+        "purged_time_splits", "robust_zscore", "kmv_segment_overlap",
+        "remove_boilerplate", "mixture_weights", "dedupe_units_corpus",
+        "embedding_drift", "vocab_encode", "bigram_collocations",
+        "backshift_returns", "intraday_ingestion", "top_supplier_revenue",
+    )},
+}
+
+
+def _empty_cache(spark):
+    from alphalens_spark.entry_queries import clear_session_caches
+
     clear_session_caches()
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty()
-    assert len(getattr(text, name)(docs).collect()) == 20
+    return cm
+
+
+@pytest.mark.parametrize("name", list(CACHE_FREE_CALLS))
+def test_cross_entropy_leaves_no_cache_entry(spark, name):
+    """An operator materializes what it reads more than once through the
+    library's checkpoint, or caches it only for the call: a persist that
+    nothing unpersists is a CacheManager entry that lives as long as the
+    session, and a repeat call on the same input would read it instead
+    of computing."""
+    cm = _empty_cache(spark)
+    rows = CACHE_FREE_CALLS[name](spark).collect()
+    assert len(rows) == 20 if name in LM_SCORERS else rows
+    assert cm.isEmpty()
+
+
+def test_ingest_returns_the_one_cache_it_makes(spark):
+    """``datasets.ingest`` caches its panel for the caller and returns
+    the handle; it takes no option to skip the cache, and freeing the
+    handle leaves nothing cached."""
+    import inspect
+
+    from alphalens_spark import datasets
+
+    assert list(inspect.signature(datasets.ingest).parameters) == ["spark", "sf_dir"]
+    cm = _empty_cache(spark)
+    fd, px, panel = datasets.ingest(spark, SF)
+    assert fd.collect() and px.collect()
+    assert cm.numCachedEntries() == 1
+    assert panel.storageLevel.useMemory
+    panel.unpersist()
     assert cm.isEmpty()
 
 
